@@ -49,8 +49,9 @@ def test_oracle_type_parity_canon():
     can match (the class that kept two gate rows red for three
     rounds), and DECIMAL never silently equals a float/int column."""
     import sys
+    from pathlib import Path
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     from tools.check_oracle import _canon_duck_type, _canon_spark_type
 
     pairs_equal = [

@@ -85,26 +85,72 @@ def test_circulant_mean_cov(spark):
 
 
 def test_simulation_determinism(spark):
-    # tests_spark.py:133-162 — same trial_id ⇒ identical draw across rows
+    # tests_spark.py:133-162 — same trial_id ⇒ identical draw across rows.
+    # Every draw is also bit-equal to numpy's multivariate_normal recipe
+    # for its seed, whatever the Arrow batch boundaries: two covariances
+    # with interleaved trial ids, plus a singular (all-zero) one whose
+    # draws must be the mean exactly.
+    from pyspark.errors import PythonException
+
     from value_at_risk_spark.montecarlo import simulate_market
 
-    avg = [0.0] * 3
-    cov = [[1.0, 0.1, 0.0], [0.1, 1.0, 0.1], [0.0, 0.1, 1.0]]
-    df = spark.createDataFrame(
-        [(avg, cov, 7), (avg, cov, 7), (avg, cov, 8)],
-        "vol_avg array<double>, vol_cov array<array<double>>, trial_id long",
-    ).repartition(3)
-    rows = df.select(
-        "trial_id", simulate_market("vol_avg", "vol_cov", "trial_id").alias("f")
-    ).collect()
-    by_id = {}
-    for r in rows:
-        by_id.setdefault(r.trial_id, []).append(tuple(r.f))
-    assert by_id[7][0] == by_id[7][1]
-    assert by_id[7][0] != by_id[8][0]
-    rng = np.random.default_rng(7)
-    expected = rng.multivariate_normal(np.array(avg), np.array(cov))
-    assert by_id[7][0] == pytest.approx(tuple(expected))
+    # d=5 as in the pipeline: a 2-D gemm's last-bit drift from the
+    # per-row matvec showed at d=5, never at d=3
+    x = np.random.default_rng(0).standard_normal((90, 5)) * 0.01
+    stats = {
+        "a": ([0.0] * 5, (np.eye(5) + 0.1 * np.eye(5, k=1)
+                          + 0.1 * np.eye(5, k=-1)).tolist()),
+        "b": (x.mean(axis=0).tolist(), np.cov(x, rowvar=False).tolist()),
+        "zero": ([0.5, -1.0, 2.0, 0.0, -0.25], [[0.0] * 5] * 5),
+    }
+    rows = [
+        (k, *stats[k], t) for t in range(12) for k in ("a", "b", "zero")
+    ] + [("a", *stats["a"], 7)]
+    schema = (
+        "k string, vol_avg array<double>, vol_cov array<array<double>>, "
+        "trial_id long"
+    )
+    df = spark.createDataFrame(rows, schema).repartition(3)
+
+    def draws():
+        out = df.select(
+            "k", "trial_id",
+            simulate_market("vol_avg", "vol_cov", "trial_id").alias("f"),
+        ).collect()
+        return sorted((r.k, r.trial_id, tuple(r.f)) for r in out)
+
+    default = draws()
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    spark.conf.set(key, "2")
+    try:
+        assert draws() == default
+    finally:
+        spark.conf.unset(key)
+
+    for k, t, f in default:
+        avg, cov = stats[k]
+        _, sv, vh = np.linalg.svd(np.array(cov))
+        z = np.random.default_rng(t).standard_normal(5)
+        assert f == tuple(z @ (np.sqrt(sv)[:, None] * vh) + np.array(avg))
+        if k == "zero":
+            assert f == tuple(avg)
+    by_id = {(k, t): f for k, t, f in default}
+    sevens = [f for k, t, f in default if (k, t) == ("a", 7)]
+    assert sevens == [by_id["a", 7]] * 2
+    assert by_id["a", 7] != by_id["a", 8]
+    expected = np.random.default_rng(7).multivariate_normal(
+        np.array(stats["a"][0]), np.array(stats["a"][1])
+    )
+    assert by_id["a", 7] == pytest.approx(tuple(expected))
+
+    ragged = spark.createDataFrame(
+        [("a", *stats["a"], 1), ("a", stats["a"][0], [[1.0] * 4] * 5, 2)],
+        schema,
+    )
+    with pytest.raises(PythonException, match="ValueError: simulate_market"):
+        ragged.select(
+            simulate_market("vol_avg", "vol_cov", "trial_id")
+        ).collect()
 
 
 def test_seed_frame(spark):

@@ -115,6 +115,16 @@ def test_pipeline_end_to_end(spark, fixtures):
     assert len(var) > 30  # weekly spine over a year
     assert all(r.var_99 < 0 for r in var)
     assert all(abs(r.var_99) < 0.5 for r in var)  # sane magnitude
+    # var comes from the fused plan; the staged reference path over the
+    # returned per-ticker scores must agree
+    staged = {
+        r.date: (r.var_99, r.mean_return)
+        for r in aggregate_var(out["scored"], portfolio).collect()
+    }
+    assert set(staged) == {r.date for r in var}
+    for r in var:
+        assert r.var_99 == pytest.approx(staged[r.date][0], abs=1e-12)
+        assert r.mean_return == pytest.approx(staged[r.date][1], abs=1e-12)
     bt = out["backtest"].collect()
     assert len(bt) > 0
     assert all(r.basel_zone in (0, 1, 2) for r in bt)

@@ -828,8 +828,9 @@ def test_plan_lint_ratchet_subset(spark, sf_dir):
     closure sweep; this pytest keeps the ratchet mechanism itself from
     rotting."""
     import sys
+    from pathlib import Path
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
     import plan_lint
 
     subset = {
@@ -868,8 +869,9 @@ def test_plan_lint_global_window_classifier(spark):
     partitionBy(lit) (flagged — Catalyst folds the constant away and
     the plan runs as ONE task)."""
     import sys
+    from pathlib import Path
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
     import plan_lint
 
     df = spark.range(10).withColumn("g", F.col("id") % 3)

@@ -19,10 +19,11 @@ from __future__ import annotations
 import math
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from value_at_risk_spark.queries import ORACLES, QUERIES  # noqa: E402
 from value_at_risk_spark.session import get_spark  # noqa: E402

@@ -55,6 +55,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+from pathlib import Path
 
 BASELINE_PATH = os.path.join(os.path.dirname(__file__), "plan_baseline.json")
 FORBIDDEN = ("BatchEvalPython", "CartesianProduct")
@@ -235,7 +236,7 @@ def update_baseline(spark, sf_dir: str) -> dict:
 
 
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     from value_at_risk_spark.session import get_spark
 
     argv = sys.argv[1:]

@@ -90,6 +90,15 @@ def vector_mean_cov(
     ran a second ``groupBy().count()`` over the same (often expensive)
     input and joined it back (trailing_volatility's bucketized range
     join executed TWICE for exactly this) fold it into one pass.
+
+    Precondition for ``count_col``: ``vec_col`` is non-null and of one
+    fixed width in every row. The count is taken over the exploded
+    (i, j) cells, so a row whose vector is NULL or empty adds no cell
+    and is not counted, and ragged rows yield the minimum over cells;
+    either way it is not the ``groupBy().count()`` it replaces.
+    trailing_volatility meets the precondition: its features are an
+    ``F.array`` of the factor columns, never null and always the same
+    width (a null element still makes its cells, so it is counted).
     """
     pairs = df.select(
         *group_cols,

@@ -15,6 +15,9 @@ Key deviations (all scale-motivated, semantics preserved):
   (01_var_market_etl.py:167-184; SURVEY §4 single-partition hazard);
 - model scoring is a broadcast weights join + native expression, not an
   MLflow pyfunc UDF (02_var_model.py:219-220);
+- ``run_pipeline`` folds the portfolio weights into the model weights
+  (``aggregate_var_fused``) and scores each simulated state once,
+  instead of once per ticker (04_var_aggregation.py);
 - trial vectors stay (date, trial_id) rows until the final percentile;
   no VectorUDT packing (04_var_aggregation.py:35-41). `pack_trials`
   exists for parity where a packed layout is wanted.
@@ -291,6 +294,20 @@ def run_pipeline(
 ) -> dict[str, DataFrame]:
     """End-to-end: ETL → volatility → models → simulate → VaR → backtest.
 
+    ``var`` comes from ``aggregate_var_fused``: the per-ticker models
+    and the portfolio sum are both linear, so the portfolio weights are
+    folded into one weight vector and each simulated state is scored
+    once, not once per ticker (dates × trials × tickers rows, and the
+    shuffle of their per-trial sums, never exist). ``scored`` is still
+    returned, as the lazy ``score_trials`` frame, for callers that want
+    per-ticker returns; no job runs for it unless it is read.
+    ``score_trials`` → ``aggregate_var`` remains the reference path
+    the fused plan is tested against.
+
+    The run-date spine spans ``sim_start``..``sim_end``. Only when one
+    of them is missing does an eager job read the stocks' date range to
+    fill it in.
+
     ``materialize=True`` (r17, guide §2.4 — the spine-checkpoint
     pattern extended): eagerly localCheckpoint the three BOUNDED,
     high-fanout intermediates that lazy evaluation otherwise
@@ -304,8 +321,8 @@ def run_pipeline(
       applyInPandas fit appeared FOUR times in the composed physical
       plan;
     - ``var_series`` (one row per run date): the backtest as-of union
-      references it twice — the entire simulate→score→aggregate chain
-      (incl. the Monte-Carlo pandas UDF) executed twice.
+      references it twice — the entire simulate→aggregate chain
+      (incl. the Monte-Carlo arrow UDF) executed twice.
 
     localCheckpoint, never persist: blocks tie to these DataFrames'
     RDD identity, so a fresh run_pipeline call recomputes from source
@@ -313,6 +330,7 @@ def run_pipeline(
     composition fully lazy for callers that only consume one stage.
     """
     factor_cols = list(cfg.factor_cols)
+    n_factors = len(factor_cols)
     rets = stock_returns(stocks)
     feats = market_features(indicators, factor_cols)
     if materialize:
@@ -321,17 +339,17 @@ def run_pipeline(
     weights = train_models(rets, feats, model_cut)
     if materialize:
         weights = weights.localCheckpoint(eager=True)
-    bounds = stocks.agg(
-        F.min("date").alias("mn"), F.max("date").alias("mx")
-    ).first()
-    spine = run_date_spine(
-        spark,
-        sim_start or str(bounds.mn)[:10],
-        sim_end or str(bounds.mx)[:10],
-    )
+    if not (sim_start and sim_end):
+        bounds = stocks.agg(
+            F.min("date").alias("mn"), F.max("date").alias("mx")
+        ).first()
+        sim_start = sim_start or str(bounds.mn)[:10]
+        sim_end = sim_end or str(bounds.mx)[:10]
+    spine = run_date_spine(spark, sim_start, sim_end)
     sims = simulate(vol, spine, cfg.runs)
-    scored = score_trials(sims, weights, n_factors=len(factor_cols))
-    var_series = aggregate_var(scored, portfolio, cfg.confidence)
+    var_series = aggregate_var_fused(
+        sims, weights, portfolio, cfg.confidence, n_factors=n_factors
+    )
     if materialize:
         var_series = var_series.localCheckpoint(eager=True)
     compliance = backtest(rets, portfolio, var_series, cfg.basel_days)
@@ -341,7 +359,7 @@ def run_pipeline(
         "volatility": vol,
         "weights": weights,
         "simulations": sims,
-        "scored": scored,
+        "scored": score_trials(sims, weights, n_factors=n_factors),
         "var": var_series,
         "backtest": compliance,
     }
