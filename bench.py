@@ -485,7 +485,7 @@ def scaled_knn_graph(spark, scaled: str) -> dict:
     out["scaled10_knn_graph_ann_sec"] = round(time.time() - t0, 3)
     out["scaled10_knn_graph_ann_edges"] = ann_edges
     # r16 sibling arm: the PERSISTED-INDEX graph on the same corpus —
-    # build (Arrow Lloyd train + assign + cell-partitioned write) and
+    # build (Lloyd train + Arrow assign + cell-partitioned write) and
     # graph-from-storage timed separately; the graph leg re-pays no
     # training, so repeated graph builds over a live index amortize
     # the build column away (the FAISS add/train split)

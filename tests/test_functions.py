@@ -952,17 +952,33 @@ def test_jl_projection_numpy_parity_and_distance_fold(spark):
         round(float(e), 9) for e in expect
     )
 
-    # r17: the SQL-text path (string column name) is BIT-IDENTICAL to
-    # the Column-API builder (Column argument) — exact double equality
-    # per component, including exponent-heavy literals
+    # the SQL-text fold is BIT-IDENTICAL to a left-to-right double
+    # fold of the same literals — exact equality per component,
+    # including exponent-heavy literals; the operand name is read as
+    # F.col reads it (struct path, escaped backtick)
     mat2 = [[x * s for x in row] for row, s in zip(mat, [1e-7, 1.0, -1e3, 1.0] * 2)]
-    got = df.select(
-        jl_project("v", mat2).alias("sqlform"),
-        jl_project(F.col("v"), mat2).alias("colform"),
-    ).collect()
-    assert len(got) == 20
-    for r in got:
-        assert list(r.sqlform) == list(r.colform)
+    folds = []
+    for p in pts:
+        out = []
+        for row in mat2:
+            acc = 0.0
+            for x, y in zip(p, row):
+                acc = acc + float(x) * float(y)
+            out.append(acc)
+        folds.append(out)
+    named = df.select(
+        "id",
+        "v",
+        F.struct(F.col("v").alias("emb")).alias("s"),
+        F.col("v").alias("a`b"),
+    )
+    for name in ("v", "s.emb", "a`b"):
+        got = named.select("id", jl_project(name, mat2).alias("p")).collect()
+        assert len(got) == 20
+        for r in got:
+            assert list(r.p) == folds[r.id]
+    with pytest.raises(TypeError, match="column name"):
+        jl_project(F.col("v"), mat2)
 
 
 def test_shingles_let_bound_form_parity(spark):

@@ -4534,17 +4534,22 @@ def test_knn_graph_ann_recall_and_cosine_parity(spark, sf_dir):
         knn_graph_ann(tiny.filter(F.col("vec_id") < -1), k=2)
 
 
-def test_knn_graph_ann_indexed_matches_oneshot(spark, sf_dir, tmp_path):
+def test_knn_graph_ann_indexed_matches_oneshot(
+    spark, sf_dir, tmp_path, monkeypatch
+):
     """The persisted-index graph path (r16: build_ivf_graph_index →
     knn_graph_ann_indexed) returns EXACTLY the one-shot knn_graph_ann
     edge set at equal hyperparameters: the Arrow assignment/probe
     kernels are bit-identical to the literal-centroid expressions
     (_seq_cell_dists contract), member cells come from storage, and
-    the candidate→edges tail is literally shared code. Also pins the
-    Arrow Lloyd trainer == the expression trainer, and that the
-    stored vector table is partitioned by cell on disk."""
+    the candidate→edges tail is literally shared code. Also pins that
+    kmeans_fit's centroids do not depend on which side of the
+    assignment-kernel crossover k falls (Arrow kernel == literal
+    expression), and that the stored vector table is partitioned by
+    cell on disk."""
     import os
 
+    from value_at_risk_spark.operators import similarity
     from value_at_risk_spark.operators.annindex import (
         build_ivf_graph_index,
         knn_graph_ann_indexed,
@@ -4552,7 +4557,6 @@ def test_knn_graph_ann_indexed_matches_oneshot(spark, sf_dir, tmp_path):
     )
     from value_at_risk_spark.operators.similarity import (
         kmeans_fit,
-        kmeans_fit_arrow,
         knn_graph_ann,
     )
 
@@ -4561,9 +4565,12 @@ def test_knn_graph_ann_indexed_matches_oneshot(spark, sf_dir, tmp_path):
         .select("vec_id", "embedding")
         .limit(400)
     )
-    assert kmeans_fit(emb, k=8, iters=2) == kmeans_fit_arrow(
-        emb, k=8, iters=2
-    )
+    by_kernel = []
+    for crossover in (9, 8):  # k=8: expression side, then Arrow side
+        monkeypatch.setattr(similarity, "_KMEANS_ARROW_MIN_K", crossover)
+        by_kernel.append(kmeans_fit(emb, k=8, iters=2))
+    monkeypatch.undo()
+    assert by_kernel[0] == by_kernel[1]
     d = str(tmp_path / "ivfgraph")
     n_cells = build_ivf_graph_index(spark, d, emb, n_cells=8, iters=2)
     assert n_cells == 8
@@ -5345,13 +5352,18 @@ def test_ngram_jaccard_property_random_corpora(spark):
 
 
 def test_cell_expr_sql_text_parity(spark, sf_dir):
-    """The r16 SQL-text construction of the nearest-cell ranking
-    (_cell_dists_sql via F.expr — one parse instead of k*dim py4j
-    round-trips) is BIT-IDENTICAL to the Column-API builder it
-    replaced: same assignments, same probe lists, and the same exact
-    double distance in the head struct, on the fixture corpus plus
-    adversarial literals (negative, subnormal-ish exponents)."""
+    """The SQL-text nearest-cell builders (_cell_dists_sql via F.expr —
+    one parse instead of k*dim py4j round-trips) equal the numpy
+    reference _seq_cell_dists: the argmin assignment, the stable
+    argsort probe list and the exact double distance in the head
+    struct, on the fixture corpus plus adversarial literals (negative,
+    subnormal-ish exponents). The operand name is read as F.col reads
+    it: a dotted name is a struct path, and a backtick in a name is
+    escaped."""
+    import numpy as np
+
     from value_at_risk_spark.operators.similarity import (
+        _seq_cell_dists,
         kmeans_fit,
         nearest_cell_expr,
         nearest_cell_struct,
@@ -5369,21 +5381,30 @@ def test_cell_expr_sql_text_parity(spark, sf_dir):
     # exponent-heavy literals must round-trip through the SQL lexer too
     cents[0] = [x * 1e-7 for x in cents[0]]
     cents[1] = [-x * 1e3 for x in cents[1]]
-    # string column name -> SQL-text path; Column object -> legacy path
-    got = base.select(
+    rows = base.collect()
+    pos = {r._id: i for i, r in enumerate(rows)}
+    D = _seq_cell_dists(np.array([r._v for r in rows]), cents)
+    exp_c = D.argmin(axis=1)
+    exp_p = np.argsort(D, axis=1, kind="stable")[:, :3]
+    named = base.select(
         "_id",
-        nearest_cell_expr("_v", cents).alias("c_sql"),
-        nearest_cell_expr(F.col("_v"), cents).alias("c_col"),
-        nearest_cells_expr("_v", cents, 3).alias("p_sql"),
-        nearest_cells_expr(F.col("_v"), cents, 3).alias("p_col"),
-        nearest_cell_struct("_v", cents)["d"].alias("d_sql"),
-        nearest_cell_struct(F.col("_v"), cents)["d"].alias("d_col"),
-    ).collect()
-    assert len(got) == 300
-    for r in got:
-        assert r.c_sql == r.c_col
-        assert list(r.p_sql) == list(r.p_col)
-        assert r.d_sql == r.d_col  # exact double equality, no rounding
+        "_v",
+        F.struct(F.col("_v").alias("emb")).alias("s"),
+        F.col("_v").alias("a`b"),
+    )
+    for name in ("_v", "s.emb", "a`b", "`a``b`"):
+        got = named.select(
+            "_id",
+            nearest_cell_expr(name, cents).alias("c"),
+            nearest_cells_expr(name, cents, 3).alias("p"),
+            nearest_cell_struct(name, cents)["d"].alias("d"),
+        ).collect()
+        assert len(got) == 300
+        for r in got:
+            i = pos[r._id]
+            assert r.c == exp_c[i]
+            assert list(r.p) == exp_p[i].tolist()
+            assert r.d == D[i, exp_c[i]]  # exact double equality
 
 
 def test_hyperplane_buckets_sql_text_parity(spark, sf_dir):
@@ -5453,10 +5474,8 @@ def test_lit_double_sql_nonfinite_and_backticks(spark):
     column names."""
     import math
 
-    from value_at_risk_spark.operators.similarity import (
-        _lit_double_sql,
-        _pq_decode_sql,
-    )
+    from value_at_risk_spark.functions.vector import _lit_double_sql
+    from value_at_risk_spark.operators.similarity import _pq_decode_sql
 
     row = spark.range(1).select(
         F.expr(_lit_double_sql(float("nan"))).alias("nan_sql"),

@@ -947,8 +947,9 @@ def test_streaming_gopher_filters_and_jl_projection_match_batch(
     mat = jl_projection_matrix(64, 8, seed=7)
 
     def _proj_sum(df):
-        pv = jl_project(F.col("embedding").cast("array<double>"), mat)
-        return df.groupBy().agg(
+        pv = jl_project("ev", mat)
+        ev = F.col("embedding").cast("array<double>").alias("ev")
+        return df.select(ev).groupBy().agg(
             F.count(F.lit(1)).alias("n"),
             F.round(
                 F.sum(F.aggregate(pv, F.lit(0.0), lambda a, x: a + x)), 6

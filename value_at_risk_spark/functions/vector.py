@@ -139,40 +139,101 @@ def jl_projection_matrix(
     return [[round(float(x), 6) for x in row] for row in R]
 
 
-def jl_project(
-    vec: Column | str, matrix: list[list[float]]
-) -> Column:
-    """Project ``vec`` through a literal JL matrix: out[i] = Rᵢ · v,
-    one HOF dot product per output dimension (the narrow-dot unroll
-    crossover doesn't apply — the 64-wide fold repeats per output
-    row, the same reasoning as nearest_cell_expr). Entirely plan-side:
-    no shuffle, no Python, streaming-safe.
+def _col_sql(name: str) -> str:
+    """SQL text of a column reference, read the way ``F.col`` reads
+    the name: dots split a struct path (``"s.emb"`` is field ``emb``
+    of struct ``s``), a part wrapped in backticks is taken literally
+    (two backticks inside it stand for one), and every part is
+    re-quoted with its inner backticks doubled. A backtick inside an
+    unquoted part is a literal character: ``"a`b"`` names the column
+    a`b, which ``F.col`` would reject. Text builders render their
+    operand through this one helper, so a name resolves in a parsed
+    ``F.expr`` exactly as it does through ``F.col``."""
+    if not isinstance(name, str):
+        raise TypeError(
+            f"expected a column name, got {type(name).__name__}: project "
+            "the Column under a name first (df.select(col.alias(name)))"
+        )
+    parts: list[str] = []
+    cur: list[str] = []
+    i, quoted = 0, False
+    while i < len(name):
+        ch = name[i]
+        if quoted:
+            if ch != "`":
+                cur.append(ch)
+            elif name[i + 1 : i + 2] == "`":
+                cur.append("`")
+                i += 1
+            else:
+                quoted = False
+                if name[i + 1 : i + 2] not in ("", "."):
+                    raise ValueError(
+                        f"column name {name!r}: a quoted part must end "
+                        "at a dot or at the end of the name"
+                    )
+        elif ch == "`" and not cur:
+            quoted = True
+        elif ch == ".":
+            parts.append("".join(cur))
+            cur = []
+        else:
+            cur.append(ch)
+        i += 1
+    if quoted:
+        raise ValueError(f"column name {name!r}: unclosed backtick")
+    parts.append("".join(cur))
+    return ".".join("`" + p.replace("`", "``") + "`" for p in parts)
 
-    r17 (guide §4, the _cell_dists_sql argument): for a plain string
-    column name the out_dim x in_dim literal tree is rendered as ONE
-    SQL string parsed JVM-side — the Column-API build cost one py4j
+
+def _lit_double_sql(x) -> str:
+    """A python float as a Spark SQL DOUBLE literal. ``repr`` emits the
+    shortest round-trip decimal string and the SQL lexer's D-suffixed
+    literal parses with Java's Double.parseDouble (nearest-double) —
+    so the parsed constant is BIT-IDENTICAL to ``F.lit(float(x))``.
+
+    Non-finite values: ``repr`` would emit ``nanD`` / ``infD``, which
+    the SQL lexer rejects — emit the CAST-from-string form instead,
+    which parses to the same double ``F.lit`` builds."""
+    v = float(x)
+    if v != v:
+        return "CAST('NaN' AS DOUBLE)"
+    if v == float("inf"):
+        return "CAST('Infinity' AS DOUBLE)"
+    if v == float("-inf"):
+        return "CAST('-Infinity' AS DOUBLE)"
+    return repr(v) + "D"
+
+
+def _array1_sql(row) -> str:
+    """SQL text of a 1-D float vector as an array literal (bit-exact
+    ``_lit_double_sql`` round-trip)."""
+    return "array({})".format(", ".join(_lit_double_sql(x) for x in row))
+
+
+def _array2_sql(mat) -> str:
+    """SQL text of a 2-D float matrix as nested array literals."""
+    return "array({})".format(", ".join(_array1_sql(row) for row in mat))
+
+
+def jl_project(vec: str, matrix: list[list[float]]) -> Column:
+    """Project the column ``vec`` through a literal JL matrix:
+    out[i] = Rᵢ · v, one HOF dot product per output dimension (the
+    narrow-dot unroll crossover doesn't apply — the 64-wide fold
+    repeats per output row, the same reasoning as nearest_cell_expr).
+    Entirely plan-side: no shuffle, no Python, streaming-safe.
+
+    The out_dim x in_dim literal tree is rendered as ONE SQL string
+    parsed JVM-side: building it through the Column API cost one py4j
     round-trip per literal (measured ~2.4 s of pure driver time at
     32x64). The rendered fold is byte-for-byte the text form of
-    ``dot_product``'s HOF (same cast, same left fold, 0.0D zero), so
-    results are bit-identical; Column-object callers keep the legacy
-    builder."""
-    if isinstance(vec, str):
-        from value_at_risk_spark.operators.similarity import (
-            _array1_sql,  # function-local: avoids a circular import
-        )
-
-        vsql = f"`{vec}`"
-        dots = ", ".join(
-            "aggregate(zip_with({v}, {arr}, (x, y) -> "
-            "CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, "
-            "(acc, x) -> acc + x)".format(v=vsql, arr=_array1_sql(row))
-            for row in matrix
-        )
-        return F.expr(f"array({dots})")
-    v = _c(vec)
-    return F.array(
-        *[
-            dot_product(v, F.array(*[F.lit(float(x)) for x in row]))
-            for row in matrix
-        ]
+    ``dot_product``'s HOF (same cast, same left fold, 0.0D zero).
+    ``vec`` is a column name read as ``F.col`` reads it (see
+    ``_col_sql``); project a computed Column under a name first."""
+    dots = ", ".join(
+        "aggregate(zip_with({v}, {arr}, (x, y) -> "
+        "CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, "
+        "(acc, x) -> acc + x)".format(v=_col_sql(vec), arr=_array1_sql(row))
+        for row in matrix
     )
+    return F.expr(f"array({dots})")

@@ -34,9 +34,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from value_at_risk_spark.functions.vector import _array1_sql, _array2_sql
 from value_at_risk_spark.operators.similarity import (
-    _array1_sql,
-    _array2_sql,
     nearest_cell_expr,
     pq_encode,
 )
@@ -460,11 +459,12 @@ def _two_means(
     kmeans_centroids' choice, fine for a coarse quantizer over the
     whole corpus — collapses on a single tight cell: one centroid
     captures everything and the split becomes a no-op). Lloyd steps
-    are the same one-pass posexplode/avg aggregation. Returns None
-    when the cell is degenerate (both extremes identical)."""
+    are the shared one-pass mean update (similarity._lloyd_means).
+    Returns None when the cell is degenerate (both extremes
+    identical)."""
     import numpy as np
 
-    from value_at_risk_spark.operators.similarity import nearest_cell_expr
+    from value_at_risk_spark.operators.similarity import _lloyd_means
 
     first = df.select(vec_col).first()
     if first is None:
@@ -481,28 +481,12 @@ def _two_means(
     if pair[0] == pair[1]:
         return None
     for _ in range(iters):
-        # assignment and posexplode in SEPARATE selects: a generator
-        # in the same projection as the struct-literal distance array
-        # strips the struct field names (analyzer quirk)
         assigned = df.select(
-            nearest_cell_expr(vec_col, pair).alias("_p"),
+            nearest_cell_expr(vec_col, pair).alias("_cell"),
             F.col(vec_col).alias("_v"),
         )
-        means = (
-            assigned.select("_p", F.posexplode("_v").alias("_i", "_x"))
-            .groupBy("_p", "_i")
-            .agg(F.avg("_x").alias("_m"))
-            .groupBy("_p")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("_i", "_m"))).alias(
-                    "_ms"
-                )
-            )
-            .select("_p", F.transform("_ms", lambda s: s["_m"]).alias("_mean"))
-            .collect()
-        )
-        for r in means:
-            pair[r._p] = [float(x) for x in r._mean]
+        for r in _lloyd_means(assigned):
+            pair[r._cell] = [float(x) for x in r._mean]
     if pair[0] == pair[1]:
         return None
     return pair
@@ -675,13 +659,12 @@ def build_ivf_graph_index(
     plus ``ann_vectors`` — the FULL float vectors partitioned by their
     assigned ``_cell``, because graph re-ranking is exact-cosine over
     true vectors (unlike the PQ search indexes, whose payload is
-    codes). Training is the engine-replayable Lloyd contract
-    (``kmeans_fit`` semantics: smallest-id init, quantized handoffs,
-    ties to the smallest cell) executed through the ARROW assignment
-    kernel (``similarity.kmeans_fit_arrow`` — bit-identical centroids,
-    but the plan stays constant-size in n_cells, so the quantizer can
-    be thousands of cells where the one-shot literal expression caps
-    at 256). Cell assignment is paid ONCE here; every later graph
+    codes). Training is ``similarity.kmeans_fit`` (smallest-id init,
+    quantized handoffs, ties to the smallest cell), which assigns
+    through the Arrow kernel from ``_KMEANS_ARROW_MIN_K`` cells up —
+    the plan stays constant-size in n_cells, so the quantizer can be
+    thousands of cells where the one-shot literal expression caps at
+    256. Cell assignment is paid ONCE here; every later graph
     build, probe batch, or append reads cells from storage — the FAISS
     add/train split applied to graph construction.
 
@@ -691,7 +674,7 @@ def build_ivf_graph_index(
 
     from value_at_risk_spark.operators.similarity import (
         assign_cells_arrow,
-        kmeans_fit_arrow,
+        kmeans_fit,
     )
 
     if n_cells is None:
@@ -699,9 +682,7 @@ def build_ivf_graph_index(
         if n == 0:
             raise ValueError("build_ivf_graph_index: empty corpus")
         n_cells = min(n, 4096, max(8, math.ceil(n / 1500)))
-    cents = kmeans_fit_arrow(
-        corpus, id_col, vec_col, k=n_cells, iters=iters
-    )
+    cents = kmeans_fit(corpus, id_col, vec_col, k=n_cells, iters=iters)
     base = corpus.select(
         F.col(id_col).cast("long").alias("_id"),
         F.col(vec_col).cast("array<double>").alias("_v"),

@@ -393,6 +393,7 @@ def merge_into_delta_native(
         )
 
     deduped = updates.dropDuplicates(keys)
+    materialized = False
     # read-modify-write with a conditional commit: a concurrent append
     # landing between our read snapshot and the overwrite would be
     # silently erased by an unconditional rewrite (MERGE promises
@@ -456,6 +457,16 @@ def merge_into_delta_native(
             # Single-file tables skip both phases outright.
             touched = list(candidates)
             if len(candidates) > 1:
+                # the stats probe, the touched-file scan and the
+                # rewrite (or the fallback overwrite) each read the
+                # source: materialize it ONCE per MERGE, so a
+                # non-deterministic source cannot hand the phases
+                # different rows (duplicate keys, lost updates — why
+                # delta-spark materializes MERGE sources too). Reused
+                # across this call's conflict retries.
+                if not materialized:
+                    deduped = deduped.localCheckpoint(eager=True)
+                    materialized = True
                 k0 = keys[0]
                 b = deduped.agg(
                     F.min(k0).alias("mn"), F.max(k0).alias("mx")

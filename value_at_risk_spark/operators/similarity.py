@@ -24,6 +24,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from value_at_risk_spark.functions.vector import (
+    _array1_sql,
+    _array2_sql,
+    _col_sql,
+    _lit_double_sql,
     cosine_similarity,
     dot_product,
     resolve_dim,
@@ -99,12 +103,12 @@ def hyperplane_lsh_buckets(
         # (same construction-cost argument as _cell_dists_sql; the
         # parsed tree is the identical fold/compare expression)
         terms = " | ".join(
-            "CAST(CASE WHEN aggregate(zip_with(`{v}`, array({arr}), "
+            "CAST(CASE WHEN aggregate(zip_with({v}, {arr}, "
             "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, "
             "(acc, x) -> acc + x) > 0 THEN {bit} ELSE 0 END AS BIGINT)"
             .format(
-                v=vec_col,
-                arr=", ".join(_lit_double_sql(x) for x in planes[b]),
+                v=_col_sql(vec_col),
+                arr=_array1_sql(planes[b]),
                 bit=1 << b,
             )
             for b in range(num_planes)
@@ -471,9 +475,9 @@ def cosine_near_dup_pairs_blocked(
 
 
 def _contract_topk_cols(sims_row, ids, k: int, round_to: int | None):
-    """Batch-local top-k candidate columns under the CONTRACT total
-    order (rounded sim desc, id asc) — the same two-stage cut as
-    cosine_topk_arrow's kernel: first a raw-threshold superset (any
+    """Batch-local top-k candidate columns of ONE row under the
+    CONTRACT total order (rounded sim desc, id asc) — the exact cut
+    behind ``_batch_topk_emit``: first a raw-threshold superset (any
     global winner satisfies raw >= raw-kth − 10^-r), then, only when
     ties inflate the superset past k, an exact cut whose rounding
     replicates Spark's F.round bit-for-bit (Decimal(repr), HALF_UP —
@@ -518,8 +522,18 @@ def _batch_topk_emit(sims, qids, cand_ids, kk, rt, out_q, out_c, out_s):
     """Append each query row's BATCH-LOCAL top-k candidates (contract
     order: rounded sim desc, id asc) to the output lists — vectorized
     cut for the tie-free common case, Decimal contract cut only on
-    rows whose rounded ties inflate the superset (shared by the
-    blocked all-pairs kernel and the per-cell ANN-graph kernel)."""
+    rows whose rounded ties inflate the superset. Non-finite sims
+    (self-pairs masked to -inf) are never emitted. The one batch
+    top-k cut behind every Arrow top-k kernel: broadcast-query
+    (cosine_topk_arrow), reference-set (reference_topk_cosine),
+    blocked all-pairs and per-cell ANN graph.
+
+    Exact because any global winner is a batch winner under the same
+    order: the raw-kth threshold keeps every candidate within one
+    rounding unit of the kth raw value — a rigorous superset of the
+    contract's top-k, since any c with round(c) >= round(kth)
+    satisfies c >= kth - 10^-r. Emitted sims stay UNROUNDED so the
+    Spark-side merge window applies the one authoritative rounding."""
     n, m = sims.shape
     take = min(kk, m)
     if take == 0:
@@ -562,7 +576,7 @@ def cosine_allpairs_topk_blocked(
     into B blocks, each unordered block pair is one applyInPandas task
     computing the cross-block gram with ONE BLAS call, and each task
     emits only its rows' BATCH-LOCAL top-k against the opposite side
-    (contract order — see _contract_topk_cols). A global winner for
+    (contract order — see _batch_topk_emit). A global winner for
     query q vs corpus row c lives in exactly one block pair, so the
     per-query merge window over N·B·k candidate rows recovers the
     exact top-k. Output: (query_id, neighbor_id, cosine, rank).
@@ -632,18 +646,17 @@ def cosine_allpairs_topk_blocked(
         n_r = np.linalg.norm(V_r, axis=1)
         n_l[n_l == 0.0] = np.inf
         n_r[n_r == 0.0] = np.inf
-        def _emit(sims, qids, cand_ids):
-            # vectorized cut for the common case, Decimal contract cut
-            # only on rounded-tie rows — shared helper (also drives
-            # the per-cell ANN-graph kernel)
-            _batch_topk_emit(sims, qids, cand_ids, kk, rt, out_q, out_c, out_s)
-
         if V_r.size:
             sims = (V_l @ V_r.T) / (n_l[:, None] * n_r[None, :])
             sims[ids_l[:, None] == ids_r[None, :]] = -np.inf
-            _emit(sims, ids_l, ids_r)  # left rows as queries
-            if not diag:  # right rows as queries, same gram transposed
-                _emit(np.ascontiguousarray(sims.T), ids_r, ids_l)
+            # left rows as queries, then (off-diagonal) right rows as
+            # queries against the same gram transposed
+            _batch_topk_emit(sims, ids_l, ids_r, kk, rt, out_q, out_c, out_s)
+            if not diag:
+                _batch_topk_emit(
+                    np.ascontiguousarray(sims.T), ids_r, ids_l, kk, rt,
+                    out_q, out_c, out_s,
+                )
         return pd.DataFrame(
             {"query_id": out_q, "neighbor_id": out_c, "_raw": out_s}
         )
@@ -697,35 +710,15 @@ def knn_graph_mutual(
     )
 
 
-def nearest_cells_expr(vec_col, centroids, nprobe: int) -> "F.Column":
+def nearest_cells_expr(vec_col: str, centroids, nprobe: int) -> "F.Column":
     """Array of the ``nprobe`` nearest centroid indices (squared-L2
     ranking, ties to the smallest cell) — the multi-cell sibling of
-    ``nearest_cell_expr``, shared by IVF search and the ANN graph.
-    r16: SQL-text construction for string columns (_cell_dists_sql)."""
+    ``nearest_cell_expr``, shared by IVF search and the ANN graph."""
     np_ = min(nprobe, len(centroids))
-    sql = _vec_sql(vec_col)
-    if sql is not None:
-        return F.expr(
-            f"transform(slice({_cell_dists_sql(sql, centroids)}, 1, "
-            f"{np_}), s -> s.cell)"
-        )
-    col = vec_col
-    dists = F.array(
-        *[
-            F.struct(
-                (
-                    F.lit(float(sum(x * x for x in cent)))
-                    - 2 * dot_product(
-                        col, F.array(*[F.lit(float(x)) for x in cent])
-                    )
-                ).alias("d"),
-                F.lit(i).alias("cell"),
-            )
-            for i, cent in enumerate(centroids)
-        ]
+    return F.expr(
+        f"transform(slice({_cell_dists_sql(vec_col, centroids)}, 1, "
+        f"{np_}), s -> s.cell)"
     )
-    probes = F.slice(F.array_sort(dists), 1, np_)
-    return F.transform(probes, lambda s: s["cell"])
 
 
 def _seq_cell_dists(V: "np.ndarray", centroids) -> "np.ndarray":
@@ -827,53 +820,6 @@ def probe_cells_arrow(
     return df.select(id_col, vec_col).mapInPandas(
         _probe, f"{id_col} long, {vec_col} array<double>, {out} int"
     )
-
-
-def kmeans_fit_arrow(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 8,
-    iters: int = 2,
-    quantize: int = 6,
-) -> list[list[float]]:
-    """``kmeans_fit`` with the per-iteration assignment as the Arrow
-    kernel instead of the k·dim literal expression — SAME contract
-    (smallest-id init, 6-decimal quantized handoffs, empty cells keep
-    their centroid, ties to the smallest cell) and bit-identical
-    centroids (equality pinned in tests), but the plan no longer grows
-    with k: the path for the hundreds-to-thousands-of-cells coarse
-    quantizers a persisted index wants. Same DuckDB oracle replays
-    both forms."""
-    base = df.select(
-        F.col(id_col).cast("long").alias("_id"),
-        F.col(vec_col).cast("array<double>").alias("_v"),
-    )
-    seeds = base.orderBy("_id").limit(k).collect()
-    if len(seeds) < k:
-        raise ValueError(
-            f"kmeans_fit_arrow: k={k} exceeds corpus size {len(seeds)}"
-        )
-    cents = [[round(float(x), quantize) for x in r._v] for r in seeds]
-    for _ in range(iters):
-        assigned = assign_cells_arrow(base, cents)
-        means = (
-            assigned.select("_cell", F.posexplode("_v").alias("_i", "_x"))
-            .groupBy("_cell", "_i")
-            .agg(F.avg("_x").alias("_m"))
-            .groupBy("_cell")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("_i", "_m"))).alias("_ms")
-            )
-            .select(
-                "_cell",
-                F.transform("_ms", lambda s: s["_m"]).alias("_mean"),
-            )
-            .collect()
-        )
-        for r in means:  # empty cells keep their previous centroid
-            cents[r._cell] = [round(float(x), quantize) for x in r._mean]
-    return cents
 
 
 def knn_graph_ann(
@@ -1144,12 +1090,7 @@ def reference_topk_cosine(
             out_q: list[int] = []
             out_c: list[int] = []
             out_s: list[float] = []
-            for i in range(len(ids)):
-                cols = _contract_topk_cols(sims[i], rids, kk, rt)
-                cols = cols[np.isfinite(sims[i, cols])]
-                out_q.extend([int(ids[i])] * len(cols))
-                out_c.extend(rids[cols].tolist())
-                out_s.extend(sims[i, cols].tolist())
+            _batch_topk_emit(sims, ids, rids, kk, rt, out_q, out_c, out_s)
             yield pd.DataFrame(
                 {"_cid": out_q, "ref_id": out_c, "_raw": out_s}
             )
@@ -1175,7 +1116,6 @@ def knn_topk_incremental(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_to: int | None = 6,
-    num_blocks: int | None = None,
 ) -> DataFrame:
     """Incrementally maintain an exact all-corpus top-k table when a
     batch of new vectors arrives — O(N·|batch|) work instead of the
@@ -1198,7 +1138,6 @@ def knn_topk_incremental(
     cosine, rank) table for the union corpus, bit-identical to a
     from-scratch cosine_allpairs_topk_blocked on the union
     (pytest-pinned)."""
-    _ = num_blocks  # reserved: a huge batch would use the blocked kernel
     union = old_corpus.select(id_col, vec_col).unionByName(
         new_batch.select(id_col, vec_col)
     )
@@ -1240,47 +1179,32 @@ def knn_topk_incremental(
     )
 
 
-def _lit_double_sql(x) -> str:
-    """A python float as a Spark SQL DOUBLE literal. ``repr`` emits the
-    shortest round-trip decimal string and the SQL lexer's D-suffixed
-    literal parses with Java's Double.parseDouble (nearest-double) —
-    so the parsed constant is BIT-IDENTICAL to ``F.lit(float(x))``.
-
-    Non-finite values (r17, ADVICE): ``repr`` would emit ``nanD`` /
-    ``infD``, which the SQL lexer rejects — emit the CAST-from-string
-    form instead, which parses to the same double ``F.lit`` builds
-    (centroids over embeddings containing NaN must not break the
-    SQL-text path the Column-API path handled)."""
-    v = float(x)
-    if v != v:
-        return "CAST('NaN' AS DOUBLE)"
-    if v == float("inf"):
-        return "CAST('Infinity' AS DOUBLE)"
-    if v == float("-inf"):
-        return "CAST('-Infinity' AS DOUBLE)"
-    return repr(v) + "D"
-
-
-def _cell_dists_sql(col_sql: str, centroids) -> str:
+def _cell_dists_sql(vec_col: str, centroids) -> str:
     """SQL text of the sorted (d, cell) struct array over literal
-    centroids — the SAME expression tree ``nearest_cell_expr`` always
-    built (||c||² − 2·v·c ranking, HOF-fold dot product, array_sort
-    tie-to-smallest-cell), produced as ONE string for ``F.expr``.
+    centroids: d = ||c||² − 2·v·c (the squared-L2 ranking; ||v||² is
+    constant per row), the dot product as ``dot_product``'s HOF fold,
+    ``array_sort`` breaking ties to the smallest cell. The ONE
+    nearest-cell builder behind ``nearest_cell_expr``,
+    ``nearest_cell_struct`` and ``nearest_cells_expr``; the Arrow
+    kernels replay it bit-for-bit in ``_seq_cell_dists``.
 
-    Why text (r16, guide §4): building k·dim literals through the
-    Python Column API costs one py4j round-trip per node — measured
-    ~26 s of pure DRIVER time to construct the k=40 x dim=64
-    assignment expression, repeated per k-means iteration. The SQL
-    parser builds the identical tree JVM-side in milliseconds.
-    Value parity with the old builder is pytest-pinned
-    (test_cell_expr_sql_text_parity)."""
+    Why text: building k·dim literals through the Python Column API
+    costs one py4j round-trip per node — measured ~26 s of pure
+    DRIVER time to construct the k=40 x dim=64 assignment expression,
+    repeated per k-means iteration. The SQL parser builds the tree
+    JVM-side in milliseconds. Why the HOF fold, not the unrolled
+    ``dim=`` form: k centroids x dim element_at terms in one
+    expression blow the codegen unit past JIT limits (measured 2x
+    slower at ksub=16). Why array_sort, not a when/least fold: that
+    fold re-nests the accumulated best-distance subtree at every step
+    — O(k²) expression size."""
     cells = ", ".join(
-        "named_struct('d', {c2} - 2 * aggregate(zip_with({v}, array({arr}), "
+        "named_struct('d', {c2} - 2 * aggregate(zip_with({v}, {arr}, "
         "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, "
         "(acc, x) -> acc + x), 'cell', {i})".format(
             c2=_lit_double_sql(sum(float(x) * float(x) for x in cent)),
-            v=col_sql,
-            arr=", ".join(_lit_double_sql(x) for x in cent),
+            v=_col_sql(vec_col),
+            arr=_array1_sql(cent),
             i=i,
         )
         for i, cent in enumerate(centroids)
@@ -1288,85 +1212,64 @@ def _cell_dists_sql(col_sql: str, centroids) -> str:
     return f"array_sort(array({cells}))"
 
 
-def _vec_sql(vec_col) -> str | None:
-    """SQL text for a vector operand: a quoted name for plain string
-    columns, None for arbitrary Column objects (callers fall back to
-    the Column-API builder — rare, and never inside training loops)."""
-    return f"`{vec_col}`" if isinstance(vec_col, str) else None
+def nearest_cell_expr(vec_col: str, centroids) -> "F.Column":
+    """Index of the nearest centroid (squared-L2, ties to the smallest
+    index) as a native expression — centroids are plan literals, so
+    assignment is a pure projection: no shuffle, no Python, works
+    identically in batch and streaming. ``vec_col`` is a column name
+    read as ``F.col`` reads it; project a computed vector under a name
+    first."""
+    return F.expr(f"element_at({_cell_dists_sql(vec_col, centroids)}, 1).cell")
 
 
-def nearest_cell_expr(vec_col, centroids) -> "F.Column":
-    """Index of the nearest centroid (squared-L2) as a native
-    expression — centroids are plan literals, so assignment is a pure
-    projection: no shuffle, no Python, works identically in batch and
-    streaming.
-
-    Form: sort an array of (distance, index) structs and take the
-    head — an O(k·dim) expression tree. The once-obvious
-    when/least fold is O(k²): every step re-nests the accumulated
-    best-distance subtree into both the comparison and the next
-    `least`, and at ksub=16 codebooks the resulting codegen unit
-    measurably slows tiny-batch jobs. Ties pick the smallest index on
-    both forms (array_sort orders by (d, cell)).
-
-    r16: for string column names the k·dim literal tree is built as
-    ONE SQL string (see _cell_dists_sql) — identical values, ~1000x
-    cheaper driver-side construction."""
-    sql = _vec_sql(vec_col)
-    if sql is not None:
-        return F.expr(
-            f"element_at({_cell_dists_sql(sql, centroids)}, 1).cell"
-        )
-    col = vec_col
-    dists = F.array(
-        *[
-            F.struct(
-                (
-                    # ||v-c||² ranking needs only -2·v·c + ||c||²
-                    # (||v||² is constant per row)
-                    F.lit(float(sum(x * x for x in cent)))
-                    # HOF fold, NOT the unrolled dim= form: k centroids
-                    # x dim element_at terms in one expression blows the
-                    # codegen unit past JIT limits (measured 2x slower
-                    # at ksub=16) — the narrow-dot crossover in
-                    # dot_product's docstring doesn't apply when the
-                    # expression repeats per centroid
-                    - 2 * dot_product(
-                        col, F.array(*[F.lit(float(x)) for x in cent])
-                    )
-                ).alias("d"),
-                F.lit(i).alias("cell"),
-            )
-            for i, cent in enumerate(centroids)
-        ]
-    )
-    return F.element_at(F.array_sort(dists), 1)["cell"]
-
-
-def nearest_cell_struct(vec_col, centroids) -> "F.Column":
+def nearest_cell_struct(vec_col: str, centroids) -> "F.Column":
     """Head (d, cell) struct of the nearest-centroid ranking — same
     expression as nearest_cell_expr but keeps the rank score so the
     caller can recover the true squared distance (``d + ||v||²``,
     since d = ||c||² − 2·v·c) without a second k·dim pass."""
-    sql = _vec_sql(vec_col)
-    if sql is not None:
-        return F.expr(f"element_at({_cell_dists_sql(sql, centroids)}, 1)")
-    col = vec_col
-    dists = F.array(
-        *[
-            F.struct(
-                (
-                    F.lit(float(sum(x * x for x in cent)))
-                    - 2 * dot_product(
-                        col, F.array(*[F.lit(float(x)) for x in cent])
-                    )
-                ).alias("d"),
-                F.lit(i).alias("cell"),
-            )
-            for i, cent in enumerate(centroids)
-        ]
+    return F.expr(f"element_at({_cell_dists_sql(vec_col, centroids)}, 1)")
+
+
+# Lloyd assignment kernel crossover in k: below it the k·dim literal
+# expression (pure projection, no Python worker) is cheaper; at or
+# above it the Arrow kernel, whose plan and codegen size stay constant
+# in k. Both produce bit-identical assignments (_seq_cell_dists).
+# Measured at local[1] on 500, 2,000 and 20,000 vectors (PERF.md,
+# "k-means assignment crossover").
+_KMEANS_ARROW_MIN_K = 16
+
+
+def _lloyd_means(assigned: DataFrame, keys: tuple[str, ...] = ()) -> list:
+    """One Lloyd mean update, collected to the driver: the mean vector
+    of every occupied (keys..., _cell) group of ``assigned`` — a frame
+    of (keys..., _cell, _v) — as rows (keys..., _cell, _mean). One
+    posexplode and one per-(keys, _cell, position) AVG, then
+    ``_collect_cell_means``. Empty cells return no row, so callers
+    keep their previous centroid. The posexplode runs in its own
+    select, apart from the assignment: a generator in the same
+    projection as the struct-literal ranking makes the analyzer drop
+    the (d, cell) field names (FIELD_NOT_FOUND)."""
+    per_pos = (
+        assigned.select(*keys, "_cell", F.posexplode("_v").alias("_i", "_x"))
+        .groupBy(*keys, "_cell", "_i")
+        .agg(F.avg("_x").alias("_m"))
     )
-    return F.element_at(F.array_sort(dists), 1)
+    return _collect_cell_means(per_pos, keys)
+
+
+def _collect_cell_means(per_pos: DataFrame, keys: tuple[str, ...] = ()) -> list:
+    """Per-position means (keys..., _cell, _i, _m) reassembled into one
+    ordered vector per (keys..., _cell) — array_sort over (_i, _m) —
+    and collected as rows (keys..., _cell, _mean); only k×dim doubles
+    reach the driver."""
+    return (
+        per_pos.groupBy(*keys, "_cell")
+        .agg(F.array_sort(F.collect_list(F.struct("_i", "_m"))).alias("_ms"))
+        .select(
+            *keys, "_cell", F.transform("_ms", lambda s: s["_m"]).alias("_mean")
+        )
+        .collect()
+    )
 
 
 def kmeans_fit(
@@ -1389,10 +1292,14 @@ def kmeans_fit(
       each handoff instead of compounding through iterations;
     - empty cells keep their previous centroid.
 
-    Each iteration is one distributed assign (pure projection — the
-    centroids are plan literals) plus one hash-agg; only k×dim doubles
-    reach the driver per pass. A DuckDB oracle replays the whole loop
-    as an unrolled assign→mean CTE chain (queries._KMEANS_ORACLE)."""
+    Each iteration is one distributed assign plus one hash-agg
+    (``_lloyd_means``); only k×dim doubles reach the driver per pass.
+    The assign is the literal-centroid expression (pure projection)
+    below ``_KMEANS_ARROW_MIN_K`` cells and the Arrow kernel
+    (``assign_cells_arrow`` — constant plan size in k) at or above
+    it; the two are bit-identical, so the centroids do not depend on
+    the choice. A DuckDB oracle replays the whole loop as an unrolled
+    assign→mean CTE chain (queries._KMEANS_ORACLE)."""
     v = F.col(vec_col).cast("array<double>")
     base = df.select(F.col(id_col).cast("long").alias("_id"), v.alias("_v"))
     seeds = base.orderBy("_id").limit(k).collect()
@@ -1402,24 +1309,13 @@ def kmeans_fit(
         )
     cents = [[round(float(x), quantize) for x in r._v] for r in seeds]
     for _ in range(iters):
-        assigned = base.select(
-            "_v", nearest_cell_expr("_v", cents).alias("_cell")
-        )
-        means = (
-            assigned.select("_cell", F.posexplode("_v").alias("_i", "_x"))
-            .groupBy("_cell", "_i")
-            .agg(F.avg("_x").alias("_m"))
-            .groupBy("_cell")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("_i", "_m"))).alias("_ms")
+        if k >= _KMEANS_ARROW_MIN_K:
+            assigned = assign_cells_arrow(base, cents)
+        else:
+            assigned = base.select(
+                "_v", nearest_cell_expr("_v", cents).alias("_cell")
             )
-            .select(
-                "_cell",
-                F.transform("_ms", lambda s: s["_m"]).alias("_mean"),
-            )
-            .collect()
-        )
-        for r in means:  # empty cells keep their previous centroid
+        for r in _lloyd_means(assigned):  # empty cells keep their centroid
             cents[r._cell] = [round(float(x), quantize) for x in r._mean]
     return cents
 
@@ -1498,21 +1394,7 @@ def kmeans_centroids(
             F.col(vec_col).alias("_v"),
             nearest_cell_expr(vec_col, cents).alias("_cell"),
         )
-        means = (
-            assigned.select("_cell", F.posexplode("_v").alias("_i", "_x"))
-            .groupBy("_cell", "_i")
-            .agg(F.avg("_x").alias("_m"))
-            .groupBy("_cell")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("_i", "_m"))).alias("_ms")
-            )
-            .select(
-                "_cell",
-                F.transform("_ms", lambda s: s["_m"]).alias("_mean"),
-            )
-            .collect()
-        )
-        for r in means:
+        for r in _lloyd_means(assigned):
             cents[r._cell] = [float(x) for x in r._mean]
     return cents
 
@@ -1624,47 +1506,34 @@ def pq_train(
         for j in range(m)
     ]
     for _ in range(iters):
-        sliced = df.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(j).alias("_j"),
-                            F.slice(vec_col, j * sub + 1, sub).alias("_v"),
-                        )
-                        for j in range(m)
-                    ]
-                )
-            ).alias("_p")
-        ).select("_p._j", "_p._v")
-        cell = F.when(F.col("_j") == 0, nearest_cell_expr("_v", cents[0]))
-        for j in range(1, m):
-            cell = cell.when(
-                F.col("_j") == j, nearest_cell_expr("_v", cents[j])
-            )
-        # assignment and posexplode in SEPARATE selects: a generator in
-        # the same projection makes the analyzer rebuild the assignment
-        # expression without struct-field name hints (Spark 4 drops the
-        # (d, cell) aliases -> FIELD_NOT_FOUND)
-        means = (
-            sliced.select("_j", "_v", cell.alias("_cell"))
-            .select("_j", "_cell", F.posexplode("_v").alias("_i", "_x"))
-            .groupBy("_j", "_cell", "_i")
-            .agg(F.avg("_x").alias("_m"))
-            .groupBy("_j", "_cell")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("_i", "_m"))).alias("_ms")
-            )
-            .select(
-                "_j",
-                "_cell",
-                F.transform("_ms", lambda s: s["_m"]).alias("_mean"),
-            )
-            .collect()
-        )
-        for r in means:
+        assigned = _pq_assigned(df, vec_col, cents, sub)
+        for r in _lloyd_means(assigned, keys=("_j",)):
             cents[r._j][r._cell] = [float(x) for x in r._mean]
     return cents
+
+
+def _pq_assigned(df: DataFrame, vec_col: str, cents, sub: int) -> DataFrame:
+    """The PQ trainers' Lloyd assign: every row explodes into its m
+    (subspace ``_j``, slice ``_v``) pairs, and each slice takes the
+    nearest cell of its own subspace's codebook through a CASE on
+    ``_j`` (pure projection). Output: (_j, _v, _cell)."""
+    sliced = df.select(
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(j).alias("_j"),
+                        F.slice(vec_col, j * sub + 1, sub).alias("_v"),
+                    )
+                    for j in range(len(cents))
+                ]
+            )
+        ).alias("_p")
+    ).select("_p._j", "_p._v")
+    cell = F.when(F.col("_j") == 0, nearest_cell_expr("_v", cents[0]))
+    for j in range(1, len(cents)):
+        cell = cell.when(F.col("_j") == j, nearest_cell_expr("_v", cents[j]))
+    return sliced.select("_j", "_v", cell.alias("_cell"))
 
 
 def pq_fit(
@@ -1734,33 +1603,14 @@ def pq_fit(
         for j in range(m)
     ]
     for _ in range(iters):
-        sliced = base.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(j).alias("_j"),
-                            F.slice("_fv", j * sub + 1, sub).alias("_v"),
-                        )
-                        for j in range(m)
-                    ]
-                )
-            ).alias("_p")
-        ).select("_p._j", "_p._v")
-        cell = F.when(F.col("_j") == 0, nearest_cell_expr("_v", cents[0]))
-        for j in range(1, m):
-            cell = cell.when(
-                F.col("_j") == j, nearest_cell_expr("_v", cents[j])
-            )
-        exploded = (
-            sliced.select("_j", "_v", cell.alias("_cell"))
-            .select("_j", "_cell", F.posexplode("_v").alias("_i", "_x"))
-        )
-        if grid_exact_mean:
+        assigned = _pq_assigned(base, "_fv", cents, sub)
+        if not grid_exact_mean:
+            means = _lloyd_means(assigned, keys=("_j",))
+        else:
             scale = 10 ** quantize
-            micro = exploded.withColumn(
-                "_k", F.round(F.col("_x") * scale, 0).cast("long")
-            )
+            micro = assigned.select(
+                "_j", "_cell", F.posexplode("_v").alias("_i", "_x")
+            ).withColumn("_k", F.round(F.col("_x") * scale, 0).cast("long"))
             per = micro.groupBy("_j", "_cell", "_i").agg(
                 F.sum("_k").alias("_s"), F.count(F.lit(1)).alias("_n")
             )
@@ -1768,26 +1618,11 @@ def pq_fit(
                 F.signum("_s").cast("long")
                 * F.expr("(2 * abs(_s) + _n) div (2 * _n)")
             ).cast("long")
-            agg = per.select(
+            per_pos = per.select(
                 "_j", "_cell", "_i",
                 (r_expr / F.lit(float(scale))).alias("_m"),
             )
-        else:
-            agg = exploded.groupBy("_j", "_cell", "_i").agg(
-                F.avg("_x").alias("_m")
-            )
-        means = (
-            agg.groupBy("_j", "_cell")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("_i", "_m"))).alias("_ms")
-            )
-            .select(
-                "_j",
-                "_cell",
-                F.transform("_ms", lambda s: s["_m"]).alias("_mean"),
-            )
-            .collect()
-        )
+            means = _collect_cell_means(per_pos, keys=("_j",))
         for r in means:  # empty cells keep their previous centroid
             cents[r._j][r._cell] = (
                 [float(x) for x in r._mean]
@@ -1804,46 +1639,32 @@ def pq_encode(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Assign each vector its m per-subspace nearest-centroid codes —
-    a pure projection (the same ``nearest_cell_expr`` unrolled distance
-    used by IVF assignment), no shuffle at all. Output:
+    a pure projection (the same ``nearest_cell_expr`` ranking used by
+    IVF assignment), no shuffle at all. Output:
     (id_col, codes array<int>)."""
     m = len(codebooks)
     sub = len(codebooks[0][0])
-    codes = F.array(
+    slices = df.select(
+        F.col(id_col),
         *[
-            nearest_cell_expr(
-                F.slice(vec_col, j * sub + 1, sub), codebooks[j]
-            )
+            F.slice(vec_col, j * sub + 1, sub).alias(f"_pq_s{j}")
             for j in range(m)
-        ]
+        ],
     )
-    return df.select(F.col(id_col), codes.alias("codes"))
-
-
-def _array1_sql(row) -> str:
-    """SQL text of a 1-D float vector as an array literal (bit-exact
-    ``_lit_double_sql`` round-trip)."""
-    return "array({})".format(", ".join(_lit_double_sql(x) for x in row))
-
-
-def _array2_sql(mat) -> str:
-    """SQL text of a 2-D float matrix as nested array literals — the
-    same bit-exact ``_lit_double_sql`` round-trip the cell-ranking
-    text builder uses."""
-    return "array({})".format(", ".join(_array1_sql(row) for row in mat))
+    codes = F.array(
+        *[nearest_cell_expr(f"_pq_s{j}", codebooks[j]) for j in range(m)]
+    )
+    return slices.select(F.col(id_col), codes.alias("codes"))
 
 
 def _pq_decode_sql(
     codebooks: list[list[list[float]]], codes_col: str = "codes"
 ) -> str:
-    """SQL text of the PQ reconstruction (see ``pq_decode_expr``)."""
-    # String names are treated as ONE top-level column (backticks
-    # escaped — r17, ADVICE); callers needing nested fields pass a
-    # Column to pq_decode_expr and take the legacy builder.
-    c_sql = codes_col.replace("`", "``")
+    """SQL text of the PQ reconstruction (see ``pq_decode_expr``);
+    ``codes_col`` is read as ``F.col`` reads it (``_col_sql``)."""
     parts = ", ".join(
-        "element_at({cb}, element_at(`{c}`, {j}) + 1)".format(
-            cb=_array2_sql(codebooks[m]), c=c_sql, j=m + 1
+        "element_at({cb}, element_at({c}, {j}) + 1)".format(
+            cb=_array2_sql(codebooks[m]), c=_col_sql(codes_col), j=m + 1
         )
         for m in range(len(codebooks))
     )
@@ -1943,11 +1764,11 @@ def ivfpq_build_replayable(
     # (measured 0.5-0.7 s of pure driver time per build at 8x64)
     cents_lit = F.expr(_array2_sql(cents))
     assigned = corpus.select(
+        F.col(corpus_id), F.col(vec_col).cast("array<double>").alias("_fv")
+    ).select(
         F.col(corpus_id),
-        F.col(vec_col).cast("array<double>").alias(vec_col),
-        nearest_cell_expr(F.col(vec_col).cast("array<double>"), cents).alias(
-            "_cell"
-        ),
+        F.col("_fv").alias(vec_col),
+        nearest_cell_expr("_fv", cents).alias("_cell"),
     ).withColumn(
         "_resid",
         F.zip_with(
@@ -2061,27 +1882,13 @@ def ivfpq_topk(
         ).alias("_cv"),
     ).withColumn("_cn", vector_norm("_cv"))
 
-    col = F.col(vec_col)
-    dists = F.array(
-        *[
-            F.struct(
-                (
-                    F.lit(float(sum(x * x for x in cent)))
-                    - 2 * dot_product(
-                        col, F.array(*[F.lit(float(x)) for x in cent])
-                    )
-                ).alias("d"),
-                F.lit(i).alias("cell"),
-            )
-            for i, cent in enumerate(centroids)
-        ]
-    )
-    probes = F.slice(F.array_sort(dists), 1, nprobe)
     q = queries.select(
         F.col(query_id),
         F.col(vec_col).alias("_qv"),
         vector_norm(vec_col).alias("_qn"),
-        F.explode(F.transform(probes, lambda s: s["cell"])).alias("_cell"),
+        F.explode(nearest_cells_expr(vec_col, centroids, nprobe)).alias(
+            "_cell"
+        ),
     )
     sim = F.try_divide(dot_product("_qv", "_cv"), F.col("_qn") * F.col("_cn"))
     scored = (
@@ -2454,16 +2261,6 @@ def cosine_topk_arrow(
 
     Ties and rounding follow cosine_topk exactly: round-then-rank,
     ascending id tie-break, self-matches excluded."""
-    import math
-    from decimal import ROUND_HALF_UP, Decimal
-
-    import numpy as np
-    import pandas as pd
-
-    _quant = (
-        Decimal(1).scaleb(-round_to) if round_to is not None else None
-    )
-
     qrows = queries.select(query_id, vec_col).collect()
     if not qrows:
         empty = queries.sparkSession.createDataFrame(
@@ -2474,8 +2271,7 @@ def cosine_topk_arrow(
     Q = np.array([r[1] for r in qrows], dtype=np.float64)
     Qn = np.linalg.norm(Q, axis=1)
     Qn[Qn == 0.0] = np.inf  # zero query -> all cosines 0, never NaN
-    nq = len(qids)
-    kk = k
+    kk = int(k)
 
     def _score(batches):
         for pdf in batches:
@@ -2488,54 +2284,10 @@ def cosine_topk_arrow(
             sims = (Q @ V.T) / (Qn[:, None] * Vn[None, :])
             # exclude self-matches before the local cut
             sims[qids[:, None] == ids[None, :]] = -np.inf
-            take = min(kk, sims.shape[1])
-            part = np.argpartition(-sims, take - 1, axis=1)[:, :take]
-            # the final contract ranks on ROUNDED sims with ascending-id
-            # tie-break. The raw-kth threshold first narrows to every
-            # candidate within one rounding unit of the kth raw value —
-            # a rigorous superset of the contract's top-k, since any c
-            # with round(c) >= round(kth) satisfies c >= kth - 10^-r.
-            # On a tie-heavy corpus (exact-duplicate embeddings — the
-            # dedup workload) that superset can approach the whole
-            # batch, so the EMISSION is then cut to the exact
-            # batch-local top-k under the contract's own total order
-            # (rounded sim desc, id asc) — bounded by k per query per
-            # batch, and exact because any global winner is a batch
-            # winner under the same order. The cut key replicates
-            # Spark's F.round bit-for-bit (BigDecimal.valueOf ==
-            # Decimal(repr(x)), HALF_UP) — numpy's half-even round can
-            # disagree by one ulp at decimal boundaries and flip the id
-            # tie-break. Emitted sims stay UNROUNDED so Spark's F.round
-            # in the merge window remains the single authoritative
-            # rounding of the OUTPUT value.
-            kth = sims[np.arange(nq)[:, None], part].min(axis=1)
-            thr = kth if round_to is None else kth - 10.0 ** (-round_to)
-            mask = sims >= thr[:, None]
-            out_q, out_c, out_s = [], [], []
-            for i in range(nq):
-                cols = np.nonzero(mask[i])[0]
-                if len(cols) > kk:
-                    raw = sims[i, cols]
-                    if round_to is None:
-                        key = raw
-                    else:
-                        key = np.array(
-                            [
-                                float(
-                                    Decimal(repr(s)).quantize(
-                                        _quant, rounding=ROUND_HALF_UP
-                                    )
-                                )
-                                if math.isfinite(s)
-                                else s
-                                for s in raw.tolist()
-                            ]
-                        )
-                    # lexsort: last key is primary -> (-sim, id) order
-                    cols = cols[np.lexsort((ids[cols], -key))[:kk]]
-                out_q.extend([int(qids[i])] * len(cols))
-                out_c.extend(ids[cols].tolist())
-                out_s.extend(sims[i, cols].tolist())
+            out_q: list[int] = []
+            out_c: list[int] = []
+            out_s: list[float] = []
+            _batch_topk_emit(sims, qids, ids, kk, round_to, out_q, out_c, out_s)
             yield pd.DataFrame(
                 {query_id: out_q, corpus_id: out_c, "cosine": out_s}
             )
@@ -2550,8 +2302,7 @@ def cosine_topk_arrow(
         F.desc("cosine"), F.asc(corpus_id)
     )
     return (
-        cand.filter(F.col("cosine") != F.lit(float("-inf")))
-        .select(query_id, corpus_id, sim.alias("cosine"))
+        cand.select(query_id, corpus_id, sim.alias("cosine"))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )

@@ -598,10 +598,10 @@ def knn_graph_ann_indexed_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     executed form of the >400k-vector path the one-shot
     ``knn_graph_ann`` declares. The IVF coarse structure trains ONCE
     per corpus through the index lifecycle (ensure_index build-or-load
-    — the FAISS add/train split) with the ARROW Lloyd trainer
-    (kmeans_fit_arrow: bit-identical to kmeans_fit, plan size constant
-    in n_cells, so the build scales to thousands of cells where the
-    one-shot literal expression caps at 256); vectors persist
+    — the FAISS add/train split) with ``kmeans_fit``, whose Lloyd
+    assign switches to the Arrow kernel at large n_cells (plan size
+    constant in n_cells, so the build scales to thousands of cells
+    where the one-shot literal expression caps at 256); vectors persist
     PARTITIONED BY CELL; graph construction reads member cells from
     storage, Arrow-probes each row's 3 nearest cells, and runs the
     shared per-cell-gram → merge → reciprocity tail
