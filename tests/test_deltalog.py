@@ -306,36 +306,49 @@ def test_merge_into_delta_native_prunes_untouched_files(spark, tmp_path):
 
 
 def test_merge_native_evaluates_source_once(spark, tmp_path):
-    """The file-pruned MERGE reads its source in several phases (stats
-    probe, touched-file scan, rewrite); it materializes the source
-    first, so a non-deterministic source is evaluated ONCE per MERGE
-    and every phase sees the same rows. Counted through a Python UDF
-    feeding an accumulator, on a 10-file table."""
+    """Every MERGE path reads its source more than once (the pruned
+    path's stats probe, touched-file scan and rewrite; the upsert
+    overwrite's anti-join and union; the clause engine's join), so the
+    source is materialized first and a non-deterministic source is
+    evaluated ONCE per MERGE: on a 10-file table (pruned path), a
+    1-file table (overwrite path) and with a not_matched_by_source
+    clause (clause engine). Counted through a Python UDF feeding an
+    accumulator."""
     from value_at_risk_spark.operators.merge import merge_into_delta_native
 
-    tbl = str(tmp_path / "once_t")
     df = spark.range(10_000).select(
         F.col("id").alias("k"), (F.col("id") * 2.0).alias("v")
     )
-    write_delta(spark, df.repartitionByRange(10, "k"), tbl)
-    assert len(snapshot(tbl).files) == 10
-
-    calls = spark.sparkContext.accumulator(0)
-
-    def _counted(i):
-        calls.add(1)
-        return i + 100
-
-    # the UDF computes the merge KEY, so every phase has to evaluate it
-    counted = F.udf(_counted, "long").asNondeterministic()
-    src = spark.range(50).select(
-        counted("id").alias("k"), F.lit(-1.0).alias("v")
+    by_source = dict(
+        matched=[{"update": "*"}],
+        not_matched=[{"insert": "*"}],
+        not_matched_by_source=[{"condition": "t.k >= 9990", "delete": True}],
     )
-    merge_into_delta_native(spark, tbl, src, ["k"])
-    assert calls.value == 50
-    got = read_delta(spark, tbl)
-    assert got.count() == 10_000
-    assert got.filter("v = -1.0").count() == 50
+    for name, files, clauses, rows in (
+        ("pruned", 10, {}, 10_000),
+        ("one_file", 1, {}, 10_000),
+        ("by_source", 10, by_source, 9_990),
+    ):
+        tbl = str(tmp_path / name)
+        write_delta(spark, df.repartitionByRange(files, "k"), tbl)
+        assert len(snapshot(tbl).files) == files
+
+        calls = spark.sparkContext.accumulator(0)
+
+        def _counted(i, calls=calls):
+            calls.add(1)
+            return i + 100
+
+        # the UDF computes the merge KEY, so every phase has to evaluate it
+        counted = F.udf(_counted, "long").asNondeterministic()
+        src = spark.range(50).select(
+            counted("id").alias("k"), F.lit(-1.0).alias("v")
+        )
+        merge_into_delta_native(spark, tbl, src, ["k"], **clauses)
+        assert calls.value == 50, name
+        got = read_delta(spark, tbl)
+        assert got.count() == rows, name
+        assert got.filter("v = -1.0").count() == 50, name
 
 
 def test_delta_txn_sink_exactly_once_and_checkpointed_txn(spark, tmp_path):

@@ -5,6 +5,7 @@ against this engine's native-expression equivalents."""
 from __future__ import annotations
 
 import math
+import struct
 
 import numpy as np
 import pytest
@@ -84,42 +85,51 @@ def test_circulant_mean_cov(spark):
     assert np.allclose(got.sum(axis=1), 0.0)
 
 
+_VOL_SCHEMA = "k string, vol_avg array<double>, vol_cov array<array<double>>"
+
+
+def _sampler_stats():
+    # d=5 as in the pipeline: a 2-D gemm's last-bit drift from the
+    # per-row matvec showed at d=5, never at d=3
+    x = np.random.default_rng(0).standard_normal((90, 5)) * 0.01
+    a = ([0.0] * 5, (np.eye(5) + 0.1 * np.eye(5, k=1)
+                     + 0.1 * np.eye(5, k=-1)).tolist())
+    return {
+        "a": a,
+        "a2": a,
+        "b": (x.mean(axis=0).tolist(), np.cov(x, rowvar=False).tolist()),
+        "zero": ([0.5, -1.0, 2.0, 0.0, -0.25], [[0.0] * 5] * 5),
+    }
+
+
+def _draw_bits(df):
+    return sorted(
+        (r.k, r.trial_id, struct.pack(f"{len(r.features)}d", *r.features))
+        for r in df.collect()
+    )
+
+
 def test_simulation_determinism(spark):
     # tests_spark.py:133-162 — same trial_id ⇒ identical draw across rows.
     # Every draw is also bit-equal to numpy's multivariate_normal recipe
     # for its seed, whatever the Arrow batch boundaries: two covariances
-    # with interleaved trial ids, plus a singular (all-zero) one whose
-    # draws must be the mean exactly.
+    # plus a singular (all-zero) one whose draws must be the mean
+    # exactly, and a run date ("a2") repeating another's stats.
     from pyspark.errors import PythonException
 
-    from value_at_risk_spark.montecarlo import simulate_market
+    from value_at_risk_spark.montecarlo import simulate_trials
 
-    # d=5 as in the pipeline: a 2-D gemm's last-bit drift from the
-    # per-row matvec showed at d=5, never at d=3
-    x = np.random.default_rng(0).standard_normal((90, 5)) * 0.01
-    stats = {
-        "a": ([0.0] * 5, (np.eye(5) + 0.1 * np.eye(5, k=1)
-                          + 0.1 * np.eye(5, k=-1)).tolist()),
-        "b": (x.mean(axis=0).tolist(), np.cov(x, rowvar=False).tolist()),
-        "zero": ([0.5, -1.0, 2.0, 0.0, -0.25], [[0.0] * 5] * 5),
-    }
-    rows = [
-        (k, *stats[k], t) for t in range(12) for k in ("a", "b", "zero")
-    ] + [("a", *stats["a"], 7)]
-    schema = (
-        "k string, vol_avg array<double>, vol_cov array<array<double>>, "
-        "trial_id long"
-    )
-    df = spark.createDataFrame(rows, schema).repartition(3)
+    stats = _sampler_stats()
+    vol = spark.createDataFrame(
+        [(k, *v) for k, v in stats.items()], _VOL_SCHEMA
+    ).repartition(3)
 
     def draws():
-        out = df.select(
-            "k", "trial_id",
-            simulate_market("vol_avg", "vol_cov", "trial_id").alias("f"),
-        ).collect()
-        return sorted((r.k, r.trial_id, tuple(r.f)) for r in out)
+        out = simulate_trials(vol, 12, date_col="k").collect()
+        return sorted((r.k, r.trial_id, tuple(r.features)) for r in out)
 
     default = draws()
+    assert len(default) == 12 * len(stats)
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     spark.conf.set(key, "2")
     try:
@@ -135,22 +145,45 @@ def test_simulation_determinism(spark):
         if k == "zero":
             assert f == tuple(avg)
     by_id = {(k, t): f for k, t, f in default}
-    sevens = [f for k, t, f in default if (k, t) == ("a", 7)]
-    assert sevens == [by_id["a", 7]] * 2
+    assert all(by_id["a", t] == by_id["a2", t] for t in range(12))
     assert by_id["a", 7] != by_id["a", 8]
     expected = np.random.default_rng(7).multivariate_normal(
         np.array(stats["a"][0]), np.array(stats["a"][1])
     )
     assert by_id["a", 7] == pytest.approx(tuple(expected))
 
-    ragged = spark.createDataFrame(
-        [("a", *stats["a"], 1), ("a", stats["a"][0], [[1.0] * 4] * 5, 2)],
-        schema,
+    avg, cov = stats["a"]
+    for bad in (
+        [("a", avg, cov), ("r", avg, [[1.0] * 4] * 5)],  # ragged
+        [("a", avg, cov), ("n", None, cov)],  # null
+    ):
+        with pytest.raises(PythonException, match="ValueError: simulate_trials"):
+            simulate_trials(
+                spark.createDataFrame(bad, _VOL_SCHEMA), 3, date_col="k"
+            ).collect()
+
+
+def test_simulate_trials_chunk_spine(spark):
+    """The trial-chunk spine decides only how the trials are cut, never
+    their values: 1 and 4 chunks give the same (date, trial_id,
+    feature bits) set; chunks left empty (runs < chunks) emit nothing,
+    and runs=0 emits no rows."""
+    from value_at_risk_spark.montecarlo import _sample, simulate_trials
+
+    stats = _sampler_stats()
+    vol = spark.createDataFrame(
+        [(k, *v) for k, v in stats.items()], _VOL_SCHEMA
     )
-    with pytest.raises(PythonException, match="ValueError: simulate_market"):
-        ragged.select(
-            simulate_market("vol_avg", "vol_cov", "trial_id")
-        ).collect()
+    one = _draw_bits(_sample(vol, 10, 1, "k"))
+    assert len(one) == 10 * len(stats)
+    assert _draw_bits(_sample(vol, 10, 4, "k")) == one
+    two = _draw_bits(_sample(vol, 2, 4, "k"))
+    assert [(k, t) for k, t, _ in two] == sorted(
+        (k, t) for k in stats for t in range(2)
+    )
+    assert two == [r for r in one if r[1] < 2]
+    assert simulate_trials(vol, 2, date_col="k").count() == 2 * len(stats)
+    assert simulate_trials(vol, 0, date_col="k").count() == 0
 
 
 def test_seed_frame(spark):
@@ -177,6 +210,107 @@ def test_predictor_algebra(spark):
     )
     out = df.select(predict_nonlinear("weights", "features").alias("p")).first().p
     assert out == pytest.approx((sum(feats) + 1) / 100)
+
+
+def _java_signum(x):
+    # Math.signum: NaN and signed zeros pass through
+    return x if x != x or x == 0.0 else math.copysign(1.0, x)
+
+
+def _ref_expand(xs, pow_):
+    """utils/var_utils.py:47-55 per factor, in Spark's double ops.
+    ``pow_(x, k)`` is Spark's POWER (``java.lang.StrictMath.pow``,
+    fdlibm), which is not always the correctly rounded result Python's
+    ``**`` gives: x**3 differed in the last bit on ~10% of random
+    inputs, and x**2 on a few."""
+    out = []
+    for x in xs:
+        if x is None:
+            out += [None] * 4
+        else:
+            s = _java_signum(x)
+            out += [x, s * pow_(x, 2), pow_(x, 3), s * math.sqrt(abs(x))]
+    return out
+
+
+def _ref_predict(ws, fs):
+    """utils/var_utils.py:58-62 as a left-to-right double fold:
+    products from 0.0, intercept last."""
+    if any(v is None for v in [*ws, *fs]):
+        return None
+    acc = 0.0
+    for w, f in zip(ws[1:], fs):
+        acc = acc + w * f
+    return acc + ws[0]
+
+
+def _bits(v):
+    if v is None or v != v:
+        return v if v is None else "nan"
+    return struct.pack("d", v)
+
+
+def test_predictor_sql_text_bit_parity(spark):
+    """The SQL-text expansion and predictor (``nonlinear_features`` /
+    ``predict_nonlinear`` with ``dim``, ``predict_expanded``) and the
+    HOF forms all equal a Python left-to-right double fold of the
+    reference semantics, bit for bit, on random rows plus NaN, ±Inf,
+    NULL, ±0.0 and a subnormal; the text forms take names only."""
+    from value_at_risk_spark.functions.features import predict_expanded
+
+    rng = np.random.default_rng(11)
+    d = 5
+    rows = [
+        (rng.standard_normal(4 * d + 1).tolist(),
+         (rng.standard_normal(d) * 10.0 ** rng.integers(-4, 2)).tolist())
+        for _ in range(2_000)
+    ]
+    w = rng.standard_normal(4 * d + 1).tolist()
+    for special in (float("nan"), float("inf"), float("-inf"), None,
+                    0.0, -0.0, 5e-324, -5e-324):
+        rows.append((w, [0.01, special, -0.02, 0.03, special]))
+    rows.append((w, [0.0, -0.0, 0.0, -0.0, 0.0]))
+    df = spark.createDataFrame(
+        rows, "weights array<double>, factors array<double>"
+    )
+    out = df.select(
+        "weights",
+        "factors",
+        nonlinear_features("factors", dim=d).alias("x"),
+        nonlinear_features("factors").alias("x_hof"),
+        predict_expanded("weights", "factors", d).alias("p"),
+    ).select(
+        "*",
+        predict_nonlinear("weights", "x", dim=4 * d).alias("p_dim"),
+        predict_nonlinear("weights", "x_hof").alias("p_hof"),
+    ).collect()
+    assert len(out) == len(rows)
+    # the POWER primitive, evaluated on its own for every factor value
+    xs = {_bits(x): x for _, f in rows for x in f if x is not None}
+    powers = {
+        _bits(r.x): {2: r.p2, 3: r.p3}
+        for r in spark.createDataFrame(
+            [(x,) for x in xs.values()], "x double"
+        ).selectExpr("x", "power(x, 2) AS p2", "power(x, 3) AS p3").collect()
+    }
+
+    def pow_(x, k):
+        return powers[_bits(x)][k]
+
+    for r in out:
+        want_x = _ref_expand(r.factors, pow_)
+        want_p = _bits(_ref_predict(r.weights, want_x))
+        assert [_bits(v) for v in r.x] == [_bits(v) for v in want_x]
+        assert [_bits(v) for v in r.x_hof] == [_bits(v) for v in want_x]
+        assert _bits(r.p) == want_p
+        assert _bits(r.p_dim) == want_p
+        assert _bits(r.p_hof) == want_p
+    with pytest.raises(TypeError):
+        predict_expanded(F.col("weights"), "factors", d)
+    with pytest.raises(TypeError):
+        nonlinear_features(F.col("factors"), dim=d)
+    with pytest.raises(TypeError):
+        predict_nonlinear("weights", F.col("x"), dim=4 * d)
 
 
 def test_count_breaches_and_zone(spark):

@@ -5408,10 +5408,14 @@ def test_cell_expr_sql_text_parity(spark, sf_dir):
 
 
 def test_hyperplane_buckets_sql_text_parity(spark, sf_dir):
-    """hyperplane_lsh_buckets' r16 SQL-text form (string column name)
-    is BIT-IDENTICAL to the Column-API builder (Column argument): the
-    rendered aggregate(zip_with(...)) is the same fold dot_product
-    emits, and plane literals round-trip via _lit_double_sql."""
+    """hyperplane_lsh_buckets' SQL-text builder equals a numpy
+    reference bit for bit: each plane's dot is a left-to-right double
+    fold from 0.0 (dot_product's HOF order), its sign sets bit b, and
+    the plane literals round-trip exactly via _lit_double_sql. A
+    Column operand raises TypeError (names only)."""
+    import numpy as np
+    import pytest
+
     from value_at_risk_spark.operators.similarity import (
         hyperplane_lsh_buckets,
     )
@@ -5420,29 +5424,35 @@ def test_hyperplane_buckets_sql_text_parity(spark, sf_dir):
         F.col("vec_id").cast("long").alias("_id"),
         F.col("embedding").cast("array<double>").alias("_v"),
     ).limit(300)
-    a = hyperplane_lsh_buckets(emb, "_v", dim=64, num_planes=16)
-    b = hyperplane_lsh_buckets(emb, F.col("_v"), dim=64, num_planes=16)
-    got = (
-        a.select("_id", F.col("bucket").alias("b_sql"))
-        .join(
-            b.select("_id", F.col("bucket").alias("b_col")), "_id"
-        )
+    got = {
+        r._id: (r._v, r.bucket)
+        for r in hyperplane_lsh_buckets(emb, "_v", dim=64, num_planes=16)
         .collect()
-    )
+    }
+    planes = np.random.default_rng(42).standard_normal((16, 64)).tolist()
     assert len(got) == 300
-    assert all(r.b_sql == r.b_col for r in got)
-    assert len({r.b_sql for r in got}) > 1  # planes actually split rows
+    for v, bucket in got.values():
+        want = 0
+        for b, plane in enumerate(planes):
+            acc = 0.0
+            for x, y in zip(v, plane):
+                acc = acc + x * y
+            want |= (1 << b) if acc > 0 else 0
+        assert bucket == want
+    assert len({b for _, b in got.values()}) > 1  # planes actually split rows
+    with pytest.raises(TypeError):
+        hyperplane_lsh_buckets(emb, F.col("_v"), dim=64, num_planes=16)
 
 
 def test_pq_decode_sql_text_parity(spark):
-    """The r16 SQL-text construction of the PQ reconstruction
-    (_pq_decode_sql via F.expr — one parse instead of m·ksub·sub py4j
-    round-trips, ~1.0 s -> ~6 ms of driver time per build) is
-    BIT-IDENTICAL to the Column-API builder it replaced, on an
-    adversarial codebook (subnormal-ish, large, and negative scales
-    per subspace) — string codes column -> SQL path, Column object ->
-    legacy path, exact double equality per component."""
+    """The SQL-text PQ reconstruction (_pq_decode_sql via F.expr — one
+    parse instead of m·ksub·sub py4j round-trips, ~1.0 s -> ~6 ms of
+    driver time per build) equals numpy's concatenation of each
+    subspace's centroid for its code, exact double equality per
+    component, on an adversarial codebook (subnormal-ish, large, and
+    negative scales per subspace). A Column operand raises TypeError."""
     import numpy as np
+    import pytest
 
     from value_at_risk_spark.operators.similarity import pq_decode_expr
 
@@ -5450,7 +5460,7 @@ def test_pq_decode_sql_text_parity(spark):
     cb = (
         rng.standard_normal((4, 16, 16))
         * np.array([1e-7, 1.0, 1e3, -1.0]).reshape(4, 1, 1)
-    ).tolist()
+    )
     codes = spark.range(500).select(
         F.col("id").alias("vec_id"),
         F.array(
@@ -5458,12 +5468,14 @@ def test_pq_decode_sql_text_parity(spark):
         ).alias("codes"),
     )
     got = codes.select(
-        pq_decode_expr(cb).alias("sqlform"),
-        pq_decode_expr(cb, F.col("codes")).alias("colform"),
+        "codes", pq_decode_expr(cb.tolist()).alias("dec")
     ).collect()
     assert len(got) == 500
     for r in got:
-        assert list(r.sqlform) == list(r.colform)
+        want = np.concatenate([cb[j, c] for j, c in enumerate(r.codes)])
+        assert list(r.dec) == want.tolist()
+    with pytest.raises(TypeError):
+        pq_decode_expr(cb.tolist(), F.col("codes"))
 
 
 def test_lit_double_sql_nonfinite_and_backticks(spark):

@@ -13,6 +13,7 @@ from value_at_risk_spark.plans.var_pipeline import (
     backtest,
     market_features,
     run_pipeline,
+    score_trials,
     stock_returns,
     trailing_volatility,
     train_models,
@@ -115,11 +116,12 @@ def test_pipeline_end_to_end(spark, fixtures):
     assert len(var) > 30  # weekly spine over a year
     assert all(r.var_99 < 0 for r in var)
     assert all(abs(r.var_99) < 0.5 for r in var)  # sane magnitude
-    # var comes from the fused plan; the staged reference path over the
-    # returned per-ticker scores must agree
+    # var comes from the fused plan; the staged reference path over
+    # per-ticker scores of the same simulations must agree
+    scored = score_trials(out["simulations"], out["weights"], len(FACTORS))
     staged = {
         r.date: (r.var_99, r.mean_return)
-        for r in aggregate_var(out["scored"], portfolio).collect()
+        for r in aggregate_var(scored, portfolio).collect()
     }
     assert set(staged) == {r.date for r in var}
     for r in var:
@@ -129,6 +131,48 @@ def test_pipeline_end_to_end(spark, fixtures):
     assert len(bt) > 0
     assert all(r.basel_zone in (0, 1, 2) for r in bt)
     assert all(r.breaches >= 0 for r in bt)
+
+
+# py4j round trips of one lazy run_pipeline build on these fixtures:
+# ~1,000-1,250 measured, plus ~25% headroom
+BUILD_ROUND_TRIPS_MAX = 1_550
+
+
+def test_pipeline_build_cost(spark, fixtures, monkeypatch):
+    """Building the lazy pipeline (both sim bounds given) runs no Spark
+    job and stays inside a py4j round-trip budget: plan construction
+    is driver time paid on every call."""
+    from py4j.clientserver import ClientServerConnection
+
+    stocks, indicators, portfolio = fixtures
+    cfg = VarConfig(runs=200, factor_cols=tuple(FACTORS))
+    sc = spark.sparkContext
+    group = "test_pipeline_build_cost"
+    calls = []
+    send = ClientServerConnection.send_command
+
+    def counted(self, *args, **kwargs):
+        calls.append(1)
+        return send(self, *args, **kwargs)
+
+    sc.setJobGroup(group, "lazy run_pipeline build")
+    try:
+        monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+        out = run_pipeline(
+            spark, stocks, indicators, portfolio, cfg,
+            sim_start="2020-03-01", sim_end="2020-12-01",
+        )
+        monkeypatch.undo()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        monkeypatch.undo()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert set(out) == {
+        "returns", "features", "volatility", "weights", "simulations",
+        "var", "backtest",
+    }
+    assert 100 < len(calls) <= BUILD_ROUND_TRIPS_MAX, len(calls)
 
 
 def test_pipeline_deterministic(spark, fixtures):

@@ -12,7 +12,7 @@ Design stance (see SURVEY.md §7):
   can optimize (predicate pushdown, column pruning, broadcast joins,
   whole-stage codegen).
 - Python crosses the JVM boundary only where genuinely required:
-  multivariate-normal sampling (an Arrow-batch ``arrow_udf``) and
+  multivariate-normal sampling (a trial-chunk ``mapInArrow`` kernel) and
   per-group OLS fits (applyInPandas). Every other reference UDF is
   re-expressed as native column expressions.
 - Array columns (``array<double>``) everywhere instead of VectorUDT so

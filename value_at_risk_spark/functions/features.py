@@ -7,15 +7,48 @@ Reference does both driver-side / inside a pyfunc model:
   (``/root/reference/utils/var_utils.py:58-62``, applied through an
   MLflow pyfunc Spark UDF at ``02_var_model.py:219-220``).
 
-Here both are native higher-order-function expressions: the scoring path
-is a broadcast join of a weights table + this expression — no model
-registry, no Python boundary, fully Catalyst-visible.
+Here both are native expressions: the scoring path is a broadcast join
+of a weights table + this expression — no model registry, no Python
+boundary, fully Catalyst-visible. When the factor count is known at
+plan-build time the expressions unroll and are rendered as SQL text
+(one ``F.expr`` parse, not one py4j round trip per term); otherwise
+they are higher-order functions over arrays of any width.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from value_at_risk_spark.functions.vector import _col_sql
+
+
+def _feature_terms_sql(factors: str, dim: int) -> list[str]:
+    """SQL text of the 4·dim expanded features of the column ``factors``
+    (read as ``F.col`` reads it), in the expansion's order."""
+    col = _col_sql(factors)
+    terms = []
+    for i in range(1, dim + 1):
+        x = f"element_at({col}, {i})"
+        terms += [
+            x,
+            f"signum({x}) * power({x}, 2)",
+            f"power({x}, 3)",
+            f"signum({x}) * sqrt(abs({x}))",
+        ]
+    return terms
+
+
+def _predict_sql(weights: str, terms: list[str]) -> str:
+    """SQL text of ``weights[0] + Σ weights[i+1]·terms[i]``, folded as
+    ``((0.0D + w[2]·t1) + …) + w[1]``: products accumulated from 0.0,
+    intercept added LAST — the HOF form's order, so both forms are
+    bit-identical (FP addition is non-associative)."""
+    w = _col_sql(weights)
+    acc = "0.0D"
+    for i, t in enumerate(terms, start=2):
+        acc = f"({acc} + element_at({w}, {i}) * ({t}))"
+    return f"{acc} + element_at({w}, 1)"
 
 
 def nonlinear_features(factors: Column | str, dim: int | None = None) -> Column:
@@ -28,20 +61,13 @@ def nonlinear_features(factors: Column | str, dim: int | None = None) -> Column:
     With ``dim`` (factor count known at plan-build time) the expansion
     unrolls to a flat ``array(...)`` constructor over ``element_at``
     terms — codegen-compiled, vs the interpreted ``flatten(transform)``
-    HOF form (same values, same order, same IEEE arithmetic).
+    HOF form (same values, same order, same IEEE arithmetic). The
+    unrolled form takes a column name (``_col_sql``); the HOF form
+    also takes a Column.
     """
-    factors = F.col(factors) if isinstance(factors, str) else factors
     if dim is not None:
-        terms = []
-        for i in range(1, dim + 1):
-            x = F.element_at(factors, i)
-            terms += [
-                x,
-                F.signum(x) * F.pow(x, 2),
-                F.pow(x, 3),
-                F.signum(x) * F.sqrt(F.abs(x)),
-            ]
-        return F.array(*terms)
+        return F.expr(f"array({', '.join(_feature_terms_sql(factors, dim))})")
+    factors = F.col(factors) if isinstance(factors, str) else factors
     return F.flatten(
         F.transform(
             factors,
@@ -68,20 +94,17 @@ def predict_nonlinear(
       ``element_at(w,i)·element_at(f,i)`` arithmetic, which whole-stage
       codegen compiles. Higher-order functions are interpreted per row
       in Spark — on the 30 M-row scoring stage the HOF form runs ~20×
-      slower than the unrolled form (measured: 291 s → 14 s).
+      slower than the unrolled form (measured: 291 s → 14 s). Both
+      operands are column names (``_col_sql``).
     - ``dim`` unknown: the generic ``aggregate(zip_with(...))`` HOF
       expression (correct for any width, interpreted).
     """
+    if dim is not None:
+        col = _col_sql(features)
+        terms = [f"element_at({col}, {i})" for i in range(1, dim + 1)]
+        return F.expr(_predict_sql(weights, terms))
     weights = F.col(weights) if isinstance(weights, str) else weights
     features = F.col(features) if isinstance(features, str) else features
-    if dim is not None:
-        # Same fold order as the HOF form below (products accumulated
-        # from 0.0, intercept added LAST): FP addition is non-associative,
-        # so matching the order keeps the two forms bit-identical.
-        acc: Column = F.lit(0.0)
-        for i in range(1, dim + 1):
-            acc = acc + F.element_at(weights, i + 1) * F.element_at(features, i)
-        return acc + F.element_at(weights, 1)
     tail = F.slice(weights, 2, F.size(weights) - 1)
     return (
         F.aggregate(
@@ -91,3 +114,11 @@ def predict_nonlinear(
         )
         + weights[0]
     )
+
+
+def predict_expanded(weights: str, factors: str, dim: int) -> Column:
+    """``predict_nonlinear(weights, nonlinear_features(factors, dim),
+    4·dim)`` as ONE expression: each expanded feature is written in
+    place as its term, not read back through ``element_at(array(…),
+    i)``. Same fold order, same values, one parse."""
+    return F.expr(_predict_sql(weights, _feature_terms_sql(factors, dim)))

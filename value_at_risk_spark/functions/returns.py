@@ -18,7 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window, WindowSpec
+
+from value_at_risk_spark.functions.vector import _col_sql
 
 
 def log_return(prev: Column | str, cur: Column | str) -> Column:
@@ -26,6 +27,28 @@ def log_return(prev: Column | str, cur: Column | str) -> Column:
     prev = F.col(prev) if isinstance(prev, str) else prev
     cur = F.col(cur) if isinstance(cur, str) else cur
     return F.log(cur / prev)
+
+
+def _log_returns_sql(
+    value_col: str,
+    partition_by: list[str] | None,
+    order_by: str,
+) -> str:
+    """SQL text of ``log_returns_over`` (column names read as ``F.col``
+    reads them), for callers that project many returns in one
+    ``selectExpr``."""
+    x = _col_sql(value_col)
+    part = (
+        f"PARTITION BY {', '.join(map(_col_sql, partition_by))} "
+        if partition_by
+        else ""
+    )
+    prev = f"coalesce(lag({x}, 1) OVER ({part}ORDER BY {_col_sql(order_by)}), {x})"
+    # try_divide: a zero previous price (possible at a GBM floor, or in
+    # dirty market data) yields a NULL return instead of an ANSI
+    # DIVIDE_BY_ZERO error; ln of a non-positive ratio is NULL too,
+    # so zero/negative *current* prices degrade the same way
+    return f"ln(try_divide({x}, {prev}))"
 
 
 def log_returns_over(
@@ -41,14 +64,4 @@ def log_returns_over(
     reproduces that first-row semantic exactly (SURVEY §7.5) while using
     the idiomatic ``lag``.
     """
-    w: WindowSpec
-    if partition_by:
-        w = Window.partitionBy(*partition_by).orderBy(order_by)
-    else:
-        w = Window.orderBy(order_by)
-    prev = F.coalesce(F.lag(value_col, 1).over(w), F.col(value_col))
-    # try_divide: a zero previous price (possible at a GBM floor, or in
-    # dirty market data) yields a NULL return instead of an ANSI
-    # DIVIDE_BY_ZERO error; F.log of a non-positive ratio is NULL too,
-    # so zero/negative *current* prices degrade the same way
-    return F.log(F.try_divide(F.col(value_col), prev))
+    return F.expr(_log_returns_sql(value_col, partition_by, order_by))

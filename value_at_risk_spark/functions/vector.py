@@ -186,6 +186,13 @@ def _col_sql(name: str) -> str:
     return ".".join("`" + p.replace("`", "``") + "`" for p in parts)
 
 
+def _name_sql(name: str) -> str:
+    """SQL text of an output name (an ``AS`` target): the whole string
+    is one identifier, as ``Column.alias`` takes it, with inner
+    backticks doubled."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _lit_double_sql(x) -> str:
     """A python float as a Spark SQL DOUBLE literal. ``repr`` emits the
     shortest round-trip decimal string and the SQL lexer's D-suffixed

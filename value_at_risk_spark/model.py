@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from value_at_risk_spark.functions.features import (
     nonlinear_features,
+    predict_expanded,
     predict_nonlinear,
 )
 
@@ -74,17 +75,20 @@ def score(
     time (the VaR pipeline always knows it): the expansion + dot
     product unroll to flat codegen arithmetic — ~20× faster than the
     interpreted HOF form on the wide scoring stage, bit-identical
-    output.
+    output — rendered as one SQL expression (``predict_expanded``).
+    ``feature_col`` is then read as a column name.
     """
-    if expand:
-        feats = nonlinear_features(feature_col, dim=n_factors)
-        pred_dim = 4 * n_factors if n_factors is not None else None
+    joined = df.join(F.broadcast(weights), on=group_col)
+    if n_factors is not None:
+        pred = (
+            predict_expanded("weights", feature_col, n_factors)
+            if expand
+            else predict_nonlinear("weights", feature_col, dim=n_factors)
+        )
     else:
-        feats = F.col(feature_col)
-        pred_dim = n_factors
-    return df.join(F.broadcast(weights), on=group_col).withColumn(
-        out_col, predict_nonlinear("weights", feats, dim=pred_dim)
-    )
+        feats = nonlinear_features(feature_col) if expand else feature_col
+        pred = predict_nonlinear("weights", feats)
+    return joined.withColumn(out_col, pred)
 
 
 def save_weights(weights: DataFrame, registry, name: str = "model_weights") -> None:

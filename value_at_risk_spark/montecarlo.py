@@ -12,11 +12,13 @@ Reproducibility contract (SURVEY §7.6, test-asserted by the reference at
 task retries, and speculative execution unchanged.
 
 Engine changes vs reference:
-- the per-row scalar UDF becomes an ``arrow_udf`` over whole record
-  batches: one SVD per distinct covariance, one generator per distinct
-  trial_id, one stacked matmul, no per-row Python;
-- the seed frame is generated distributed via ``spark.range`` (no
-  driver-side pandas lift);
+- the per-row scalar UDF becomes one ``mapInArrow`` kernel over a
+  trial-chunk spine: each (run date, chunk) row fans out to the
+  chunk's trials inside the kernel, with one SVD per row, one
+  generator per trial per batch and one stacked matmul, so Python
+  sees run dates × chunks rows instead of one row per (date, trial);
+- the chunk spine is generated distributed via ``spark.range`` (no
+  driver-side pandas lift), one chunk per partition;
 - the cross join broadcasts the small side explicitly.
 """
 
@@ -28,7 +30,13 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 
 def seed_frame(spark: SparkSession, runs: int) -> DataFrame:
@@ -36,9 +44,7 @@ def seed_frame(spark: SparkSession, runs: int) -> DataFrame:
     return spark.range(0, runs).select(F.col("id").alias("trial_id"))
 
 
-def _check_sampler_input(
-    vol_avg: pa.ListArray, vol_cov: pa.ListArray, trial_id: pa.Array
-) -> int:
+def _check_sampler_input(vol_avg: pa.ListArray, vol_cov: pa.ListArray) -> int:
     """The factor count d of a well-formed batch, else ``ValueError``.
 
     Flattening an Arrow list drops null entries, so a null anywhere
@@ -49,45 +55,38 @@ def _check_sampler_input(
     for name, arr in (
         ("vol_avg", vol_avg),
         ("vol_cov", vol_cov),
-        ("trial_id", trial_id),
         ("vol_avg element", vol_avg.flatten()),
         ("vol_cov row", cov_rows),
         ("vol_cov element", cov_rows.flatten()),
     ):
         if arr.null_count:
-            raise ValueError(f"simulate_market: null {name}")
+            raise ValueError(f"simulate_trials: null {name}")
     lengths = pc.list_value_length(vol_avg).to_numpy()
     d = int(lengths[0])
     if np.any(lengths != d):
-        raise ValueError(f"simulate_market: every vol_avg must have length {d}")
+        raise ValueError(f"simulate_trials: every vol_avg must have length {d}")
     if np.any(pc.list_value_length(vol_cov).to_numpy() != d) or np.any(
         pc.list_value_length(cov_rows).to_numpy() != d
     ):
-        raise ValueError(f"simulate_market: every vol_cov must be {d}x{d}")
+        raise ValueError(f"simulate_trials: every vol_cov must be {d}x{d}")
     return d
 
 
-@F.arrow_udf(ArrayType(DoubleType()))
-def simulate_market(
-    vol_avg: pa.Array, vol_cov: pa.Array, trial_id: pa.Array
-) -> pa.Array:
-    """One multivariate-normal draw per row, seeded by trial_id.
+def _chunk_sampler(runs: int, n_chunks: int, date_col: str):
+    """The ``mapInArrow`` kernel: every trial of a (run date, chunk) row.
 
-    Re-expression of ``simulate_market`` (utils/var_udf.py:57-67) over
-    whole Arrow batches, with the same per-row ``default_rng(seed)``
-    contract. numpy's ``multivariate_normal`` draws
-    ``mean + standard_normal(d) @ (sqrt(s)[:,None] * vh)`` after an SVD
-    of cov; this sampler computes exactly that, with no per-row Python:
+    Re-expression of ``simulate_market`` (utils/var_udf.py:57-67) with
+    the same per-trial ``default_rng(trial_id)`` contract. numpy's
+    ``multivariate_normal`` draws ``mean + standard_normal(d) @
+    (sqrt(s)[:,None] * vh)`` after an SVD of cov; per input row the
+    kernel computes exactly that for the chunk's m trials:
 
-    - the list offsets are flattened into ``(n, d)`` means and
-      ``(n, d, d)`` covariances (malformed rows raise ``ValueError``,
-      see ``_check_sampler_input``);
-    - one SVD per distinct covariance in the batch (one per run date);
-    - one ``default_rng(t).standard_normal(d)`` per distinct trial_id
-      in the batch — the vector depends on t alone, so every run date
-      of a trial shares it;
-    - the draws are one stacked matmul, ``(n,1,d) @ (n,d,d)``;
-    - the result is a ``ListArray`` built from offsets.
+    - one SVD of the row's covariance;
+    - one ``default_rng(t).standard_normal(d)`` per trial of the
+      chunk, drawn once per batch and reused by every run date in it
+      (the vector depends on t alone);
+    - the draws are one stacked matmul, ``(m,1,d) @ (m,d,d)``, emitted
+      as one record batch of (date, trial_id, features).
 
     Why the stacked matmul: its draws are bit-identical to the per-row
     ``z @ A`` matvec of the recipe above (pinned in
@@ -96,34 +95,64 @@ def simulate_market(
     different order and changed the last bit of most draws when tried
     (66,847 of 105,000 rows at d=5).
     """
-    n = len(trial_id)
-    if n == 0:
-        return pa.array([], pa.list_(pa.float64()))
-    d = _check_sampler_input(vol_avg, vol_cov, trial_id)
-    mean = vol_avg.flatten().to_numpy().reshape(n, d)
-    cov = vol_cov.flatten().flatten().to_numpy().reshape(n, d, d)
-    # distinct covariances keyed by their bytes (as a dict of
-    # cov.tobytes() would be): -0.0 and 0.0 stay distinct
-    _, first, cinv = np.unique(
-        cov.reshape(n, d * d).view(np.uint64),
-        axis=0,
-        return_index=True,
-        return_inverse=True,
+
+    def kernel(batches):
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
+                continue
+            vol_avg = batch.column("vol_avg")
+            vol_cov = batch.column("vol_cov")
+            d = _check_sampler_input(vol_avg, vol_cov)
+            mean = vol_avg.flatten().to_numpy().reshape(n, d)
+            cov = vol_cov.flatten().flatten().to_numpy().reshape(n, d, d)
+            dates = batch.column(date_col)
+            z_by_chunk: dict[int, np.ndarray] = {}
+            for i, chunk in enumerate(batch.column("_chunk").to_pylist()):
+                # trial ids [lo, hi): spark.range's own slicing, so
+                # chunk c holds the trials range partition c would hold
+                lo, hi = chunk * runs // n_chunks, (chunk + 1) * runs // n_chunks
+                m = hi - lo
+                if m <= 0:
+                    continue
+                if chunk not in z_by_chunk:
+                    z_by_chunk[chunk] = np.stack([
+                        np.random.default_rng(t).standard_normal(d)
+                        for t in range(lo, hi)
+                    ])
+                z = z_by_chunk[chunk]
+                _, s, vh = np.linalg.svd(cov[i])
+                a = np.broadcast_to(np.sqrt(s)[:, None] * vh, (m, d, d))
+                draws = (z[:, None, :] @ a)[:, 0, :] + mean[i]
+                offsets = pa.array(np.arange(0, (m + 1) * d, d, dtype=np.int32))
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        dates.take(pa.array(np.full(m, i))),
+                        pa.array(np.arange(lo, hi, dtype=np.int64)),
+                        pa.ListArray.from_arrays(offsets, pa.array(draws.ravel())),
+                    ],
+                    names=[date_col, "trial_id", "features"],
+                )
+
+    return kernel
+
+
+def _sample(
+    volatility: DataFrame, runs: int, n_chunks: int, date_col: str
+) -> DataFrame:
+    """``simulate_trials`` over an explicit chunk count (at least 1)."""
+    spark = volatility.sparkSession
+    chunks = spark.range(0, n_chunks, 1, n_chunks).select(
+        F.col("id").alias("_chunk")
     )
-    factors = []
-    for c in cov[first]:
-        _, s, vh = np.linalg.svd(c)
-        factors.append(np.sqrt(s)[:, None] * vh)
-    A = np.stack(factors)
-    seeds, tinv = np.unique(
-        trial_id.to_numpy(zero_copy_only=False), return_inverse=True
-    )
-    Z = np.stack(
-        [np.random.default_rng(int(t)).standard_normal(d) for t in seeds]
-    )
-    draws = (Z[tinv][:, None, :] @ A[cinv])[:, 0, :] + mean
-    offsets = pa.array(np.arange(0, (n + 1) * d, d, dtype=np.int32))
-    return pa.ListArray.from_arrays(offsets, pa.array(draws.ravel()))
+    vol = volatility.select(date_col, "vol_avg", "vol_cov")
+    fan = chunks.crossJoin(F.broadcast(vol))
+    schema = StructType([
+        vol.schema[date_col],
+        StructField("trial_id", LongType(), False),
+        StructField("features", ArrayType(DoubleType()), False),
+    ])
+    return fan.mapInArrow(_chunk_sampler(runs, n_chunks, date_col), schema)
 
 
 def simulate_trials(
@@ -133,36 +162,30 @@ def simulate_trials(
 ) -> DataFrame:
     """volatility (date, vol_avg, vol_cov) × trials → simulated market states.
 
-    03_var_monte_carlo.py:55-87 re-expressed: cross join against the
-    seed spine, then the batch sampler ``simulate_market``. Output:
-    (date, trial_id, features).
+    03_var_monte_carlo.py:55-87 re-expressed. Output: one
+    (date, trial_id, features) row per run date and trial 0..runs-1.
 
-    The SEED spine is the stream side and the volatility frame is the
+    The trials are cut into ``defaultParallelism`` chunks (at most
+    ``runs``), one ``spark.range`` partition each, and the chunk spine
+    is crossed with the broadcast volatility; the ``mapInArrow``
+    kernel ``_chunk_sampler`` then emits every trial of each
+    (date, chunk) row. Python receives dates × chunks rows, not
+    dates × trials, and the dates × trials fan-out happens inside the
+    kernel.
+
+    The chunk spine is the stream side and the volatility frame the
     broadcast side (r16, guide §2.6/§4 — the gbm_price_paths pattern):
-    volatility is one small-ish row per run date, but it arrives as the
-    output of an aggregation that AQE coalesces to ONE partition, so
-    keeping it on the stream side serializes the entire dates×trials
-    Python stage onto a single task (measured 4.0-5.9 s vs 0.9-1.7 s
-    at 343 dates × 500 trials on local[32]). ``spark.range`` partitions
-    the seed spine evenly across defaultParallelism tasks, so the flip
-    parallelizes the Python stage with ZERO extra shuffle; per-row draws
-    are seeded by trial_id alone, so values are partition-independent
-    (the reproducibility contract above).
-
-    The nested-loop join emits every date of one trial before the next
-    trial, so an Arrow batch holds whole runs of a trial: the sampler
-    builds one generator per trial (not per row) and one SVD factor
-    per date in each batch. Batch boundaries only decide how often that
-    work repeats, never the values.
+    volatility arrives as the output of an aggregation that AQE
+    coalesces to ONE partition, so keeping it on the stream side would
+    serialize the whole sampler onto a single task. One chunk per
+    partition spreads it across defaultParallelism tasks with no
+    shuffle. Each trial is seeded by its trial_id alone, so the chunk
+    count and the batch boundaries only decide how often a generator
+    or an SVD is rebuilt, never the values.
     """
     spark = volatility.sparkSession
-    seeds = seed_frame(spark, runs)
-    fan = seeds.crossJoin(F.broadcast(volatility))
-    return fan.select(
-        date_col,
-        "trial_id",
-        simulate_market("vol_avg", "vol_cov", "trial_id").alias("features"),
-    )
+    n_chunks = max(1, min(spark.sparkContext.defaultParallelism, runs))
+    return _sample(volatility, runs, n_chunks, date_col)
 
 
 def pack_trials(
@@ -207,7 +230,7 @@ def gbm_price_paths(
     grouped fan-out — instruments × path seeds — with one Arrow-batched
     pandas UDF emitting the full path per row as an array. Per-row seed
     = hash(instrument, path_id) for the same reproducibility contract
-    as simulate_market.
+    as simulate_trials.
 
     Matches the reference's numerics: path length ``days`` with an
     unshocked ``s0`` first element, ``days-1`` shocks at ``dt = 1/days``

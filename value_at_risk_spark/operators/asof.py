@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from value_at_risk_spark.functions.timeutil import epoch_seconds
+from value_at_risk_spark.functions.vector import _col_sql, _name_sql
 
 
 def asof_join(
@@ -49,46 +50,44 @@ def asof_join(
     Every right column except the ``by`` keys comes back ``prefix``-ed
     (including the right timestamp, as ``right_<ts>`` — matching tempo's
     output consumed at e.g. 02_var_model.py:105-110).
+
+    The projections and the window are SQL text (one parse each, not
+    one py4j round trip per column); ``unionByName`` fills each side's
+    missing columns with typed NULLs.
     """
     by = by or []
     right_on = right_on or on
 
     left_cols = left.columns
     payload_cols = [c for c in right.columns if c not in by and c != right_on]
-    p_ts = f"{prefix}{right_on}"
-    p_payload = [f"{prefix}{c}" for c in payload_cols]
+    filled_cols = [f"{prefix}{c}" for c in [right_on, *payload_cols]]
 
-    lhs = left.select(
-        *[F.col(c) for c in left_cols],
-        F.lit(1).alias("_side"),
-        F.col(on).alias("_asof_ts"),
-        F.lit(None).cast(right.schema[right_on].dataType).alias(p_ts),
+    lhs = left.selectExpr(
+        *[_col_sql(c) for c in left_cols],
+        "1 AS _side",
+        f"{_col_sql(on)} AS _asof_ts",
+    )
+    rhs = right.selectExpr(
+        *[_col_sql(c) for c in by],
+        "0 AS _side",
+        f"{_col_sql(right_on)} AS _asof_ts",
         *[
-            F.lit(None).cast(right.schema[c].dataType).alias(f"{prefix}{c}")
-            for c in payload_cols
+            f"{_col_sql(c)} AS {_name_sql(f'{prefix}{c}')}"
+            for c in [right_on, *payload_cols]
         ],
     )
-    rhs = right.select(
-        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in left_cols if c not in by],
-        *[F.col(c) for c in by],
-        F.lit(0).alias("_side"),
-        F.col(right_on).alias("_asof_ts"),
-        F.col(right_on).alias(p_ts),
-        *[F.col(c).alias(f"{prefix}{c}") for c in payload_cols],
-    )
-
-    unioned = lhs.unionByName(rhs)
+    unioned = lhs.unionByName(rhs, allowMissingColumns=True)
+    part = f"PARTITION BY {', '.join(map(_col_sql, by))} " if by else ""
     w = (
-        (Window.partitionBy(*by) if by else Window.partitionBy())
-        .orderBy("_asof_ts", "_side")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        f"OVER ({part}ORDER BY _asof_ts, _side "
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
     )
-    filled = unioned.select(
-        *[F.col(c) for c in left_cols],
-        F.col("_side"),
-        *[F.last(c, ignorenulls=True).over(w).alias(c) for c in [p_ts, *p_payload]],
+    filled = unioned.selectExpr(
+        *[_col_sql(c) for c in left_cols],
+        "_side",
+        *[f"last({_name_sql(c)}, true) {w} AS {_name_sql(c)}" for c in filled_cols],
     )
-    return filled.filter(F.col("_side") == 1).drop("_side")
+    return filled.filter("_side = 1").drop("_side")
 
 
 def asof_join_bucketed(

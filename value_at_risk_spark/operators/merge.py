@@ -409,6 +409,17 @@ def merge_into_delta_native(
             if committed is not None and int(txn["version"]) <= committed:
                 return -1
         read_v = snap0.version
+        # every path below reads the source more than once (the stats
+        # probe, the touched-file scan and the rewrite; the upsert's
+        # anti-join and union; the clause engine's join and its cdc
+        # branches): materialize it ONCE per MERGE, so a
+        # non-deterministic source cannot hand them different rows
+        # (duplicate keys, lost updates — why delta-spark materializes
+        # MERGE sources too). Reused across this call's conflict
+        # retries.
+        if not materialized:
+            deduped = deduped.localCheckpoint(eager=True)
+            materialized = True
         # File-level pruning (r17, guide §6 — the delete/update DML
         # paths' edge applied to MERGE): without by-source clauses a
         # merge can only change target rows whose KEY appears in the
@@ -457,16 +468,6 @@ def merge_into_delta_native(
             # Single-file tables skip both phases outright.
             touched = list(candidates)
             if len(candidates) > 1:
-                # the stats probe, the touched-file scan and the
-                # rewrite (or the fallback overwrite) each read the
-                # source: materialize it ONCE per MERGE, so a
-                # non-deterministic source cannot hand the phases
-                # different rows (duplicate keys, lost updates — why
-                # delta-spark materializes MERGE sources too). Reused
-                # across this call's conflict retries.
-                if not materialized:
-                    deduped = deduped.localCheckpoint(eager=True)
-                    materialized = True
                 k0 = keys[0]
                 b = deduped.agg(
                     F.min(k0).alias("mn"), F.max(k0).alias("mx")

@@ -98,32 +98,21 @@ def hyperplane_lsh_buckets(
     """
     rng = np.random.default_rng(seed)
     planes = rng.standard_normal((num_planes, dim))
-    if isinstance(vec_col, str):
-        # r16: one SQL parse instead of planes x dim py4j round-trips
-        # (same construction-cost argument as _cell_dists_sql; the
-        # parsed tree is the identical fold/compare expression)
-        terms = " | ".join(
-            "CAST(CASE WHEN aggregate(zip_with({v}, {arr}, "
-            "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, "
-            "(acc, x) -> acc + x) > 0 THEN {bit} ELSE 0 END AS BIGINT)"
-            .format(
-                v=_col_sql(vec_col),
-                arr=_array1_sql(planes[b]),
-                bit=1 << b,
-            )
-            for b in range(num_planes)
+    # r16: one SQL parse instead of planes x dim py4j round-trips (same
+    # construction-cost argument as _cell_dists_sql); each plane's dot
+    # is dot_product's HOF fold, rendered as text
+    terms = " | ".join(
+        "CAST(CASE WHEN aggregate(zip_with({v}, {arr}, "
+        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, "
+        "(acc, x) -> acc + x) > 0 THEN {bit} ELSE 0 END AS BIGINT)"
+        .format(
+            v=_col_sql(vec_col),
+            arr=_array1_sql(planes[b]),
+            bit=1 << b,
         )
-        return df.withColumn(
-            "bucket", F.expr(f"CAST(0 AS BIGINT) | {terms}")
-        )
-    bucket = F.lit(0).cast("long")
-    for b in range(num_planes):
-        plane = F.array(*[F.lit(float(x)) for x in planes[b]])
-        bit = F.when(dot_product(vec_col, plane) > 0, F.lit(1 << b)).otherwise(
-            F.lit(0)
-        ).cast("long")
-        bucket = bucket.bitwiseOR(bit)
-    return df.withColumn("bucket", bucket)
+        for b in range(num_planes)
+    )
+    return df.withColumn("bucket", F.expr(f"CAST(0 AS BIGINT) | {terms}"))
 
 
 def lsh_topk(
@@ -1671,37 +1660,17 @@ def _pq_decode_sql(
     return f"concat({parts})"
 
 
-def pq_decode_expr(codebooks: list[list[list[float]]], codes_col="codes"):
+def pq_decode_expr(codebooks: list[list[list[float]]], codes_col: str = "codes"):
     """Reconstruction expression: concatenate each subspace's centroid
     for the stored code — codebooks enter the plan as literal arrays
     (broadcast with the plan, tiny), lookup is ``element_at``.
 
-    r16: for string column names the m·ksub·sub literal tree is built
-    as ONE SQL string (the ``_cell_dists_sql`` construction-cost
+    r16: the m·ksub·sub literal tree is built as ONE SQL string (the ``_cell_dists_sql`` construction-cost
     argument — ~1,000 ``F.lit`` py4j round-trips measured ~0.6 s of
     pure driver time PER build, and pq/ivfpq/opq queries build it
-    twice per call); identical values, parity pytest-pinned
-    (test_pq_decode_sql_text_parity). Column-object callers keep the
-    legacy builder."""
-    if isinstance(codes_col, str):
-        return F.expr(_pq_decode_sql(codebooks, codes_col))
-    cb_lits = [
-        F.array(
-            *[
-                F.array(*[F.lit(float(x)) for x in cent])
-                for cent in codebooks[j]
-            ]
-        )
-        for j in range(len(codebooks))
-    ]
-    return F.concat(
-        *[
-            F.element_at(
-                cb_lits[j], F.element_at(codes_col, j + 1) + 1
-            )
-            for j in range(len(codebooks))
-        ]
-    )
+    twice per call); the codes column is a name (``_col_sql``),
+    pytest-pinned against numpy (test_pq_decode_sql_text_parity)."""
+    return F.expr(_pq_decode_sql(codebooks, codes_col))
 
 
 def pq_topk(

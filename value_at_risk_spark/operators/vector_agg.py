@@ -22,6 +22,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from value_at_risk_spark.functions.vector import _col_sql, _name_sql
+
+
+def _exprs(*sql: str) -> list[Column]:
+    """Aggregate expressions from SQL text, one parse each."""
+    return [F.expr(e) for e in sql]
+
 
 def vector_sum(
     df: DataFrame,
@@ -54,17 +61,14 @@ def vector_sum_zipwith(
     out_col: str = "vec_sum",
 ) -> DataFrame:
     """Element-wise sum via fold over collect_list (array-at-a-time form)."""
-    first_elem = F.element_at(F.col("_vecs"), 1)
-    zero = F.transform(first_elem, lambda _: F.lit(0.0))
-    folded = F.aggregate(
-        F.col("_vecs"),
-        zero,
-        lambda acc, v: F.zip_with(acc, v, lambda a, b: a + b.cast("double")),
+    folded = (
+        "aggregate(_vecs, transform(element_at(_vecs, 1), _e -> 0.0D), "
+        "(_acc, _v) -> zip_with(_acc, _v, (_a, _b) -> _a + CAST(_b AS DOUBLE)))"
     )
     return (
         df.groupBy(*group_cols)
         .agg(F.collect_list(vec_col).alias("_vecs"))
-        .select(*group_cols, folded.alias(out_col))
+        .selectExpr(*map(_col_sql, group_cols), f"{folded} AS {_name_sql(out_col)}")
     )
 
 
@@ -100,45 +104,38 @@ def vector_mean_cov(
     ``F.array`` of the factor columns, never null and always the same
     width (a null element still makes its cells, so it is counted).
     """
-    pairs = df.select(
-        *group_cols,
-        F.posexplode(vec_col).alias("_i", "_xi"),
-        F.col(vec_col).alias("_vec"),
-    ).select(
-        *group_cols,
-        "_i",
-        "_xi",
-        F.posexplode("_vec").alias("_j", "_xj"),
-    )
-    n_aggs = [F.count(F.lit(1)).alias("_vmc_n")] if count_col else []
+    g = [_col_sql(c) for c in group_cols]
+    pairs = df.selectExpr(
+        *g,
+        f"posexplode({_col_sql(vec_col)}) AS (_i, _xi)",
+        f"{_col_sql(vec_col)} AS _vec",
+    ).selectExpr(*g, "_i", "_xi", "posexplode(_vec) AS (_j, _xj)")
+    n_agg = ["count(1) AS _vmc_n"] if count_col else []
+    n_min = ["min(_vmc_n) AS _vmc_n"] if count_col else []
     stats = pairs.groupBy(*group_cols, "_i", "_j").agg(
-        F.avg("_xi").alias("_mean_i"),
-        F.covar_samp("_xi", "_xj").alias("_cov_ij"),
-        *n_aggs,
+        *_exprs("avg(_xi) AS _mean_i", "covar_samp(_xi, _xj) AS _cov_ij", *n_agg)
     )
-    n_rollup1 = [F.min("_vmc_n").alias("_vmc_n")] if count_col else []
     rows = stats.groupBy(*group_cols, "_i").agg(
-        F.min("_mean_i").alias("_mean_i"),
-        F.array_sort(F.collect_list(F.struct("_j", "_cov_ij"))).alias("_cr"),
-        *n_rollup1,
+        *_exprs(
+            "min(_mean_i) AS _mean_i",
+            "array_sort(collect_list(struct(_j, _cov_ij))) AS _cr",
+            *n_min,
+        )
     )
-    n_rollup2 = [F.min("_vmc_n").alias("_vmc_n")] if count_col else []
-    n_out = [F.col("_vmc_n").alias(count_col)] if count_col else []
+    n_out = [f"_vmc_n AS {_name_sql(count_col)}"] if count_col else []
     return (
         rows.groupBy(*group_cols)
         .agg(
-            F.array_sort(
-                F.collect_list(F.struct("_i", "_mean_i", F.col("_cr")))
-            ).alias("_m"),
-            *n_rollup2,
+            *_exprs(
+                "array_sort(collect_list(struct(_i, _mean_i, _cr))) AS _m",
+                *n_min,
+            )
         )
-        .select(
-            *group_cols,
-            F.transform(F.col("_m"), lambda x: x["_mean_i"]).alias(mean_col),
-            F.transform(
-                F.col("_m"),
-                lambda x: F.transform(x["_cr"], lambda c: c["_cov_ij"]),
-            ).alias(cov_col),
+        .selectExpr(
+            *g,
+            f"transform(_m, _r -> _r._mean_i) AS {_name_sql(mean_col)}",
+            "transform(_m, _r -> transform(_r._cr, _c -> _c._cov_ij)) "
+            f"AS {_name_sql(cov_col)}",
             *n_out,
         )
     )

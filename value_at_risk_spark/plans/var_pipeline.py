@@ -30,14 +30,22 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from value_at_risk_spark.functions.features import nonlinear_features
-from value_at_risk_spark.functions.returns import log_returns_over
+from value_at_risk_spark.functions.features import (
+    nonlinear_features,
+    predict_expanded,
+    predict_nonlinear,
+)
+from value_at_risk_spark.functions.returns import _log_returns_sql
 from value_at_risk_spark.functions.risk import basel_zone, value_at_risk_expr
 from value_at_risk_spark.functions.timeutil import epoch_seconds
+from value_at_risk_spark.functions.vector import _col_sql, _name_sql
 from value_at_risk_spark.model import fit_ols_per_group, score
 from value_at_risk_spark.montecarlo import simulate_trials
 from value_at_risk_spark.operators.asof import asof_join
-from value_at_risk_spark.operators.vector_agg import vector_mean_cov
+from value_at_risk_spark.operators.vector_agg import (
+    vector_mean_cov,
+    vector_sum_zipwith,
+)
 
 
 @dataclass(frozen=True)
@@ -56,10 +64,10 @@ def stock_returns(stocks: DataFrame) -> DataFrame:
 
     First row per ticker returns 0.0 (reference W3 semantics, SURVEY §7.5).
     """
-    return stocks.filter(F.col("close").isNotNull()).select(
+    return stocks.filter("close IS NOT NULL").selectExpr(
         "ticker",
         "date",
-        log_returns_over("close", ["ticker"], "date").alias("return"),
+        f"{_log_returns_sql('close', ['ticker'], 'date')} AS `return`",
     )
 
 
@@ -71,14 +79,16 @@ def market_features(indicators: DataFrame, factor_cols: list[str]) -> DataFrame:
     packing, no driver round-trip. Direction standardized to
     log(cur/prev) (SURVEY §7.4).
     """
-    rets = indicators.select(
+    rets = indicators.selectExpr(
         "date",
         *[
-            log_returns_over(c, None, "date").alias(c)
+            f"{_log_returns_sql(c, None, 'date')} AS {_name_sql(c)}"
             for c in factor_cols
         ],
     )
-    return rets.select("date", F.array(*factor_cols).alias("features"))
+    return rets.selectExpr(
+        "date", f"array({', '.join(map(_col_sql, factor_cols))}) AS features"
+    )
 
 
 def trailing_volatility(
@@ -98,24 +108,16 @@ def trailing_volatility(
     the exact range predicate as a post-filter. Shuffle-hash/broadcast
     instead of a nested-loop — linear fan-out at any history size.
     """
-    cur = features_df.select(
-        F.col("date").alias("_cd"),
-        F.explode(
-            F.array(
-                F.floor(F.unix_date(F.col("date").cast("date")) / days),
-                F.floor(F.unix_date(F.col("date").cast("date")) / days) - 1,
-            )
-        ).alias("_bk"),
+    bucket = f"floor(unix_date(CAST(date AS DATE)) / {int(days)})"
+    cur = features_df.selectExpr(
+        "date AS _cd", f"explode(array({bucket}, {bucket} - 1)) AS _bk"
     )
-    hist = features_df.select(
-        F.col("date").alias("_hd"),
-        F.floor(F.unix_date(F.col("date").cast("date")) / days).alias("_bk"),
-        F.col("features").alias("features"),
+    hist = features_df.selectExpr("date AS _hd", f"{bucket} AS _bk", "features")
+    joined = (
+        cur.join(hist, "_bk")
+        .filter(f"_hd >= date_sub(_cd, {int(days)}) AND _hd <= _cd")
+        .drop("_bk")
     )
-    joined = cur.join(hist, "_bk").filter(
-        (F.col("_hd") >= F.date_sub(F.col("_cd"), days))
-        & (F.col("_hd") <= F.col("_cd"))
-    ).drop("_bk")
     # one pass (r17, guide §2.4): the row count rides the mean/cov
     # aggregation (count_col) instead of a second groupBy over the
     # SAME bucket join — lazily, the explode+join subtree executed
@@ -123,8 +125,8 @@ def trailing_volatility(
     stats = vector_mean_cov(joined, ["_cd"], "features", count_col="_n")
     return (
         stats
-        .filter(F.col("_n") > 1)  # size>1 guard, 01_var_market_etl.py:177
-        .select(F.col("_cd").alias("date"), "vol_avg", "vol_cov")
+        .filter("_n > 1")  # size>1 guard, 01_var_market_etl.py:177
+        .selectExpr("_cd AS date", "vol_avg", "vol_cov")
     )
 
 
@@ -141,7 +143,7 @@ def train_models(
         stock_rets = stock_rets.filter(F.col("date") < F.lit(model_cut))
         features_df = features_df.filter(F.col("date") < F.lit(model_cut))
     joined = asof_join(stock_rets, features_df, on="date")
-    training = joined.filter(F.col("right_features").isNotNull()).select(
+    training = joined.filter("right_features IS NOT NULL").select(
         "ticker",
         "return",
         nonlinear_features("right_features").alias("x"),
@@ -160,7 +162,7 @@ def run_date_spine(
             to_date('{start}'), to_date('{end}'),
             interval {step_days} days)) AS run_date
         """
-    ).select(F.col("run_date").cast("timestamp").alias("run_date"))
+    ).selectExpr("CAST(run_date AS TIMESTAMP) AS run_date")
 
 
 def simulate(
@@ -172,11 +174,9 @@ def simulate(
     """
     vol_at = asof_join(
         run_dates, volatility, on="run_date", right_on="date"
-    ).filter(F.col("right_vol_avg").isNotNull())
-    vol = vol_at.select(
-        F.col("run_date").alias("date"),
-        F.col("right_vol_avg").alias("vol_avg"),
-        F.col("right_vol_cov").alias("vol_cov"),
+    ).filter("right_vol_avg IS NOT NULL")
+    vol = vol_at.selectExpr(
+        "run_date AS date", "right_vol_avg AS vol_avg", "right_vol_cov AS vol_cov"
     )
     return simulate_trials(vol, runs=runs)
 
@@ -253,31 +253,31 @@ def backtest(
     actual = (
         stock_rets.join(F.broadcast(portfolio), "ticker")
         .groupBy(*keys, "date")
-        .agg(F.sum(F.col("return") * F.col("weight")).alias("return"))
+        .agg(F.expr("sum(`return` * weight) AS `return`"))
     )
     joined = asof_join(
         actual,
         var_series.select(*keys, "date", "var_99"),
         on="date",
         by=keys,
-    ).filter(F.col("right_var_99").isNotNull())
-    from pyspark.sql.window import Window
-
-    w = (
-        Window.partitionBy(*[F.col(k) for k in keys])
-        .orderBy(epoch_seconds("date"))
-        .rangeBetween(-basel_days * 86_400, 0)
+    ).filter("right_var_99 IS NOT NULL")
+    ks = [_col_sql(k) for k in keys]
+    part = f"PARTITION BY {', '.join(ks)} " if keys else ""
+    breaches = (
+        "sum(CASE WHEN `return` <= right_var_99 THEN 1 ELSE 0 END) "
+        f"OVER ({part}ORDER BY _es "
+        f"RANGE BETWEEN {int(basel_days) * 86_400} PRECEDING AND CURRENT ROW)"
     )
-    breaches = F.sum(
-        F.when(F.col("return") <= F.col("right_var_99"), 1).otherwise(0)
-    ).over(w)
-    return joined.select(
-        *keys,
-        "date",
-        "return",
-        F.col("right_var_99").alias("var_99"),
-        breaches.alias("breaches"),
-        basel_zone(breaches).alias("basel_zone"),
+    return (
+        joined.withColumn("_es", epoch_seconds("date"))
+        .selectExpr(
+            *ks,
+            "date",
+            "`return`",
+            "right_var_99 AS var_99",
+            f"{breaches} AS breaches",
+        )
+        .withColumn("basel_zone", basel_zone("breaches"))
     )
 
 
@@ -294,14 +294,17 @@ def run_pipeline(
 ) -> dict[str, DataFrame]:
     """End-to-end: ETL → volatility → models → simulate → VaR → backtest.
 
+    Returns the frames ``returns``, ``features``, ``volatility``,
+    ``weights``, ``simulations``, ``var`` and ``backtest``.
+
     ``var`` comes from ``aggregate_var_fused``: the per-ticker models
     and the portfolio sum are both linear, so the portfolio weights are
     folded into one weight vector and each simulated state is scored
     once, not once per ticker (dates × trials × tickers rows, and the
-    shuffle of their per-trial sums, never exist). ``scored`` is still
-    returned, as the lazy ``score_trials`` frame, for callers that want
-    per-ticker returns; no job runs for it unless it is read.
-    ``score_trials`` → ``aggregate_var`` remains the reference path
+    shuffle of their per-trial sums, never exist). Per-ticker returns
+    are not built here: callers that want them call
+    ``score_trials(out["simulations"], out["weights"], n_factors)``,
+    and ``score_trials`` → ``aggregate_var`` remains the reference path
     the fused plan is tested against.
 
     The run-date spine spans ``sim_start``..``sim_end``. Only when one
@@ -322,7 +325,7 @@ def run_pipeline(
       plan;
     - ``var_series`` (one row per run date): the backtest as-of union
       references it twice — the entire simulate→aggregate chain
-      (incl. the Monte-Carlo arrow UDF) executed twice.
+      (incl. the Monte-Carlo Arrow kernel) executed twice.
 
     localCheckpoint, never persist: blocks tie to these DataFrames'
     RDD identity, so a fresh run_pipeline call recomputes from source
@@ -359,7 +362,6 @@ def run_pipeline(
         "volatility": vol,
         "weights": weights,
         "simulations": sims,
-        "scored": score_trials(sims, weights, n_factors=n_factors),
         "var": var_series,
         "backtest": compliance,
     }
@@ -386,14 +388,11 @@ def fused_portfolio_weights(
     MLflow pyfunc (03_var_monte_carlo.py:98-109), so the linearity is
     invisible to its planner.
     """
-    from value_at_risk_spark.functions.vector import scale_vector
-    from value_at_risk_spark.operators.vector_agg import vector_sum_zipwith
-
     group_cols = group_cols or []
-    j = weights.join(portfolio, "ticker").select(
-        *group_cols,
-        F.lit(1).alias("_g"),
-        scale_vector("weights", "weight").alias("_wv"),
+    j = weights.join(portfolio, "ticker").selectExpr(
+        *map(_col_sql, group_cols),
+        "1 AS _g",
+        "transform(weights, _x -> _x * weight) AS _wv",
     )
     combined = vector_sum_zipwith(j, [*group_cols, "_g"], "_wv", out_col="weights")
     return combined.drop("_g")
@@ -416,24 +415,15 @@ def aggregate_var_fused(
     portfolio slice with the pre-combined weights — no per-ticker
     fan-out, no 30 M-row shuffle.
     """
-    from value_at_risk_spark.functions.features import (
-        nonlinear_features,
-        predict_nonlinear,
-    )
-
     group_cols = group_cols or []
     gw = fused_portfolio_weights(weights, portfolio, group_cols)
     fan = sims.crossJoin(F.broadcast(gw))
-    port = fan.select(
-        "date",
-        *group_cols,
-        "trial_id",
-        predict_nonlinear(
-            "weights",
-            nonlinear_features("features", dim=n_factors),
-            dim=(4 * n_factors if n_factors is not None else None),
-        ).alias("_pr"),
+    pred = (
+        predict_expanded("weights", "features", n_factors)
+        if n_factors is not None
+        else predict_nonlinear("weights", nonlinear_features("features"))
     )
+    port = fan.select("date", *group_cols, "trial_id", pred.alias("_pr"))
     return port.groupBy("date", *group_cols).agg(
         value_at_risk_expr("_pr", confidence, approximate).alias("var_99"),
         F.avg("_pr").alias("mean_return"),

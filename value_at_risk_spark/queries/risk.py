@@ -507,7 +507,7 @@ def mc_simulate_market(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Monte-Carlo market simulation (F12 + J1; 03_var_monte_carlo.py:55-87):
     5-factor daily return vectors (one per priority series) → global
     mean/cov (A8, covar_samp semantics) → 1,000 seeded multivariate-
-    normal trials via an Arrow-batch arrow UDF, ORACLE-pinned on
+    normal trials via the trial-chunk Arrow kernel, ORACLE-pinned on
     trials 0/1/2: the per-trial seed contract (montecarlo.py — trial t
     is bit-identical to numpy default_rng(t)) makes each trial a pure
     function of (market stats, trial_id), so the sampled rows are
