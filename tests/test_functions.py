@@ -251,11 +251,11 @@ def _bits(v):
 
 
 def test_predictor_sql_text_bit_parity(spark):
-    """The SQL-text expansion and predictor (``nonlinear_features`` /
-    ``predict_nonlinear`` with ``dim``, ``predict_expanded``) and the
-    HOF forms all equal a Python left-to-right double fold of the
-    reference semantics, bit for bit, on random rows plus NaN, ±Inf,
-    NULL, ±0.0 and a subnormal; the text forms take names only."""
+    """The SQL-text predictor (``predict_expanded``) and the HOF forms
+    (``nonlinear_features``, ``predict_nonlinear``) all equal a Python
+    left-to-right double fold of the reference semantics, bit for bit,
+    on random rows plus NaN, ±Inf, NULL, ±0.0 and a subnormal; the text
+    form takes names only."""
     from value_at_risk_spark.functions.features import predict_expanded
 
     rng = np.random.default_rng(11)
@@ -276,12 +276,10 @@ def test_predictor_sql_text_bit_parity(spark):
     out = df.select(
         "weights",
         "factors",
-        nonlinear_features("factors", dim=d).alias("x"),
         nonlinear_features("factors").alias("x_hof"),
         predict_expanded("weights", "factors", d).alias("p"),
     ).select(
         "*",
-        predict_nonlinear("weights", "x", dim=4 * d).alias("p_dim"),
         predict_nonlinear("weights", "x_hof").alias("p_hof"),
     ).collect()
     assert len(out) == len(rows)
@@ -300,17 +298,11 @@ def test_predictor_sql_text_bit_parity(spark):
     for r in out:
         want_x = _ref_expand(r.factors, pow_)
         want_p = _bits(_ref_predict(r.weights, want_x))
-        assert [_bits(v) for v in r.x] == [_bits(v) for v in want_x]
         assert [_bits(v) for v in r.x_hof] == [_bits(v) for v in want_x]
         assert _bits(r.p) == want_p
-        assert _bits(r.p_dim) == want_p
         assert _bits(r.p_hof) == want_p
     with pytest.raises(TypeError):
         predict_expanded(F.col("weights"), "factors", d)
-    with pytest.raises(TypeError):
-        nonlinear_features(F.col("factors"), dim=d)
-    with pytest.raises(TypeError):
-        predict_nonlinear("weights", F.col("x"), dim=4 * d)
 
 
 def test_count_breaches_and_zone(spark):
@@ -446,19 +438,22 @@ def test_histogram_degenerate_group(spark):
 
 
 def test_predictor_unrolled_bit_identical_to_hof(spark):
-    """The dim-unrolled predictor and the generic HOF predictor fold in
-    the SAME order (products from 0.0, intercept last), so they are
-    bit-identical — not just tolerance-equal. Weights/features chosen so
-    a different association order WOULD differ in the last ulp."""
+    """The unrolled predictor (``predict_expanded``) and the generic HOF
+    forms fold in the SAME order (products from 0.0, intercept last), so
+    they are bit-identical — not just tolerance-equal. Weights/factors
+    chosen so a different association order WOULD differ in the last
+    ulp."""
+    from value_at_risk_spark.functions.features import predict_expanded
+
     rng = np.random.default_rng(7)
     w = [float(x) for x in rng.uniform(-1, 1, 9)]
-    f = [float(x) for x in rng.uniform(-100, 100, 8)]
+    f = [float(x) for x in rng.uniform(-100, 100, 2)]
     df = spark.createDataFrame(
-        [(w, f)], "weights array<double>, features array<double>"
+        [(w, f)], "weights array<double>, factors array<double>"
     )
     r = df.select(
-        predict_nonlinear("weights", "features").alias("hof"),
-        predict_nonlinear("weights", "features", dim=8).alias("unrolled"),
+        predict_nonlinear("weights", nonlinear_features("factors")).alias("hof"),
+        predict_expanded("weights", "factors", 2).alias("unrolled"),
     ).first()
     # exact equality: same fold order, same FP ops
     assert r.hof == r.unrolled

@@ -96,6 +96,26 @@ def test_trailing_volatility_matches_pandas(spark, fixtures):
     )
 
 
+def test_trailing_volatility_bits_independent_of_partitioning(spark, fixtures):
+    """The trailing mean/cov are bit-equal however the features arrive
+    partitioned: each date's history is aggregated in one task, in date
+    order, so the partial aggregates do not merge in shuffle-arrival
+    order."""
+    _, indicators, _ = fixtures
+    feats = market_features(indicators, FACTORS).localCheckpoint(eager=True)
+
+    def bits(df):
+        return {
+            r.date: (r.vol_avg, r.vol_cov)
+            for r in trailing_volatility(df, days=90).collect()
+        }
+
+    one = bits(feats.repartition(1))
+    seven = bits(feats.repartition(7))
+    assert len(one) == len(seven) > 200
+    assert [d for d in one if one[d] != seven[d]] == []
+
+
 def test_train_models_recovers_beta(spark, fixtures):
     stocks, indicators, _ = fixtures
     rets = stock_returns(stocks)

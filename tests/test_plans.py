@@ -836,7 +836,6 @@ def test_plan_lint_ratchet_subset(spark, sf_dir):
     subset = {
         # BNLJ carriers (scalar-broadcast idiom, counts pinned)
         "tfidf_top_terms",
-        "pagerank_trade_graph",
         "embedding_scalar_quantization",
         "heavy_hitter_tokens",
         # Python-boundary queries (Arrow-vectorized only)
@@ -848,6 +847,7 @@ def test_plan_lint_ratchet_subset(spark, sf_dir):
         # plain equi-join/agg queries (zero unkeyed joins allowed)
         "join_revenue_by_nation",
         "regional_nation_revenue",
+        "pagerank_trade_graph",
         "gopher_quality_filters",
         "knn_graph_mutual_edges",
         # global-window carriers (bounded-aggregate frames, notes pinned)

@@ -20,9 +20,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from value_at_risk_spark.model import score  # noqa: E402
 from value_at_risk_spark.montecarlo import simulate_trials  # noqa: E402
-from value_at_risk_spark.functions.risk import value_at_risk_expr  # noqa: E402
+from value_at_risk_spark.plans.var_pipeline import (  # noqa: E402
+    aggregate_var,
+    aggregate_var_fused,
+    score_trials,
+)
 from value_at_risk_spark.session import get_spark  # noqa: E402
 
 N_DATES = 35
@@ -79,28 +82,13 @@ def main() -> None:
     t_sim = time.time() - t0
 
     t0 = time.time()
-    scored = score(
-        sims.crossJoin(F.broadcast(weights.select("ticker"))),
-        weights,
-        group_col="ticker",
-        feature_col="features",
-        out_col="return",
-        expand=True,
-        n_factors=N_FACTORS,
-    ).select("date", "ticker", "trial_id", "return")
+    scored = score_trials(sims, weights, n_factors=N_FACTORS)
     force(scored)
     n_scored = scored.count()
     t_score = time.time() - t0
 
     t0 = time.time()
-    per_trial = (
-        scored.join(F.broadcast(portfolio), "ticker")
-        .groupBy("date", "trial_id")
-        .agg(F.sum(F.col("return") * F.col("weight")).alias("pr"))
-    )
-    var = per_trial.groupBy("date").agg(
-        value_at_risk_expr("pr", 99.0).alias("var_99")
-    )
+    var = aggregate_var(scored, portfolio)
     # force() here too: count() over a groupBy can prune the percentile
     # (and transitively the whole scoring subtree) entirely
     force(var)
@@ -109,8 +97,6 @@ def main() -> None:
 
     # fused path: portfolio linearity folds the 27-ticker scoring stage
     # into one combined weight vector applied per simulated state
-    from value_at_risk_spark.plans.var_pipeline import aggregate_var_fused
-
     t0 = time.time()
     var_fused = aggregate_var_fused(
         sims, weights, portfolio, n_factors=N_FACTORS

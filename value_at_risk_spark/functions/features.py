@@ -9,10 +9,11 @@ Reference does both driver-side / inside a pyfunc model:
 
 Here both are native expressions: the scoring path is a broadcast join
 of a weights table + this expression — no model registry, no Python
-boundary, fully Catalyst-visible. When the factor count is known at
-plan-build time the expressions unroll and are rendered as SQL text
-(one ``F.expr`` parse, not one py4j round trip per term); otherwise
-they are higher-order functions over arrays of any width.
+boundary, fully Catalyst-visible. ``nonlinear_features`` and
+``predict_nonlinear`` are higher-order functions over arrays of any
+width; when the factor count is known at plan-build time,
+``predict_expanded`` unrolls both into one SQL-text expression (one
+``F.expr`` parse, not one py4j round trip per term).
 """
 
 from __future__ import annotations
@@ -51,22 +52,14 @@ def _predict_sql(weights: str, terms: list[str]) -> str:
     return f"{acc} + element_at({w}, 1)"
 
 
-def nonlinear_features(factors: Column | str, dim: int | None = None) -> Column:
+def nonlinear_features(factors: Column | str) -> Column:
     """array<double> of 4·n expanded features from an n-factor array.
 
     Per factor x: [x, sign(x)·x², x³, sign(x)·√|x|]
     (utils/var_utils.py:47-55; test expectation
-    tests/tests_utils.py:28-30: [1,4] → [1,1,1,1,4,16,64,2]).
-
-    With ``dim`` (factor count known at plan-build time) the expansion
-    unrolls to a flat ``array(...)`` constructor over ``element_at``
-    terms — codegen-compiled, vs the interpreted ``flatten(transform)``
-    HOF form (same values, same order, same IEEE arithmetic). The
-    unrolled form takes a column name (``_col_sql``); the HOF form
-    also takes a Column.
+    tests/tests_utils.py:28-30: [1,4] → [1,1,1,1,4,16,64,2]), as a
+    ``flatten(transform)`` HOF over arrays of any width.
     """
-    if dim is not None:
-        return F.expr(f"array({', '.join(_feature_terms_sql(factors, dim))})")
     factors = F.col(factors) if isinstance(factors, str) else factors
     return F.flatten(
         F.transform(
@@ -81,28 +74,14 @@ def nonlinear_features(factors: Column | str, dim: int | None = None) -> Column:
     )
 
 
-def predict_nonlinear(
-    weights: Column | str, features: Column | str, dim: int | None = None
-) -> Column:
+def predict_nonlinear(weights: Column | str, features: Column | str) -> Column:
     """weights[0] + Σ weights[i+1]·features[i] (utils/var_utils.py:58-62).
 
     The engine's replacement for the reference's MLflow pyfunc scoring
-    UDF (02_var_model.py:172-183). Two forms:
-
-    - ``dim`` known (the hot path — the VaR pipeline knows its factor
-      count at plan-build time): the dot product UNROLLS to flat
-      ``element_at(w,i)·element_at(f,i)`` arithmetic, which whole-stage
-      codegen compiles. Higher-order functions are interpreted per row
-      in Spark — on the 30 M-row scoring stage the HOF form runs ~20×
-      slower than the unrolled form (measured: 291 s → 14 s). Both
-      operands are column names (``_col_sql``).
-    - ``dim`` unknown: the generic ``aggregate(zip_with(...))`` HOF
-      expression (correct for any width, interpreted).
+    UDF (02_var_model.py:172-183): the generic ``aggregate(zip_with(...))``
+    HOF expression, correct for any width and interpreted per row. When
+    the factor count is known at plan-build time use ``predict_expanded``.
     """
-    if dim is not None:
-        col = _col_sql(features)
-        terms = [f"element_at({col}, {i})" for i in range(1, dim + 1)]
-        return F.expr(_predict_sql(weights, terms))
     weights = F.col(weights) if isinstance(weights, str) else weights
     features = F.col(features) if isinstance(features, str) else features
     tail = F.slice(weights, 2, F.size(weights) - 1)
@@ -117,8 +96,12 @@ def predict_nonlinear(
 
 
 def predict_expanded(weights: str, factors: str, dim: int) -> Column:
-    """``predict_nonlinear(weights, nonlinear_features(factors, dim),
-    4·dim)`` as ONE expression: each expanded feature is written in
-    place as its term, not read back through ``element_at(array(…),
-    i)``. Same fold order, same values, one parse."""
+    """``predict_nonlinear(weights, nonlinear_features(factors))`` for a
+    ``dim``-factor array, UNROLLED to flat ``element_at`` arithmetic as
+    ONE SQL expression: each expanded feature is written in place as its
+    term, so whole-stage codegen compiles it. The HOF forms are
+    interpreted per row in Spark — on the 30 M-row scoring stage they
+    ran ~20× slower (measured: 291 s → 14 s). Same fold order, same
+    values, bit for bit. Both operands are column names (``_col_sql``).
+    """
     return F.expr(_predict_sql(weights, _feature_terms_sql(factors, dim)))

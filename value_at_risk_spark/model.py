@@ -11,7 +11,7 @@ numerical boundary — SURVEY §2.10 principle), but uses
 ``numpy.linalg.lstsq`` (no statsmodels dependency) and returns a plain
 ``(key, weights:array<double>)`` DataFrame. Scoring is a **broadcast
 join + native dot-product expression** (functions/features.py
-``predict_nonlinear``) — no model registry, no Python at scoring time,
+``predict_expanded``) — no model registry, no Python at scoring time,
 so the 30M-row scoring fan-out (BASELINE.md) stays inside whole-stage
 codegen.
 """
@@ -61,7 +61,6 @@ def score(
     group_col: str,
     feature_col: str,
     out_col: str = "prediction",
-    expand: bool = True,
     n_factors: int | None = None,
 ) -> DataFrame:
     """Broadcast-join weights and apply the native linear predictor.
@@ -79,15 +78,11 @@ def score(
     ``feature_col`` is then read as a column name.
     """
     joined = df.join(F.broadcast(weights), on=group_col)
-    if n_factors is not None:
-        pred = (
-            predict_expanded("weights", feature_col, n_factors)
-            if expand
-            else predict_nonlinear("weights", feature_col, dim=n_factors)
-        )
-    else:
-        feats = nonlinear_features(feature_col) if expand else feature_col
-        pred = predict_nonlinear("weights", feats)
+    pred = (
+        predict_expanded("weights", feature_col, n_factors)
+        if n_factors is not None
+        else predict_nonlinear("weights", nonlinear_features(feature_col))
+    )
     return joined.withColumn(out_col, pred)
 
 

@@ -9,23 +9,102 @@ equi-join + one grouped sum that AQE/co-partitioning optimize like
 any other join.
 
 Semantics: the classic damped recurrence
-``r'(v) = (1-d)/n + d * sum_{(u,v) in E} r(u)/outdeg(u)``.
-Dangling nodes (no out-edges) are NOT redistributed — callers that
-need conserved mass should close the graph (e.g. add reverse edges,
-as the trade-graph query does) or append sink self-loops.
+``r'(v) = (1-d)·t(v) + d * sum_{(u,v) in E} r(u)/outdeg(u)``, with the
+teleport vector t uniform over all nodes (``pagerank``) or over a seed
+set (``personalized_pagerank``). Dangling nodes (no out-edges) are NOT
+redistributed — callers that need conserved mass should close the
+graph (e.g. add reverse edges, as the trade-graph query does) or
+append sink self-loops.
 
-Scale notes (in order of impact):
-- persist/bucket the edge list by ``src`` once; every iteration's
-  join then reuses the layout while only the small rank table moves;
-- checkpoint ranks every ~10 iterations to cut lineage growth;
-- the node count is a 1-row aggregate broadcast into the plan —
-  never a driver-side ``count()`` action.
+Scale notes:
+- the edge list, its node set and its out-degree table are each
+  materialized ONCE (``localCheckpoint``) before iterating, so the
+  caller's edge lineage (often a join + distinct over fact tables)
+  runs once instead of once per iteration and reference;
+- the node count is a 1-row aggregate crossed into the teleport table
+  once, never a driver-side ``count()`` action;
+- the rank and out-degree tables are broadcast into each iteration's
+  edge join: they hold one row per NODE, the edge list one per EDGE,
+  so only the map-side-combined contribution sum shuffles — ONE
+  Exchange per iteration. The node set must fit a broadcast (the
+  usual case: counterparties vs trades);
+- each node's teleport term rides that sum on a zero-contribution row,
+  so applying it needs no join.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def _graph(
+    edges: DataFrame, src: str, dst: str, dedupe: bool
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(edges, nodes, out-degree), each materialized once.
+
+    localCheckpoint, not persist: blocks are tied to this DataFrame's
+    RDD identity, so a fresh call recomputes from source — no cross-run
+    plan-fragment cache leak."""
+    edges = edges.select(src, dst)
+    if dedupe:
+        edges = edges.distinct()
+    edges = edges.localCheckpoint(eager=True)
+    nodes = (
+        edges.select(F.col(src).alias("node"))
+        .unionAll(edges.select(F.col(dst).alias("node")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    deg = (
+        edges.groupBy(src)
+        .agg(F.count(F.lit(1)).cast("double").alias("_od"))
+        .localCheckpoint(eager=True)
+    )
+    return edges, nodes, deg
+
+
+def _iterate(
+    edges: DataFrame,
+    deg: DataFrame,
+    tele: DataFrame,
+    iters: int,
+    damping: float,
+    src: str,
+    dst: str,
+) -> DataFrame:
+    """``iters`` damped steps from ``tele`` (node, r = r₀, _t = the
+    node's teleport term (1-d)·t(v)) → (node, r).
+
+    ONE shuffle per iteration: instead of rebuilding ranks with a
+    node-sized ``tele ⟕ incoming`` join (two Exchanges + two Sorts per
+    iteration), a zero contribution row per node, carrying ``_t``, rides
+    the SAME grouped sum that aggregates the edge contributions.
+    Contributions carry a null ``_t``, so max(_t) per node recovers the
+    node's single teleport term exactly; no-in-edge nodes sum to exactly
+    0.0 (x + 0.0 is exact for the non-negative contributions)."""
+    tele = tele.localCheckpoint(eager=True)
+    ranks = tele.select("node", "r")
+    zeros = tele.select("node", "_t", F.lit(0.0).alias("_c"))
+    deg = F.broadcast(deg)
+    for _ in range(iters):
+        rhs = F.broadcast(ranks)
+        contrib = (
+            edges.join(rhs, edges[src] == rhs.node)
+            .join(deg, src)
+            .select(
+                F.col(dst).alias("node"),
+                F.lit(None).cast("double").alias("_t"),
+                (F.col("r") / F.col("_od")).alias("_c"),
+            )
+        )
+        incoming = contrib.unionByName(zeros).groupBy("node").agg(
+            F.max("_t").alias("_t"), F.sum("_c").alias("_s")
+        )
+        ranks = incoming.select(
+            "node", (F.col("_t") + F.lit(damping) * F.col("_s")).alias("r")
+        )
+    return ranks
 
 
 def pagerank(
@@ -35,11 +114,6 @@ def pagerank(
     src: str = "src",
     dst: str = "dst",
     dedupe: bool = True,
-    persist_edges: bool = False,
-    checkpoint_every: int | None = None,
-    on_iteration=None,
-    materialize_edges: bool = True,
-    broadcast_ranks: bool = False,
 ) -> DataFrame:
     """PageRank over a directed edge list -> (node, r).
 
@@ -50,112 +124,16 @@ def pagerank(
     (e.g. the trade-graph query, whose edge build ends in distinct())
     pass ``dedupe=False`` to skip the redundant Exchange.
     Nodes are the union of both endpoint columns; every node starts at
-    1/n.
-
-    Scale knobs (measured in tools/perf_graph.py; see PERF.md):
-
-    - ``persist_edges=True`` hash-partitions edges (and the derived
-      out-degree and node tables) by ``src`` ONCE and persists them, so
-      every iteration's join moves only the small rank table instead of
-      re-scanning and re-shuffling the edge list per iteration — the
-      dominant cost at 100 TB edge scale. Caller owns unpersist (or
-      lets the session GC it).
-    - ``checkpoint_every=k`` eagerly localCheckpoints the rank table
-      every k iterations, truncating the lineage that otherwise grows
-      by two joins per iteration (and re-executes in full at every
-      downstream action). On a cluster, swap localCheckpoint for a
-      reliable checkpoint dir; the call site is the only change.
-    - ``on_iteration(i, ranks)`` optional hook, called after each
-      iteration (post-checkpoint when one fires) — perf tools use it
-      to force and time iterations without wrapping the loop.
-    - ``materialize_edges=True`` (default) eagerly localCheckpoints the
-      (deduped) edge list plus the derived out-degree and node tables
-      BEFORE iterating. Lazy evaluation otherwise re-plans and
-      re-executes the caller's edge lineage (often a join + distinct
-      over fact tables) once per reference — 3 iterations x (join +
-      deg + nodes) put >100 copies of the edge subtree in the
-      trade-graph query's physical plan (guide §2.4: remove repeated
-      work outright). localCheckpoint, not persist: blocks are tied to
-      this DataFrame's RDD identity, so a fresh call recomputes from
-      source — no cross-run plan-fragment cache leak.
-    - ``broadcast_ranks=True`` hints the per-iteration rank and
-      out-degree tables as broadcast joins (guide §3.1: broadcast the
-      side that fits). The rank table has one row per NODE while the
-      edge table has one per EDGE — for graphs whose node set is
-      orders of magnitude smaller than the edge set (the usual case:
-      counterparties vs trades), this removes the per-iteration
-      shuffle+sort of the edge list entirely; only the grouped
-      contribution sum shuffles, with map-side partial aggregation.
-      Off by default: callers must assert the node-table bound.
+    1/n and teleports (1-d)/n. An empty edge list gives 0 rows.
     """
-    if dedupe:
-        edges = edges.select(src, dst).distinct()
-    elif materialize_edges and not persist_edges:
-        edges = edges.select(src, dst)
-    if materialize_edges and not persist_edges:
-        edges = edges.localCheckpoint(eager=True)
-    nodes = (
-        edges.select(F.col(src).alias("node"))
-        .unionAll(edges.select(F.col(dst).alias("node")))
-        .distinct()
-    )
-    deg = edges.groupBy(src).agg(
-        F.count(F.lit(1)).cast("double").alias("_od")
-    )
-    if persist_edges:
-        npart = edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        edges = edges.repartition(int(npart), src).persist()
-        deg = deg.persist()
-        nodes = nodes.persist()
-    elif materialize_edges:
-        # node/degree tables are re-read every iteration; one shuffle
-        # each now instead of one per reference
-        nodes = nodes.localCheckpoint(eager=True)
-        deg = deg.localCheckpoint(eager=True)
-    if broadcast_ranks:
-        deg = F.broadcast(deg)
+    edges, nodes, deg = _graph(edges, src, dst, dedupe)
     nn = nodes.agg(F.count(F.lit(1)).cast("double").alias("_n"))
-    if materialize_edges and not persist_edges:
-        # the 1-row count is re-derived once per iteration otherwise
-        # (one nodes-agg Exchange + broadcast per reference)
-        nn = nn.localCheckpoint(eager=True)
-    ranks = nodes.crossJoin(F.broadcast(nn)).select(
-        "node", (F.lit(1.0) / F.col("_n")).alias("r")
+    tele = nodes.crossJoin(F.broadcast(nn)).select(
+        "node",
+        (F.lit(1.0) / F.col("_n")).alias("r"),
+        (F.lit(1.0 - damping) / F.col("_n")).alias("_t"),
     )
-    # ONE shuffle per iteration (r17, guide §2.4): instead of
-    # rebuilding ranks with a node-sized ``nodes ⟕ incoming`` join
-    # (two Exchanges + two Sorts per iteration), a zero contribution
-    # row per node rides the SAME grouped sum that already aggregates
-    # the edge contributions — every node then appears in the sum
-    # (no-in-edge nodes sum to exactly 0.0, the value the old
-    # left-join's coalesce produced; x + 0.0 is exact for the
-    # non-negative contributions), so the teleport floor applies in
-    # the post-aggregation projection with no join at all. The only
-    # per-iteration shuffle left is the map-side-combined contribution
-    # sum, keyed on node.
-    zeros = nodes.select("node", F.lit(0.0).alias("_c"))
-    for i in range(iters):
-        rhs = F.broadcast(ranks) if broadcast_ranks else ranks
-        contrib = (
-            edges.join(rhs, edges[src] == rhs.node)
-            .join(deg, src)
-            .select(F.col(dst).alias("node"), (F.col("r") / F.col("_od")).alias("_c"))
-        )
-        incoming = contrib.unionByName(zeros).groupBy("node").agg(
-            F.sum("_c").alias("_s")
-        )
-        ranks = incoming.crossJoin(F.broadcast(nn)).select(
-            "node",
-            (
-                F.lit(1.0 - damping) / F.col("_n")
-                + F.lit(damping) * F.col("_s")
-            ).alias("r"),
-        )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=True)
-        if on_iteration is not None:
-            on_iteration(i, ranks)
-    return ranks
+    return _iterate(edges, deg, tele, iters, damping, src, dst)
 
 
 def personalized_pagerank(
@@ -166,8 +144,6 @@ def personalized_pagerank(
     src: str = "src",
     dst: str = "dst",
     dedupe: bool = True,
-    materialize_edges: bool = True,
-    broadcast_ranks: bool = False,
 ) -> DataFrame:
     """Personalized PageRank: teleport mass returns to a SEED SET
     instead of the uniform vector — relevance-to-the-seeds rather than
@@ -180,75 +156,21 @@ def personalized_pagerank(
     intersected with the graph's node set FIRST — a seed with no
     edges would otherwise silently leak teleport mass and make the
     result depend on out-of-graph rows, which an engine replay could
-    legitimately disagree on. Same per-iteration shape as
-    ``pagerank`` (one equi-join + one grouped sum; the same scale
-    knobs apply at 100 TB edge scale)."""
-    if dedupe:
-        edges = edges.select(src, dst).distinct()
-    else:
-        edges = edges.select(src, dst)
-    if materialize_edges:
-        # same rationale as pagerank: the caller's edge lineage would
-        # otherwise re-execute once per reference (3 iterations + deg
-        # + nodes + the seed intersection)
-        edges = edges.localCheckpoint(eager=True)
-    nodes = (
-        edges.select(F.col(src).alias("node"))
-        .unionAll(edges.select(F.col(dst).alias("node")))
-        .distinct()
-    )
-    deg = edges.groupBy(src).agg(
-        F.count(F.lit(1)).cast("double").alias("_od")
-    )
-    if materialize_edges:
-        nodes = nodes.localCheckpoint(eager=True)
-        deg = deg.localCheckpoint(eager=True)
-    if broadcast_ranks:
-        deg = F.broadcast(deg)
+    legitimately disagree on. Raises ``ValueError`` when no seed is in
+    the graph. Same per-iteration shape as ``pagerank``."""
+    edges, nodes, deg = _graph(edges, src, dst, dedupe)
     s = seeds.select("node").distinct().join(nodes, "node")
     if s.limit(1).count() == 0:
         raise ValueError(
             "personalized_pagerank: no seed intersects the graph's nodes"
         )
     ns = s.agg(F.count(F.lit(1)).cast("double").alias("_ns"))
+    t = F.coalesce(F.col("_is"), F.lit(0.0)) / F.col("_ns")
     tele = (
         nodes.join(s.withColumn("_is", F.lit(1.0)), "node", "left")
         .crossJoin(F.broadcast(ns))
         .select(
-            "node",
-            (F.coalesce(F.col("_is"), F.lit(0.0)) / F.col("_ns")).alias("t"),
+            "node", t.alias("r"), (F.lit(1.0 - damping) * t).alias("_t")
         )
     )
-    if materialize_edges:
-        tele = tele.localCheckpoint(eager=True)
-    ranks = tele.select("node", F.col("t").alias("r"))
-    # ONE shuffle per iteration (r17, the pagerank rewrite): the
-    # teleport table rides the contribution sum as zero rows that
-    # also CARRY t — contributions carry a null t, so max(t) per node
-    # recovers each node's single teleport value exactly and the
-    # ``tele ⟕ incoming`` rebuild join (2 Exchanges + 2 Sorts per
-    # iteration) disappears. No-in-edge nodes sum to exactly 0.0, the
-    # old coalesce value.
-    zeros = tele.select("node", "t", F.lit(0.0).alias("_c"))
-    for _ in range(iters):
-        rhs = F.broadcast(ranks) if broadcast_ranks else ranks
-        contrib = (
-            edges.join(rhs, edges[src] == rhs.node)
-            .join(deg, src)
-            .select(
-                F.col(dst).alias("node"),
-                F.lit(None).cast("double").alias("t"),
-                (F.col("r") / F.col("_od")).alias("_c"),
-            )
-        )
-        incoming = contrib.unionByName(zeros).groupBy("node").agg(
-            F.max("t").alias("t"), F.sum("_c").alias("_s")
-        )
-        ranks = incoming.select(
-            "node",
-            (
-                F.lit(1.0 - damping) * F.col("t")
-                + F.lit(damping) * F.col("_s")
-            ).alias("r"),
-        )
-    return ranks
+    return _iterate(edges, deg, tele, iters, damping, src, dst)

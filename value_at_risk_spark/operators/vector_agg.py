@@ -4,17 +4,16 @@ The reference's group-wise vector sum is MLlib ``Summarizer.sum`` over
 ``VectorUDT`` (``/root/reference/04_var_aggregation.py:35-41,58-66,
 86-94,114-123``; ``05_var_compliance.py:68-75``), and its windowed
 mean/covariance are per-row Python UDFs over collected arrays
-(``utils/var_udf.py:44-54``). Two native forms here:
+(``utils/var_udf.py:44-54``). Native forms here:
 
-- ``vector_sum`` (explode form): posexplode → hash-agg by (keys, pos) →
-  re-assemble sorted. Fully native, partial-aggregatable map-side,
-  oracle-expressible. Shuffle volume = rows × dim, but each shuffled
-  row is (key, int, double) — compact, and the hash agg combines
-  map-side so the exchange carries only group × dim rows.
-- ``vector_sum_zipwith`` (fold form): aggregate(collect_list(vec), zero,
-  zip_with(+)) — single shuffle of whole arrays; better when dim is
-  large and groups are few. collect_list order does not matter for a
-  commutative elementwise sum (up to FP rounding).
+- ``vector_sum``: aggregate(collect_list(vec), zero, zip_with(+)) — one
+  shuffle of whole arrays, no row explosion. collect_list order does
+  not matter for a commutative elementwise sum (up to FP rounding).
+  Queries that surface the sum long-form (``vector_sum_by_label``)
+  posexplode and hash-aggregate by (keys, pos) inline instead.
+- ``vector_mean_cov``: per-group mean + sample covariance;
+- ``embedding_covariance``: the high-dim covariance, one numpy partial
+  per Arrow batch.
 """
 
 from __future__ import annotations
@@ -35,35 +34,22 @@ def vector_sum(
     group_cols: list[str],
     vec_col: str,
     out_col: str = "vec_sum",
-    round_to: int | None = None,
 ) -> DataFrame:
-    """Element-wise sum of an array column per group (explode form)."""
-    exploded = df.select(
-        *group_cols, F.posexplode(vec_col).alias("_pos", "_v")
-    )
-    summed = exploded.groupBy(*group_cols, "_pos").agg(
-        F.sum(F.col("_v").cast("double")).alias("_s")
-    )
-    return (
-        summed.groupBy(*group_cols)
-        .agg(F.array_sort(F.collect_list(F.struct("_pos", "_s"))).alias("_ps"))
-        .select(
-            *group_cols,
-            F.transform(F.col("_ps"), lambda x: F.round(x["_s"], round_to) if round_to is not None else x["_s"]).alias(out_col),
-        )
-    )
+    """Element-wise sum of an array column per group → (group_cols...,
+    out_col: array<double>).
 
-
-def vector_sum_zipwith(
-    df: DataFrame,
-    group_cols: list[str],
-    vec_col: str,
-    out_col: str = "vec_sum",
-) -> DataFrame:
-    """Element-wise sum via fold over collect_list (array-at-a-time form)."""
+    NULL vectors are skipped, and a group with no other vector sums to
+    NULL. NULL elements add 0.0, like SUM skipping them, except that a
+    position NULL in every vector sums to 0.0. Vectors of different
+    widths in one group raise. The fold's accumulator is typed by its
+    0.0 zero as non-null, so a NULL or zip_with-padded element would
+    otherwise be stored as 0.0, dropping the running sum at that
+    position."""
     folded = (
-        "aggregate(_vecs, transform(element_at(_vecs, 1), _e -> 0.0D), "
-        "(_acc, _v) -> zip_with(_acc, _v, (_a, _b) -> _a + CAST(_b AS DOUBLE)))"
+        "aggregate(_vecs, transform(try_element_at(_vecs, 1), _e -> 0.0D), "
+        "(_acc, _v) -> IF(size(_v) = size(_acc), "
+        "zip_with(_acc, _v, (_a, _b) -> _a + coalesce(CAST(_b AS DOUBLE), 0.0D)), "
+        "raise_error('vector_sum: vectors of different widths in one group')))"
     )
     return (
         df.groupBy(*group_cols)

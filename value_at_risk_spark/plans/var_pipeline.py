@@ -42,10 +42,7 @@ from value_at_risk_spark.functions.vector import _col_sql, _name_sql
 from value_at_risk_spark.model import fit_ols_per_group, score
 from value_at_risk_spark.montecarlo import simulate_trials
 from value_at_risk_spark.operators.asof import asof_join
-from value_at_risk_spark.operators.vector_agg import (
-    vector_mean_cov,
-    vector_sum_zipwith,
-)
+from value_at_risk_spark.operators.vector_agg import vector_mean_cov, vector_sum
 
 
 @dataclass(frozen=True)
@@ -113,10 +110,16 @@ def trailing_volatility(
         "date AS _cd", f"explode(array({bucket}, {bucket} - 1)) AS _bk"
     )
     hist = features_df.selectExpr("date AS _hd", f"{bucket} AS _bk", "features")
+    # Each date's history lands in one task, in date order: the mean/cov
+    # aggregates then run without a further Exchange and fold their rows
+    # in the same order however the input is partitioned, so the output
+    # bits do not depend on shuffle-arrival order.
     joined = (
         cur.join(hist, "_bk")
         .filter(f"_hd >= date_sub(_cd, {int(days)}) AND _hd <= _cd")
         .drop("_bk")
+        .repartition("_cd")
+        .sortWithinPartitions("_cd", "_hd")
     )
     # one pass (r17, guide §2.4): the row count rides the mean/cov
     # aggregation (count_col) instead of a second groupBy over the
@@ -198,7 +201,6 @@ def score_trials(
         group_col="ticker",
         feature_col="features",
         out_col="return",
-        expand=True,
         n_factors=n_factors,
     ).select("date", "ticker", "trial_id", "return")
 
@@ -394,7 +396,7 @@ def fused_portfolio_weights(
         "1 AS _g",
         "transform(weights, _x -> _x * weight) AS _wv",
     )
-    combined = vector_sum_zipwith(j, [*group_cols, "_g"], "_wv", out_col="weights")
+    combined = vector_sum(j, [*group_cols, "_g"], "_wv", out_col="weights")
     return combined.drop("_g")
 
 

@@ -282,10 +282,9 @@ def pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     r' = 0.15/n + 0.85 * sum(r/outdeg) recurrence; the oracle unrolls
     the same three iterations as CTE stages, so the result is
     HASH-CHECKED, not rows-only, rare for an iterative algorithm.
-    Scale: persist the edge list partitioned by src so every
-    iteration's join reuses the same layout; checkpoint ranks every
-    ~10 iterations to cut lineage; node count is a 1-row broadcast,
-    never a driver action."""
+    Scale: operators/graph.pagerank materializes the edge list once and
+    broadcasts the node-sized rank table into each iteration's join;
+    node count is a 1-row broadcast, never a driver action."""
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     # r17 (guide §2.3 — narrower types): the node id is carried as a
@@ -313,13 +312,11 @@ def pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the pair set is distinct and the two union branches are disjoint
     # (even->odd vs odd->even), so the edge list is already simple —
-    # skip the operator's default dedupe Exchange. broadcast_ranks: the
-    # rank table is one row per counterparty (|suppliers|+|customers|),
-    # orders of magnitude under the edge count at every SF, so each
-    # iteration broadcasts kilobytes instead of shuffling the edges.
-    ranks = pagerank(
-        edges, iters=3, damping=0.85, dedupe=False, broadcast_ranks=True
-    )
+    # skip the operator's default dedupe Exchange. The operator
+    # broadcasts the rank table, one row per counterparty
+    # (|suppliers|+|customers|), orders of magnitude under the edge
+    # count at every SF: kilobytes per iteration, not an edge shuffle.
+    ranks = pagerank(edges, iters=3, damping=0.85, dedupe=False)
     kind = F.when(F.col("node") % 2 == 0, F.lit("S")).otherwise(F.lit("C"))
     key = F.shiftright(F.col("node"), 1)  # exact floor-div for all longs
     return ranks.select(
@@ -421,12 +418,8 @@ def personalized_pagerank_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("s_suppkey") % 5 == 0)
         .select((F.col("s_suppkey").cast("long") * 2).alias("node"))
     )
-    # broadcast_ranks: same node-vs-edge cardinality argument as
-    # pagerank_trade_graph — the rank/teleport tables are one row per
-    # counterparty, kilobytes against the edge list's shuffle.
     ranks = personalized_pagerank(
-        edges, seeds, iters=3, damping=0.85, dedupe=False,
-        broadcast_ranks=True,
+        edges, seeds, iters=3, damping=0.85, dedupe=False
     )
     kind = F.when(F.col("node") % 2 == 0, F.lit("S")).otherwise(F.lit("C"))
     key = F.shiftright(F.col("node"), 1)

@@ -483,6 +483,27 @@ def basel_breach_zones(spark: SparkSession, sf_dir: str) -> DataFrame:
         basel_zone(breaches).alias("zone"),
     )
 
+def _orders_market_vol(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The Monte-Carlo queries' market: one 5-factor daily return
+    vector per date (one factor per order-priority series, missing days
+    0.0) → one (date, vol_avg, vol_cov) row of global mean / sample
+    covariance (A8, covar_samp semantics), dated 2001-08-01."""
+    rets = daily_returns(spark, sf_dir)
+    wide = (
+        rets.groupBy("d")
+        .pivot("series", ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"])
+        .agg(F.first("ret"))
+        .na.fill(0.0)
+    )
+    feat_cols = [c for c in wide.columns if c != "d"]
+    feats = wide.select(
+        F.lit(1).alias("g"),
+        F.array(*[F.col(f"`{c}`") for c in feat_cols]).alias("features"),
+    )
+    return vector_mean_cov(feats, ["g"], "features").select(
+        F.lit("2001-08-01").cast("date").alias("date"), "vol_avg", "vol_cov"
+    )
+
 @query(
     "mc_simulate_market",
     """
@@ -515,21 +536,7 @@ def mc_simulate_market(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle (key = COUNT(orders), so the one SQL string holds at every
     SF). The full-width 2000-trial path is hash-pinned by
     mc_portfolio_var's aggregate golden (utils/var_udf.py:58-61)."""
-    rets = daily_returns(spark, sf_dir)
-    wide = (
-        rets.groupBy("d")
-        .pivot("series", ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"])
-        .agg(F.first("ret"))
-        .na.fill(0.0)
-    )
-    feat_cols = [c for c in wide.columns if c != "d"]
-    feats = wide.select(
-        F.lit(1).alias("g"),
-        F.array(*[F.col(f"`{c}`") for c in feat_cols]).alias("features"),
-    )
-    vol = vector_mean_cov(feats, ["g"], "features").select(
-        F.lit("2001-08-01").cast("date").alias("date"), "vol_avg", "vol_cov"
-    )
+    vol = _orders_market_vol(spark, sf_dir)
     sims = simulate_trials(vol, runs=1000)
     return (
         sims.filter(F.col("trial_id") < 3)
@@ -565,21 +572,7 @@ def mc_portfolio_var(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact rounded values per SF (key = COUNT(orders)); this row
     hash-checks the FULL 2,000-trial path that mc_simulate_market
     samples. The full 03→04 notebook flow as one lazy plan."""
-    rets = daily_returns(spark, sf_dir)
-    wide = (
-        rets.groupBy("d")
-        .pivot("series", ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"])
-        .agg(F.first("ret"))
-        .na.fill(0.0)
-    )
-    feat_cols = [c for c in wide.columns if c != "d"]
-    feats = wide.select(
-        F.lit(1).alias("g"),
-        F.array(*[F.col(f"`{c}`") for c in feat_cols]).alias("features"),
-    )
-    vol = vector_mean_cov(feats, ["g"], "features").select(
-        F.lit("2001-08-01").cast("date").alias("date"), "vol_avg", "vol_cov"
-    )
+    vol = _orders_market_vol(spark, sf_dir)
     sims = simulate_trials(vol, runs=2000)
     port = sims.select(
         "date",

@@ -24,7 +24,7 @@ def vector_sum_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     replacement for MLlib Summarizer.sum over VectorUDT
     (04_var_aggregation.py:35-41). Explode form: map-side partial agg,
     shuffle carries (label, pos, partial sum) only. Surfaced in long
-    form; array re-assembly is vector_agg.vector_sum."""
+    form; the array-valued sum is vector_agg.vector_sum."""
     emb = _t(spark, sf_dir, "embeddings")
     return (
         emb.select("label", F.posexplode("embedding").alias("pos", "v"))
