@@ -351,6 +351,73 @@ def test_merge_native_evaluates_source_once(spark, tmp_path):
         assert got.filter("v = -1.0").count() == 50, name
 
 
+@pytest.mark.parametrize("engine", ["upsert", "clauses"])
+def test_merge_pruned_scans_touched_rows_once(spark, tmp_path, monkeypatch, engine):
+    """A file-pruned MERGE into a table with NOT NULL columns, a CHECK
+    constraint and the change data feed: the NOT NULL probe, the CHECK
+    pass, the staged write and the cdc rows all read the merged slice,
+    so what more than one of them reads is materialized once per
+    attempt — on the upsert-star path and on the clause engine alike.
+    Counted by a pass-through Python UDF over the touched-file scan:
+    each touched row is read from storage once."""
+    import value_at_risk_spark.sources.deltalog as dl
+    from value_at_risk_spark.operators.merge import merge_into_delta_native
+
+    tbl = str(tmp_path / engine)
+    df = spark.range(1000).select(
+        F.col("id").alias("k"), (F.col("id") * 2.0).alias("v")
+    )
+    write_delta(
+        spark,
+        df.repartitionByRange(10, "k"),
+        tbl,
+        configuration={"delta.enableChangeDataFeed": "true"},
+    )
+    dl.add_check_constraint(spark, tbl, "v_pos", "v >= 0")
+    snap = snapshot(tbl)
+    assert len(snap.files) == 10
+    assert not any(f.nullable for f in snap.schema.fields)
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def _counted(v, calls=calls):
+        calls.add(1)
+        return v
+
+    counted = F.udf(_counted, "double").asNondeterministic()
+    scan = dl._scan_files_dv
+    touched: list[int] = []
+
+    def _counting_scan(spark_, path, snap_, rel_paths, *args, **kwargs):
+        touched.append(len(rel_paths))
+        out = scan(spark_, path, snap_, rel_paths, *args, **kwargs)
+        return out.withColumn("v", counted("v"))
+
+    monkeypatch.setattr(dl, "_scan_files_dv", _counting_scan)
+    # 30 updates and 20 inserts, all inside the first file's key range
+    src = spark.range(-20, 30).select(
+        F.col("id").alias("k"), F.lit(7.0).alias("v")
+    )
+    clauses = (
+        {}
+        if engine == "upsert"
+        else dict(matched=[{"update": "*"}], not_matched=[{"insert": "*"}])
+    )
+    v = merge_into_delta_native(spark, tbl, src, ["k"], **clauses)
+    monkeypatch.undo()
+    assert touched == [1]  # the pruned path, one touched file
+    assert calls.value == 100  # the touched file's rows, once each
+    got = read_delta(spark, tbl)
+    assert got.count() == 1020
+    assert got.filter("v = 7.0").count() == 50
+    changes = dl.table_changes(spark, tbl, v, v).groupBy(
+        "_change_type"
+    ).count()
+    assert {tuple(r) for r in changes.collect()} == {
+        ("update_preimage", 30), ("update_postimage", 30), ("insert", 20)
+    }
+
+
 def test_delta_txn_sink_exactly_once_and_checkpointed_txn(spark, tmp_path):
     """streaming/sinks.DeltaTxnSink: (a) a re-delivered batchId is a
     no-op because the txn action rides in the same atomic commit as

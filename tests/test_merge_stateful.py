@@ -19,18 +19,19 @@ def test_upsert(spark):
     assert out == {1: "a", 2: "B", 3: "c", 4: "D"}
 
 
-def test_merge_into_delta_validates_before_import(spark):
-    """Key validation fires before the delta import gate, so bad calls
-    fail with ValueError even in containers without delta-spark."""
+def test_merge_native_validates_keys(spark, tmp_path):
+    """MERGE key validation fires before any table I/O: an empty key
+    list or a key missing from the source is a ValueError."""
     import pytest
 
-    from value_at_risk_spark.operators.merge import merge_into_delta
+    from value_at_risk_spark.operators.merge import merge_into_delta_native
 
     updates = spark.createDataFrame([(1, "a")], "k long, v string")
+    nope = str(tmp_path / "nope")
     with pytest.raises(ValueError, match="non-empty"):
-        merge_into_delta(spark, "/tmp/nope", updates, [])
+        merge_into_delta_native(spark, nope, updates, [])
     with pytest.raises(ValueError, match="not in updates"):
-        merge_into_delta(spark, "/tmp/nope", updates, ["missing_key"])
+        merge_into_delta_native(spark, nope, updates, ["missing_key"])
 
 
 def test_scd2(spark):

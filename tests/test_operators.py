@@ -3,6 +3,8 @@ gap-fill, vector aggregation forms, trial packing, dedup, similarity."""
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -21,6 +23,61 @@ from value_at_risk_spark.operators.dedup import (
 from value_at_risk_spark.operators.gapfill import forward_fill_spine
 from value_at_risk_spark.operators.similarity import cosine_topk, lsh_topk
 from value_at_risk_spark.operators.vector_agg import vector_sum
+
+
+def _half_up(x: float, r: int = 6) -> float:
+    """Spark's ``F.round(x, r) + 0.0`` on a double: HALF_UP on the
+    shortest decimal repr, negative zero collapsed."""
+    q = Decimal(repr(float(x))).quantize(
+        Decimal(1).scaleb(-r), rounding=ROUND_HALF_UP
+    )
+    return float(q) + 0.0
+
+
+def _np_cosines(A, B) -> np.ndarray:
+    """numpy brute-force cosine matrix, NaN where either row is a zero
+    vector (the NULL of the exact-cosine contract)."""
+    A = np.asarray(A, dtype=np.float64)
+    B = np.asarray(B, dtype=np.float64)
+    na, nb = np.linalg.norm(A, axis=1), np.linalg.norm(B, axis=1)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        S = (A @ B.T) / (na[:, None] * nb[None, :])
+    S[(na == 0.0)[:, None] | (nb == 0.0)[None, :]] = np.nan
+    return S
+
+
+def _np_topk(qids, Q, cids, C, k: int) -> dict:
+    """Reference top-k: {(query, rank): (neighbor, cosine)} with
+    self-pairs excluded, ordered by 6-dp rounded cosine desc, NULL
+    (None) last, neighbor id asc."""
+    S = _np_cosines(Q, C)
+    out = {}
+    for i, q in enumerate(qids):
+        cand = []
+        for j, c in enumerate(cids):
+            if c != q:
+                s = None if np.isnan(S[i, j]) else _half_up(S[i, j])
+                cand.append((s is None, -(s or 0.0), int(c), s))
+        cand.sort()
+        for rank, (_, _, c, s) in enumerate(cand[:k], start=1):
+            out[(int(q), rank)] = (c, s)
+    return out
+
+
+def _np_near_dup(ids, V, threshold: float) -> list:
+    """Reference near-dup pairs: sorted (id_a < id_b, 6-dp cosine) with
+    raw cosine >= threshold; a zero-vector pair never passes."""
+    ids = np.asarray(ids, dtype=np.int64)
+    S = _np_cosines(V, V)
+    ii, jj = np.nonzero((S >= threshold) & (ids[:, None] < ids[None, :]))
+    return sorted(
+        (int(ids[i]), int(ids[j]), _half_up(S[i, j])) for i, j in zip(ii, jj)
+    )
+
+
+def _collect_vectors(df, id_col: str, vec_col: str = "embedding"):
+    rows = df.select(id_col, vec_col).collect()
+    return [r[0] for r in rows], [list(map(float, r[1])) for r in rows]
 
 
 def test_asof_join_backward_inclusive(spark):
@@ -591,18 +648,15 @@ def test_cosine_zero_vector_is_null_not_error(spark):
     assert {(r.id_a, r.id_b) for r in pairs} == {(1, 3)}
 
 
-def test_blocked_near_dup_equals_expression_form(spark, sf_dir):
-    """The block-partitioned Arrow-matmul exact all-pairs (r14, the
-    form the gate row runs) returns EXACTLY the expression-form
-    result — same pairs, same rounded cosines — on the fixture corpus
-    at a low threshold (hundreds of pairs), including zero-vector
-    NULL-discipline (zero rows can never pass a positive threshold),
-    and an uneven num_blocks that forces empty and diagonal block
-    pairs."""
-    from value_at_risk_spark.operators.similarity import (
-        cosine_near_dup_pairs,
-        cosine_near_dup_pairs_blocked,
-    )
+def test_near_dup_pairs_equals_numpy_reference(spark, sf_dir):
+    """The block-partitioned Arrow-matmul exact all-pairs (the form the
+    gate row runs) returns EXACTLY a numpy brute-force replay of the
+    contract — same pairs, same 6-dp HALF_UP cosines — on the fixture
+    corpus at a low threshold (hundreds of pairs), at the default and
+    at an uneven num_blocks that forces empty and diagonal block
+    pairs. The block grid is ONE shuffle of N*B rows into B(B+1)/2
+    kernel tasks — no cartesian product anywhere."""
+    from value_at_risk_spark.operators.similarity import cosine_near_dup_pairs
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id",
@@ -610,29 +664,18 @@ def test_blocked_near_dup_equals_expression_form(spark, sf_dir):
             "embedding"
         ),
     )
-    expr_form = sorted(
-        tuple(r) for r in cosine_near_dup_pairs(e, threshold=0.35).collect()
-    )
+    expect = _np_near_dup(*_collect_vectors(e, "vec_id"), 0.35)
+    assert expect  # the fixture yields pairs at 0.35: a real check
     for nb in (3, 8):
-        blocked = sorted(
+        got = sorted(
             tuple(r)
-            for r in cosine_near_dup_pairs_blocked(
+            for r in cosine_near_dup_pairs(
                 e, threshold=0.35, num_blocks=nb
             ).collect()
         )
-        assert blocked == expr_form, (nb, len(blocked), len(expr_form))
-    assert expr_form  # the fixture yields pairs at 0.35: a real check
-    # zero vectors never emit (no NaN/NULL leaks through the kernel)
-    z = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.0, 0.0]), (3, [0.5, 0.5])],
-        "vec_id long, embedding array<double>",
-    )
-    got = cosine_near_dup_pairs_blocked(z, threshold=0.1, num_blocks=2)
-    assert {(r.id_a, r.id_b) for r in got.collect()} == {(1, 3)}
-    # plan hygiene: the block grid is ONE shuffle of N*B rows into
-    # B(B+1)/2 kernel tasks — no cartesian product anywhere
+        assert got == expect, (nb, len(got), len(expect))
     plan = (
-        cosine_near_dup_pairs_blocked(e, threshold=0.35)
+        cosine_near_dup_pairs(e, threshold=0.35)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -2878,15 +2921,10 @@ def test_basket_paths_stats_invariants(spark, sf_dir):
         assert r.min_v <= r.mean_v <= r.max_v
 
 
-def test_cosine_topk_arrow_equals_expression_form(spark, sf_dir):
-    """The Arrow-matmul fast path returns EXACTLY the expression
-    form's rows (same rounding, same tie-break, self-matches
-    excluded) — it's an execution strategy, not a different
-    operator."""
-    from value_at_risk_spark.operators.similarity import (
-        cosine_topk,
-        cosine_topk_arrow,
-    )
+def test_cosine_topk_equals_numpy_reference(spark, sf_dir):
+    """The broadcast-query Arrow top-k returns EXACTLY a numpy
+    brute-force replay of the contract (6-dp HALF_UP rounding,
+    ascending-id tie-break, self-matches excluded) on the fixture."""
     from value_at_risk_spark.sources.registry import Registry
 
     emb = Registry(sf_dir).read(spark, "embeddings").select(
@@ -2897,15 +2935,92 @@ def test_cosine_topk_arrow_equals_expression_form(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") % 25 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    ref = {
+    expect = _np_topk(
+        *_collect_vectors(queries, "query_id"),
+        *_collect_vectors(corpus, "neighbor_id"),
+        5,
+    )
+    got = {
         (r.query_id, r.rank): (r.neighbor_id, r.cosine)
         for r in cosine_topk(queries, corpus, k=5).collect()
     }
-    got = {
-        (r.query_id, r.rank): (r.neighbor_id, r.cosine)
-        for r in cosine_topk_arrow(queries, corpus, k=5).collect()
-    }
-    assert got == ref and len(ref) > 0
+    assert got == expect and len(expect) > 0
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        "cosine_topk",
+        "cosine_allpairs_topk_blocked",
+        "reference_topk_cosine",
+        "reference_max_cosine",
+        "cosine_near_dup_pairs",
+    ],
+)
+def test_exact_cosine_zero_vector_rule(spark, op):
+    """One zero-vector rule for every exact-cosine kernel: a pair with
+    a zero vector has a NULL cosine; top-k ranks it after every finite
+    cosine (here after -1.0) and never in place of the excluded
+    self-pair; no threshold passes it, not even one <= 0. Covers a
+    zero query (id 2, also a corpus row) and a zero neighbour."""
+    from value_at_risk_spark.operators import similarity as sim
+
+    schema = "vec_id long, embedding array<double>"
+    corpus = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 0.0]), (3, [-0.5, -0.5])], schema
+    )
+    queries = spark.createDataFrame([(10, [1.0, 1.0]), (2, [0.0, 0.0])], schema)
+    if op == "cosine_topk":
+        got = {
+            (r.query_id, r.rank, r.neighbor_id, r.cosine)
+            for r in sim.cosine_topk(
+                queries.withColumnRenamed("vec_id", "query_id"),
+                corpus.withColumnRenamed("vec_id", "neighbor_id"),
+                k=3,
+            ).collect()
+        }
+        assert got == {
+            (10, 1, 1, 0.707107), (10, 2, 3, -1.0), (10, 3, 2, None),
+            (2, 1, 1, None), (2, 2, 3, None),
+        }
+    elif op == "cosine_allpairs_topk_blocked":
+        for nb in (1, 2):
+            got = {
+                (r.query_id, r.rank, r.neighbor_id, r.cosine)
+                for r in sim.cosine_allpairs_topk_blocked(
+                    corpus, k=3, num_blocks=nb
+                ).collect()
+            }
+            assert got == {
+                (1, 1, 3, -0.707107), (1, 2, 2, None),
+                (2, 1, 1, None), (2, 2, 3, None),
+                (3, 1, 1, -0.707107), (3, 2, 2, None),
+            }, nb
+    elif op == "reference_topk_cosine":
+        got = {
+            (r.vec_id, r.ref_id, r.cosine)
+            for r in sim.reference_topk_cosine(queries, corpus, k=3).collect()
+        }
+        assert got == {
+            (10, 1, 0.707107), (10, 3, -1.0), (10, 2, None),
+            (2, 1, None), (2, 3, None),
+        }
+    elif op == "reference_max_cosine":
+        ref = corpus.filter(F.col("vec_id") != 1)  # zero vs a -1.0 cosine
+        got = {
+            (r.vec_id, r.ref_id, r.max_cosine)
+            for r in sim.reference_max_cosine(queries, ref).collect()
+        }
+        assert got == {(10, 3, -1.0), (2, 2, None)}
+    else:
+        for thr, want in ((-1.0, {(1, 3, -0.707107)}), (0.0, set())):
+            got = {
+                tuple(r)
+                for r in sim.cosine_near_dup_pairs(
+                    corpus, threshold=thr, num_blocks=2
+                ).collect()
+            }
+            assert got == want, thr
 
 
 def test_ewma_cov_diag_matches_ewma_vol_and_cones_nest(spark, sf_dir):
@@ -3488,8 +3603,6 @@ def test_cosine_topk_arrow_keeps_rounding_ties_at_local_cut(spark):
     is higher."""
     import math
 
-    from value_at_risk_spark.operators.similarity import cosine_topk_arrow
-
     def unit(c):
         return [float(c), math.sqrt(max(0.0, 1.0 - c * c))]
 
@@ -3500,7 +3613,7 @@ def test_cosine_topk_arrow_keeps_rounding_ties_at_local_cut(spark):
         [(5, unit(0.99999955)), (10, unit(0.9999996)), (3, unit(0.5))],
         "neighbor_id long, embedding array<double>",
     )
-    rows = cosine_topk_arrow(queries, corpus, k=1).collect()
+    rows = cosine_topk(queries, corpus, k=1).collect()
     assert [(r.neighbor_id, r.cosine, r.rank) for r in rows] == [(5, 1.0, 1)]
 
 
@@ -3508,15 +3621,11 @@ def test_cosine_topk_arrow_bounded_on_tie_heavy_corpus(spark):
     """On an exact-duplicate corpus (every candidate identical — the
     dedup-heavy workload) the batch-local cut must still emit at most
     k rows per query per batch, ranked by the contract's ascending-id
-    tie-break, and match the expression form exactly. Pre-round-9 the
-    widened rounding-unit mask emitted EVERY tied candidate (the whole
-    batch here); the exact batch-local top-k under (rounded desc, id
-    asc) restores the nq*k bound without changing any answer."""
-    from value_at_risk_spark.operators.similarity import (
-        cosine_topk,
-        cosine_topk_arrow,
-    )
-
+    tie-break, and match a numpy replay of the contract exactly.
+    Pre-round-9 the widened rounding-unit mask emitted EVERY tied
+    candidate (the whole batch here); the exact batch-local top-k
+    under (rounded desc, id asc) restores the nq*k bound without
+    changing any answer."""
     n = 400
     corpus = spark.createDataFrame(
         [(i, [0.6, 0.8]) for i in range(n)],
@@ -3526,23 +3635,20 @@ def test_cosine_topk_arrow_bounded_on_tie_heavy_corpus(spark):
         [(10_000, [0.6, 0.8]), (10_001, [1.0, 0.0])],
         "query_id long, embedding array<double>",
     )
-    fast = cosine_topk_arrow(queries, corpus, k=3)
-    slow = cosine_topk(queries, corpus, k=3)
-    key = lambda r: (r.query_id, r.rank)  # noqa: E731
-    got = [
-        (r.query_id, r.neighbor_id, r.cosine, r.rank)
-        for r in sorted(fast.collect(), key=key)
-    ]
-    exp = [
-        (r.query_id, r.neighbor_id, r.cosine, r.rank)
-        for r in sorted(slow.collect(), key=key)
-    ]
-    assert got == exp
+    got = {
+        (r.query_id, r.rank): (r.neighbor_id, r.cosine)
+        for r in cosine_topk(queries, corpus, k=3).collect()
+    }
+    assert got == _np_topk(
+        *_collect_vectors(queries, "query_id"),
+        *_collect_vectors(corpus, "neighbor_id"),
+        3,
+    )
     # all n candidates tie — the winners are the 3 smallest ids each
-    assert [g[1] for g in got if g[0] == 10_000] == [0, 1, 2]
+    assert [got[(10_000, rk)][0] for rk in (1, 2, 3)] == [0, 1, 2]
     # k = n still returns every candidate exactly once (the cut is a
     # top-k, not a dedupe — no tied candidate is double-emitted or lost)
-    assert cosine_topk_arrow(queries, corpus, k=n).count() == 2 * n
+    assert cosine_topk(queries, corpus, k=n).count() == 2 * n
 
 
 def test_pagerank_default_dedupe_ignores_multi_edges(spark):
@@ -4407,8 +4513,6 @@ def test_blocked_kernels_num_blocks_exceeds_corpus(spark):
     from value_at_risk_spark.operators.similarity import (
         cosine_allpairs_topk_blocked,
         cosine_near_dup_pairs,
-        cosine_near_dup_pairs_blocked,
-        cosine_topk,
         knn_graph_mutual,
     )
 
@@ -4452,19 +4556,16 @@ def test_blocked_kernels_num_blocks_exceeds_corpus(spark):
     assert mutual == expect_mutual
     # near-dup sibling kernel: same pattern, same fix — exact pair set,
     # no duplicate emissions at oversized block counts
-    expr_form = sorted(
-        tuple(r)
-        for r in cosine_near_dup_pairs(corpus, threshold=-1.0).collect()
-    )
+    expect_pairs = _np_near_dup(range(6), vecs, -1.0)
     for nb in (8, 40):
         blocked = [
             tuple(r)
-            for r in cosine_near_dup_pairs_blocked(
+            for r in cosine_near_dup_pairs(
                 corpus, threshold=-1.0, num_blocks=nb
             ).collect()
         ]
         assert len(blocked) == len(set(blocked)), f"dups at nb={nb}"
-        assert sorted(blocked) == expr_form, f"num_blocks={nb}"
+        assert sorted(blocked) == expect_pairs, f"num_blocks={nb}"
 
 
 def test_knn_graph_ann_recall_and_cosine_parity(spark, sf_dir):
@@ -4779,9 +4880,6 @@ def test_blocked_topk_property_random_corpora(spark):
     replay of the contract (rounded sim desc, id asc, self excluded),
     and knn_topk_incremental over a random old/new split equals the
     from-scratch answer."""
-    import numpy as np
-    from decimal import ROUND_HALF_UP, Decimal
-
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
@@ -4789,31 +4887,6 @@ def test_blocked_topk_property_random_corpora(spark):
         cosine_allpairs_topk_blocked,
         knn_topk_incremental,
     )
-
-    def numpy_contract_topk(ids, V, k):
-        Vn = np.linalg.norm(V, axis=1)
-        Vn[Vn == 0.0] = np.inf
-        sims = (V @ V.T) / (Vn[:, None] * Vn[None, :])
-        np.fill_diagonal(sims, -np.inf)
-        quant = Decimal(1).scaleb(-6)
-        out = {}
-        for i in range(len(ids)):
-            key = []
-            for j in range(len(ids)):
-                s = sims[i, j]
-                rs = (
-                    float(Decimal(repr(s)).quantize(
-                        quant, rounding=ROUND_HALF_UP))
-                    if np.isfinite(s)
-                    else s
-                )
-                key.append((-rs, ids[j], j))
-            key.sort()
-            for rank, (nrs, nid, j) in enumerate(key[:k], start=1):
-                if not np.isfinite(sims[i, j]):
-                    continue
-                out[(int(ids[i]), rank)] = (int(nid), -nrs + 0.0)
-        return out
 
     @given(
         n=st.integers(8, 28),
@@ -4838,7 +4911,7 @@ def test_blocked_topk_property_random_corpora(spark):
             [(int(ids[i]), [float(x) for x in V[i]]) for i in range(n)],
             "vec_id long, embedding array<double>",
         )
-        expect = numpy_contract_topk(ids, V, k)
+        expect = _np_topk(ids, V, ids, V, k)
         got = {
             (r.query_id, r.rank): (r.neighbor_id, r.cosine)
             for r in cosine_allpairs_topk_blocked(

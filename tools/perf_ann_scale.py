@@ -4,8 +4,8 @@ Builds a ~500k-vector corpus at sf0.1 (the 50k fixture embeddings
 replicated 10x with deterministic per-vector gaussian jitter so copies
 are near- but not exact-duplicates), then measures:
 
-1. brute-force exact cosine top-5 for 100 queries (the baseline every
-   ANN variant is judged against);
+1. brute-force exact cosine top-5 for 100 queries (``cosine_topk``, the
+   baseline every ANN variant is judged against);
 2. IVF (k=64 cells, nprobe=4) search for the same queries: wall time
    + recall@5 against the brute answer.
 
@@ -31,7 +31,6 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from value_at_risk_spark.operators.similarity import (  # noqa: E402
     cosine_topk,
-    cosine_topk_arrow,
     ivf_topk,
     kmeans_centroids,
 )
@@ -95,15 +94,6 @@ def main() -> None:
         }
         brute_sec = round(time.time() - t0, 2)
 
-        # same exact contract, Arrow-matmul execution strategy
-        t0 = time.time()
-        arrow_rows = {
-            (r.query_id, r.neighbor_id)
-            for r in cosine_topk_arrow(queries, corpus, k=5).collect()
-        }
-        brute_arrow_sec = round(time.time() - t0, 2)
-        assert arrow_rows == brute_rows, "arrow path diverged from expression path"
-
         t0 = time.time()
         cents = kmeans_centroids(
             corpus, k=IVF_K, iters=2, seed=4242, dim=64
@@ -140,7 +130,6 @@ def main() -> None:
                     "queries": nq,
                     "corpus_build_sec": build_sec,
                     "brute_search_sec": brute_sec,
-                    "brute_arrow_sec": brute_arrow_sec,
                     "ivf_train_sec": train_sec,
                     "ivf_index_build_sec": index_build_sec,
                     "ivf_search_sec": ivf_sec,

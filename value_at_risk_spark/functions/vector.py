@@ -30,30 +30,19 @@ def vector_add(a: Column | str, b: Column | str) -> Column:
     return F.zip_with(_c(a), _c(b), lambda x, y: x + y)
 
 
-def dot_product(a: Column | str, b: Column | str, dim: int | None = None) -> Column:
-    """Σ aᵢ·bᵢ in double precision (cast before multiply for engine parity).
+def dot_product(a: Column | str, b: Column | str) -> Column:
+    """Σ aᵢ·bᵢ in double precision (cast before multiply for engine
+    parity), as one ``aggregate(zip_with(...))`` fold, left to right
+    from 0.0.
 
-    With ``dim`` (array width known at plan-build time) the sum
-    unrolls to a flat ``element_at`` chain that whole-stage codegen
-    compiles; the generic HOF form is interpreted per row. Same
-    left-to-right fold order ⇒ bit-identical results either way.
-
-    Crossover (measured, local[32]): unrolling wins decisively for
-    NARROW arrays (dim ≲ 24 — the 21-term VaR predictor went 19×
-    faster), but LOSES for wide ones (dim = 64: ~2× slower at 16 M
-    pairs — the generated method blows past JIT/codegen size limits
-    and falls back to per-expression interpretation, which is worse
-    than the HOF's single tight loop). Pass ``dim`` for narrow
-    fixed-width vectors only.
+    The fold is the only form: an unrolled ``element_at`` chain wins
+    only for narrow arrays, and the one narrow caller, the 21-term VaR
+    predictor, has its own unrolled form (``predict_expanded``). For
+    dense vector math (cosine top-k, near-dup, cell assignment at many
+    cells) the engine uses the Arrow/BLAS kernels in
+    ``operators/similarity``, not a per-pair expression.
     """
     a, b = _c(a), _c(b)
-    if dim is not None:
-        acc = F.lit(0.0)
-        for i in range(1, dim + 1):
-            acc = acc + F.element_at(a, i).cast("double") * F.element_at(
-                b, i
-            ).cast("double")
-        return acc
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
@@ -61,8 +50,8 @@ def dot_product(a: Column | str, b: Column | str, dim: int | None = None) -> Col
     )
 
 
-def vector_norm(a: Column | str, dim: int | None = None) -> Column:
-    return F.sqrt(dot_product(a, a, dim=dim))
+def vector_norm(a: Column | str) -> Column:
+    return F.sqrt(dot_product(a, a))
 
 
 DIM_METADATA_KEY = "dim"
@@ -98,18 +87,15 @@ def resolve_dim(df, vec_col: str, dim: int | None = None, caller: str = "") -> i
     return int(row[0])
 
 
-def cosine_similarity(
-    a: Column | str, b: Column | str, dim: int | None = None
-) -> Column:
-    """dot(a,b) / (‖a‖·‖b‖); the similarity-search kernel.
+def cosine_similarity(a: Column | str, b: Column | str) -> Column:
+    """dot(a,b) / (‖a‖·‖b‖) as a per-row expression (candidate re-rank
+    after an equi-join: LSH, IVF, PQ).
 
     ``try_divide``: a zero vector has no direction — its cosine is
     NULL (which sorts last in rankings and fails threshold filters)
-    rather than an ANSI DIVIDE_BY_ZERO error."""
-    return F.try_divide(
-        dot_product(a, b, dim=dim),
-        vector_norm(a, dim=dim) * vector_norm(b, dim=dim),
-    )
+    rather than an ANSI DIVIDE_BY_ZERO error. The Arrow kernels in
+    ``operators/similarity`` keep the same rule."""
+    return F.try_divide(dot_product(a, b), vector_norm(a) * vector_norm(b))
 
 
 def squared_distance(a: Column | str, b: Column | str) -> Column:
@@ -226,8 +212,8 @@ def _array2_sql(mat) -> str:
 def jl_project(vec: str, matrix: list[list[float]]) -> Column:
     """Project the column ``vec`` through a literal JL matrix:
     out[i] = Rᵢ · v, one HOF dot product per output dimension (the
-    narrow-dot unroll crossover doesn't apply — the 64-wide fold
-    repeats per output row, the same reasoning as nearest_cell_expr).
+    same fold as ``dot_product``, repeated per output row, the same
+    shape as nearest_cell_expr).
     Entirely plan-side: no shuffle, no Python, streaming-safe.
 
     The out_dim x in_dim literal tree is rendered as ONE SQL string

@@ -735,7 +735,7 @@ def tfidf_cosine_pairs(
     enough shared vocabulary to emit pairs) makes the worst case
     O(N²): one token sitting at the cap contributes ~0.16·N² pairs.
     Proportional caps are a small-corpus tool; the 10×-docs growth
-    arm (tools/perf_r16_growth.py) measures the constant-cap wall.
+    run in PERF.md (Round 16) records the constant-cap wall.
     """
     tf = tfidf_postings(docs, id_col=id_col, text_col=text_col)
     n_docs = docs.count()

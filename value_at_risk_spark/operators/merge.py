@@ -64,44 +64,23 @@ def scd2_apply(
     ).unionByName(fresh)
 
 
-def merge_into_delta(
-    spark,
-    target_path: str,
-    updates: DataFrame,
-    keys: list[str],
-) -> None:
-    """MERGE pushdown for Delta targets: when the environment ships
-    delta-spark (sources.registry.delta_available), the upsert runs as
-    a transactional ``DeltaTable.merge`` — file-level rewrite of only
-    the touched files, concurrent-writer safe — instead of the full
-    anti-join + union rewrite above. Same row-level semantics as
-    ``upsert`` (updates win on key collision, unmatched rows pass
-    through), asserted by the import-gated roundtrip test.
+def _shared(df: DataFrame, readers: int) -> DataFrame:
+    """``df`` materialized once with ``localCheckpoint`` when more than
+    one reader consumes it in one MERGE attempt — the rule the MERGE
+    source already follows. Each further reader of an unmaterialized
+    frame re-scans the touched files and re-runs the joins, and a
+    non-deterministic input could hand the readers different rows."""
+    return df.localCheckpoint(eager=True) if readers > 1 else df
 
-    ``DeltaTable.merge`` throws at RUNTIME when multiple source rows
-    match one target row, and an empty key list would render an empty
-    (invalid) merge condition — so keys are validated here and
-    ``updates`` is deduplicated to one row per key (latest wins is the
-    caller's job; ties are arbitrary, same as ``upsert``'s union).
-    """
-    if not keys:
-        raise ValueError("merge_into_delta: keys must be non-empty")
-    missing = [k for k in keys if k not in updates.columns]
-    if missing:
-        raise ValueError(f"merge_into_delta: keys not in updates: {missing}")
 
-    from delta.tables import DeltaTable  # gated: ImportError if absent
+def _write_readers(snap0) -> int:
+    """Readers of a MERGE's merged rows at write time: the staged
+    write, plus the NOT NULL probe and the CHECK pass when the table
+    has them."""
+    from value_at_risk_spark.sources.deltalog import table_constraints
 
-    updates = updates.dropDuplicates(keys)
-    cond = " AND ".join(f"t.{k} = u.{k}" for k in keys)
-    (
-        DeltaTable.forPath(spark, target_path)
-        .alias("t")
-        .merge(updates.alias("u"), cond)
-        .whenMatchedUpdateAll()
-        .whenNotMatchedInsertAll()
-        .execute()
-    )
+    nullable = all(f.nullable for f in snap0.schema.fields)
+    return 1 + (not nullable) + bool(table_constraints(snap0))
 
 
 def _check_merge_clauses(
@@ -140,12 +119,10 @@ def _merge_with_clauses(
     Clause conditions and update/insert expressions are SQL strings
     resolving ``t.<col>`` / ``s.<col>`` (nested SET targets are not
     supported here — assign the whole struct). Returns (merged_df,
-    cdc_df | None, tagged_df): the caller should persist/unpersist
-    ``tagged_df`` around consumption — merged and the four cdc
-    branches all derive from the same full-outer join, which would
-    otherwise recompute per consumer. cdc rows carry MERGE semantics
-    (update pre/post pairs, deletes, inserts; untouched rows
-    absent)."""
+    cdc_df | None). With ``want_cdc`` the merged rows and the cdc
+    branches all read the one full-outer join, so it is materialized
+    once (``_shared``). cdc rows carry MERGE semantics (update
+    pre/post pairs, deletes, inserts; untouched rows absent)."""
     import uuid as _uuid
 
     from value_at_risk_spark.sources.deltalog import _set_cast_type
@@ -261,6 +238,7 @@ def _merge_with_clauses(
         *out_cols,
         *[F.col(tq(c)).alias(f"{pre_pfx}{c}") for c in tcols],
     )
+    tagged = _shared(tagged, 1 + want_cdc)
     drop = set(del_tags) | {"noins"}
     merged = tagged.filter(~F.col(act_col).isin(*drop)).select(*[
         "`" + c.replace("`", "``") + "`" for c in tcols
@@ -292,7 +270,61 @@ def _merge_with_clauses(
         cdc = pre.unionByName(post).unionByName(ins)
         if dels is not None:
             cdc = cdc.unionByName(dels)
-    return merged, cdc, tagged
+    return merged, cdc
+
+
+def _merge_rows(
+    target: DataFrame,
+    deduped: DataFrame,
+    keys: list[str],
+    snap0,
+    general: bool,
+    m_cl: list[dict],
+    nm_cl: list[dict],
+    bs_cl: list[dict],
+):
+    """(merged rows, cdc rows | None) of one MERGE attempt over
+    ``target`` — the whole table or the touched-file slice. The clause
+    engine for ``general``, else the upsert-star anti-join + union;
+    cdc rows only on a CDF table. On the upsert path with CDF, the
+    merge and the cdc rows both read ``target``, so it is materialized
+    once (``_shared``)."""
+    from value_at_risk_spark.sources.deltalog import (
+        cdf_enabled,
+        table_default_columns,
+    )
+
+    want_cdc = cdf_enabled(snap0)
+    if general:
+        return _merge_with_clauses(
+            target,
+            deduped,
+            keys,
+            snap0.schema.fields,
+            m_cl,
+            nm_cl,
+            bs_cl,
+            want_cdc=want_cdc,
+            defaults=table_default_columns(snap0),
+        )
+    target = _shared(target, 1 + want_cdc)
+    merged = upsert(target, deduped, keys)
+    if not want_cdc:
+        return merged, None
+    aligned = deduped.select(
+        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in snap0.schema.fields]
+    )
+    target_keys = target.select(*keys)
+    pre = target.join(
+        deduped.select(*keys), on=keys, how="left_semi"
+    ).withColumn("_change_type", F.lit("update_preimage"))
+    post = aligned.join(target_keys, on=keys, how="left_semi").withColumn(
+        "_change_type", F.lit("update_postimage")
+    )
+    ins = aligned.join(target_keys, on=keys, how="left_anti").withColumn(
+        "_change_type", F.lit("insert")
+    )
+    return merged, pre.unionByName(post).unionByName(ins)
 
 
 def merge_into_delta_native(
@@ -306,9 +338,8 @@ def merge_into_delta_native(
     not_matched_by_source: list[dict] | None = None,
     txn: dict | None = None,
 ) -> int:
-    """MERGE against a NATIVE delta-log table (sources/deltalog.py) —
-    the no-delta-spark counterpart of ``merge_into_delta``, committed
-    as one copy-on-write version, so readers flip atomically from
+    """MERGE against a NATIVE delta-log table (sources/deltalog.py),
+    committed as one copy-on-write version, so readers flip atomically from
     pre-merge to post-merge state and time travel keeps the pre-merge
     snapshot. Returns the committed version — or -1 unwritten when
     ``txn`` ({appId, version}) identifies a batch the table has
@@ -366,12 +397,9 @@ def merge_into_delta_native(
         DeltaConcurrentModification,
         _mapping_planes,
         _stage_cdc,
-        cdf_enabled,
         read_delta,
         row_tracking_enabled,
         snapshot,
-        table_constraints,
-        table_default_columns,
         table_generated_columns,
         table_identity_columns,
         write_delta,
@@ -496,44 +524,10 @@ def merge_into_delta_native(
                     return rv
                 continue  # commit conflict: re-read the tip and retry
         target = read_delta(spark, target_path, version=read_v)
-        cdc_df = None
-        tagged = None
-        if general:
-            merged, cdc_df, tagged = _merge_with_clauses(
-                target,
-                deduped,
-                keys,
-                snap0.schema.fields,
-                m_cl,
-                nm_cl,
-                bs_cl,
-                want_cdc=cdf_enabled(snap0),
-                defaults=table_default_columns(snap0),
-            )
-            # merged + the cdc branches all derive from ONE full-outer
-            # join: persist it so the write and the cdc staging do not
-            # recompute the join per consumer
-            tagged.persist()
-        else:
-            merged = upsert(target, deduped, keys)
-            if cdf_enabled(snap0):
-                aligned = deduped.select(
-                    *[
-                        F.col(f.name).cast(f.dataType).alias(f.name)
-                        for f in snap0.schema.fields
-                    ]
-                )
-                target_keys = target.select(*keys)
-                pre = target.join(
-                    deduped.select(*keys), on=keys, how="left_semi"
-                ).withColumn("_change_type", F.lit("update_preimage"))
-                post = aligned.join(
-                    target_keys, on=keys, how="left_semi"
-                ).withColumn("_change_type", F.lit("update_postimage"))
-                ins = aligned.join(
-                    target_keys, on=keys, how="left_anti"
-                ).withColumn("_change_type", F.lit("insert"))
-                cdc_df = pre.unionByName(post).unionByName(ins)
+        merged, cdc_df = _merge_rows(
+            target, deduped, keys, snap0, general, m_cl, nm_cl, bs_cl
+        )
+        merged = _shared(merged, _write_readers(snap0))
         extra = None
         if cdc_df is not None:
             # cdc files carry PHYSICAL names on column-mapped tables,
@@ -560,9 +554,6 @@ def merge_into_delta_native(
             )
         except DeltaConcurrentModification:
             continue
-        finally:
-            if tagged is not None:
-                tagged.unpersist()
     raise RuntimeError(
         f"merge_into_delta_native: conflicted 16 times at {target_path}"
     )
@@ -603,6 +594,11 @@ def _merge_pruned(
     the REWRITTEN rows (untouched files were validated when written):
     NOT NULL invariants and CHECK constraints run over the merged
     slice; append-only and writer-version refusals match write_delta.
+    A frame that more than one reader consumes (the touched slice or
+    the clause join on a CDF table, the merged slice under NOT NULL or
+    CHECK) is materialized once per attempt (``_shared``), so each
+    touched row is scanned once; the whole-table overwrite path keeps
+    the same rule.
     """
     from value_at_risk_spark.sources.deltalog import (
         _check_constraints,
@@ -614,10 +610,8 @@ def _merge_pruned(
         _stage,
         _stage_cdc,
         _wants_auto_compact,
-        cdf_enabled,
         read_delta,
         table_constraints,
-        table_default_columns,
     )
 
     read_v = snap0.version
@@ -629,100 +623,62 @@ def _merge_pruned(
         # no file holds any source key: the target slice is empty and
         # the merge reduces to the not-matched (insert) clauses
         target = read_delta(spark, target_path, version=read_v).limit(0)
-    cdc_df = None
-    tagged = None
-    want_cdc = cdf_enabled(snap0)
-    try:
-        if general:
-            merged, cdc_df, tagged = _merge_with_clauses(
-                target,
-                deduped,
-                keys,
-                snap0.schema.fields,
-                m_cl,
-                nm_cl,
-                [],
-                want_cdc=want_cdc,
-                defaults=table_default_columns(snap0),
-            )
-            tagged.persist()
-        else:
-            merged = upsert(target, deduped, keys)
-            if want_cdc:
-                aligned = deduped.select(
-                    *[
-                        F.col(f.name).cast(f.dataType).alias(f.name)
-                        for f in snap0.schema.fields
-                    ]
-                )
-                target_keys = target.select(*keys)
-                pre = target.join(
-                    deduped.select(*keys), on=keys, how="left_semi"
-                ).withColumn("_change_type", F.lit("update_preimage"))
-                post = aligned.join(
-                    target_keys, on=keys, how="left_semi"
-                ).withColumn("_change_type", F.lit("update_postimage"))
-                ins = aligned.join(
-                    target_keys, on=keys, how="left_anti"
-                ).withColumn("_change_type", F.lit("insert"))
-                cdc_df = pre.unionByName(post).unionByName(ins)
-        # align to the table schema exactly (write_delta's overwrite
-        # cast the frame the same way before staging)
-        merged = merged.select(
+    merged, cdc_df = _merge_rows(
+        target, deduped, keys, snap0, general, m_cl, nm_cl, []
+    )
+    # align to the table schema exactly (write_delta's overwrite cast
+    # the frame the same way before staging)
+    merged = _shared(
+        merged.select(
             *[
                 F.col(f.name).cast(f.dataType).alias(f.name)
                 for f in snap0.schema.fields
             ]
-        )
-        null_cols = [f.name for f in snap0.schema.fields if not f.nullable]
-        if null_cols:
-            bad_cond = F.lit(False)
-            for c in null_cols:
-                bad_cond = bad_cond | F.col(c).isNull()
-            bad = merged.filter(bad_cond).limit(1).collect()
-            if bad:
-                raise ValueError(
-                    "merge_into_delta_native: NOT NULL invariant "
-                    f"violated for column(s) {null_cols} by row "
-                    f"{bad[0].asDict()}"
-                )
-        cons = table_constraints(snap0)
-        if cons:
-            _check_constraints(merged, cons, "merge_into_delta_native")
-        # bound the restage task count by the touched-file count
-        # (rewrite granularity ≈ input granularity, the delete path's
-        # rule); a pure-insert merge (no touched files) stages one
-        adds = _stage(
-            to_phys(merged).repartition(max(len(touched), 1)),
+        ),
+        _write_readers(snap0),
+    )
+    null_cols = [f.name for f in snap0.schema.fields if not f.nullable]
+    if null_cols:
+        bad_cond = F.lit(False)
+        for c in null_cols:
+            bad_cond = bad_cond | F.col(c).isNull()
+        bad = merged.filter(bad_cond).limit(1).collect()
+        if bad:
+            raise ValueError(
+                "merge_into_delta_native: NOT NULL invariant "
+                f"violated for column(s) {null_cols} by row "
+                f"{bad[0].asDict()}"
+            )
+    cons = table_constraints(snap0)
+    if cons:
+        _check_constraints(merged, cons, "merge_into_delta_native")
+    # bound the restage task count by the touched-file count (rewrite
+    # granularity ≈ input granularity, the delete path's rule); a
+    # pure-insert merge (no touched files) stages one
+    adds = _stage(
+        to_phys(merged).repartition(max(len(touched), 1)),
+        target_path,
+        io_snap.partition_columns,
+        data_change=True,
+    )
+    extra = None
+    if cdc_df is not None:
+        extra = _stage_cdc(
+            to_phys(cdc_df),
             target_path,
             io_snap.partition_columns,
-            data_change=True,
         )
-        extra = None
-        if cdc_df is not None:
-            extra = _stage_cdc(
-                to_phys(cdc_df),
-                target_path,
-                io_snap.partition_columns,
-            )
-        ok = _commit_rewrite(
-            target_path,
-            read_v,
-            "MERGE",
-            {
-                "predicate": " AND ".join(
-                    f"t.`{k}` = s.`{k}`" for k in keys
-                )
-            },
-            touched,
-            adds,
-            snap0,
-            cdc_actions=extra,
-            txn=txn,
-        )
-    finally:
-        if tagged is not None:
-            tagged.unpersist()
+    ok = _commit_rewrite(
+        target_path,
+        read_v,
+        "MERGE",
+        {"predicate": " AND ".join(f"t.`{k}` = s.`{k}`" for k in keys)},
+        touched,
+        adds,
+        snap0,
+        cdc_actions=extra,
+        txn=txn,
+    )
     if not ok:
         # conflict: staged files become vacuum-collectable orphans,
         # the same torn-state story as any failed commit

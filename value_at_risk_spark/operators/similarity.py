@@ -1,14 +1,32 @@
 """Similarity search over embedding columns (north-star surface).
 
-Brute-force cosine top-k as the exact baseline, and an LSH-bucketed
-(random-hyperplane) variant as the scale path. Embeddings are plain
-``array<float>`` columns (FIXTURES.md: 64-dim).
+Exact cosine has ONE implementation: Arrow batches through one numpy
+gram kernel (``_cosine_gram``, a single BLAS call per batch or block
+pair). It serves the broadcast-query top-k (``cosine_topk``), the
+block-pair all-pairs kernels (``cosine_near_dup_pairs``,
+``cosine_allpairs_topk_blocked``), the per-cell ANN graph and the
+reference-set scans. The approximate paths (LSH buckets, IVF, PQ,
+SemDeDup cells) generate candidates and rank them by the same cosine.
+Embeddings are plain ``array<float|double>`` columns (FIXTURES.md:
+64-dim).
+
+The contract every exact kernel keeps:
+- rounding: raw similarities cross the Arrow boundary and the Spark
+  plan applies the one authoritative rounding, ``F.round(c, r) + 0.0``
+  (HALF_UP on the shortest decimal repr; ``+ 0.0`` collapses -0.0);
+  top-k ranks on the rounded value, ties to the smaller id;
+- a pair with a zero vector has a NULL cosine, as
+  ``functions/vector.cosine_similarity``'s ``try_divide`` gives (and
+  DuckDB's ``1.0/0.0``): top-k ranks it after every finite cosine, a
+  threshold never passes it;
+- top-k excludes self-pairs (the same id on both sides).
 
 Scale design:
-- brute force is a broadcast of the (small) query set against the full
-  corpus — a map-side nested loop with a native dot-product expression;
-  cost O(|Q|·N·d) entirely in codegen, no shuffle except the final
-  top-k window on |Q|·N rows (or groupBy-min_by for k=1).
+- brute force: the small query set collects into the task closure and
+  each corpus Arrow batch computes Q @ Vᵀ, emitting only its
+  batch-local top-k per query; one window merges the candidates.
+- all-pairs (the queries ARE the corpus): rows hash into B blocks,
+  each unordered block pair is one applyInPandas task.
 - LSH: b random hyperplanes → b-bit bucket signature; candidates =
   bucket collisions (equi-join), exact cosine re-rank only on
   candidates. Hyperplanes come from a seeded driver-side numpy RNG and
@@ -35,6 +53,69 @@ from value_at_risk_spark.functions.vector import (
 )
 
 
+def _matrix(vectors) -> np.ndarray:
+    """(n, d) float64 matrix of an Arrow batch's vector column."""
+    return np.array(list(vectors), dtype=np.float64)
+
+
+def _row_norms(V: np.ndarray) -> np.ndarray:
+    """Row L2 norms, NaN for a zero vector: it has no direction, so
+    every cosine it takes part in comes out NaN, which crosses the
+    Arrow boundary as NULL."""
+    n = np.linalg.norm(V, axis=1)
+    n[n == 0.0] = np.nan
+    return n
+
+
+def _cosine_gram(A, B, na=None, nb=None) -> np.ndarray:
+    """The one exact-cosine kernel: (A @ Bᵀ) / (‖a‖·‖b‖) with one BLAS
+    call, NaN (NULL) wherever either row is a zero vector. A side
+    reused across batches passes its ``_row_norms`` once."""
+    na = _row_norms(A) if na is None else na
+    nb = _row_norms(B) if nb is None else nb
+    return (A @ B.T) / (na[:, None] * nb[None, :])
+
+
+def _pairs_frame(a, b, raw, names=("query_id", "neighbor_id")) -> pd.DataFrame:
+    """A kernel's typed (id, id, _raw) output batch; empty lists give
+    the typed empty batch."""
+    return pd.DataFrame(
+        {
+            names[0]: np.asarray(a, dtype=np.int64),
+            names[1]: np.asarray(b, dtype=np.int64),
+            "_raw": np.asarray(raw, dtype=np.float64),
+        }
+    )
+
+
+def _round_sim(sim, round_to: int | None):
+    """The one authoritative rounding of a cosine column; ``+ 0.0``
+    collapses IEEE negative zero (oracle value-hash parity)."""
+    sim = F.col(sim) if isinstance(sim, str) else sim
+    return sim if round_to is None else F.round(sim, round_to) + F.lit(0.0)
+
+
+def _topk_tail(
+    cand: DataFrame,
+    k: int,
+    round_to: int | None,
+    query_id: str = "query_id",
+    corpus_id: str = "neighbor_id",
+    raw="_raw",
+) -> DataFrame:
+    """Round the candidates' cosine, then keep each query's top k under
+    the contract order (cosine desc with NULLs last, id asc). Output:
+    (query_id, corpus_id, cosine, rank)."""
+    w = Window.partitionBy(query_id).orderBy(
+        F.desc("cosine"), F.asc(corpus_id)
+    )
+    return (
+        cand.select(query_id, corpus_id, _round_sim(raw, round_to).alias("cosine"))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+    )
+
+
 def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -43,44 +124,48 @@ def cosine_topk(
     corpus_id: str = "neighbor_id",
     vec_col: str = "embedding",
     round_to: int | None = 6,
-    dim: int | None = None,
 ) -> DataFrame:
     """Exact top-k cosine neighbors per query (self-matches excluded).
 
-    queries: (query_id, vec_col); corpus: (corpus_id, vec_col).
-    Output: (query_id, neighbor_id, cosine, rank), rank 1..k, ties
-    broken by neighbor id for determinism.
-    """
-    # norms precomputed per side: O((|Q|+N)·d) instead of re-deriving
-    # both norms inside every one of the |Q|·N pair expressions
-    q = queries.select(
-        F.col(query_id),
-        F.col(vec_col).alias("_qv"),
-        vector_norm(vec_col, dim=dim).alias("_qn"),
+    queries: (query_id, vec_col); corpus: (corpus_id, vec_col), both
+    ids integral. Output: (query_id, neighbor_id, cosine, rank), rank
+    1..k under the module contract (rounded cosine desc, NULL last,
+    neighbor id asc).
+
+    The query block is collected once (bounded: a query BATCH is
+    nq x dim floats — the same edge-collect class as the k-means
+    codebooks) and shipped in the task closure; every Arrow batch of
+    the corpus computes Q @ Vᵀ as ONE BLAS call and emits only each
+    query's batch-local top-k (nq·k rows per batch, never the pair
+    matrix). A final per-query window merges the candidates."""
+    qrows = queries.select(query_id, vec_col).collect()
+    if not qrows:
+        return queries.sparkSession.createDataFrame(
+            [], f"{query_id} long, {corpus_id} long, cosine double, rank int"
+        )
+    qids = np.array([r[0] for r in qrows], dtype=np.int64)
+    Q = np.array([r[1] for r in qrows], dtype=np.float64)
+    Qn = _row_norms(Q)
+    kk = int(k)
+
+    def _score(batches):
+        for pdf in batches:
+            ids = pdf[corpus_id].to_numpy(dtype=np.int64)
+            V = _matrix(pdf[vec_col])
+            if V.size == 0:
+                continue
+            sims = _cosine_gram(Q, V, Qn)
+            sims[qids[:, None] == ids[None, :]] = -np.inf  # self-matches
+            out_q: list[int] = []
+            out_c: list[int] = []
+            out_s: list[float] = []
+            _batch_topk_emit(sims, qids, ids, kk, round_to, out_q, out_c, out_s)
+            yield _pairs_frame(out_q, out_c, out_s, (query_id, corpus_id))
+
+    cand = corpus.select(corpus_id, vec_col).mapInPandas(
+        _score, schema=f"{query_id} long, {corpus_id} long, _raw double"
     )
-    c = corpus.select(
-        F.col(corpus_id),
-        F.col(vec_col).alias("_cv"),
-        vector_norm(vec_col, dim=dim).alias("_cn"),
-    )
-    sim = F.try_divide(
-        dot_product("_qv", "_cv", dim=dim), F.col("_qn") * F.col("_cn")
-    )
-    if round_to is not None:
-        # + 0.0 collapses IEEE negative zero after rounding (oracle parity)
-        sim = F.round(sim, round_to) + F.lit(0.0)
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col(query_id) != F.col(corpus_id))
-        .select(query_id, corpus_id, sim.alias("cosine"))
-    )
-    w = Window.partitionBy(query_id).orderBy(
-        F.desc("cosine"), F.asc(corpus_id)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _topk_tail(cand, k, round_to, query_id, corpus_id)
 
 
 def hyperplane_lsh_buckets(
@@ -153,22 +238,11 @@ def lsh_topk(
     cb = hyperplane_lsh_buckets(
         corpus.select(corpus_id, vec_col), vec_col, dim, num_planes
     ).select(corpus_id, F.col(vec_col).alias("_cv"), "bucket")
-    scored = (
-        cb.join(F.broadcast(qb), on="bucket")
-        .filter(F.col(query_id) != F.col(corpus_id))
-        .select(
-            query_id,
-            corpus_id,
-            # + 0.0 normalizes -0.0 so a typed value-hash against a
-            # SQL replay can't flake on signed zero
-            (F.round(cosine_similarity("_qv", "_cv"), 6) + F.lit(0.0)).alias(
-                "cosine"
-            ),
-        )
+    cand = cb.join(F.broadcast(qb), on="bucket").filter(
+        F.col(query_id) != F.col(corpus_id)
     )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cosine"), F.asc(corpus_id))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
+    return _topk_tail(
+        cand, k, 6, query_id, corpus_id, cosine_similarity("_qv", "_cv")
     )
 
 
@@ -312,9 +386,8 @@ def cosine_near_dup_pairs_lsh(
         )
     )
     sim = F.try_divide(dot_product("_va", "_vb"), F.col("_na") * F.col("_nb"))
-    sim_out = F.round(sim, round_to) + F.lit(0.0) if round_to is not None else sim
     return cand.filter(sim >= F.lit(threshold)).select(
-        "id_a", "id_b", sim_out.alias("cosine")
+        "id_a", "id_b", _round_sim(sim, round_to).alias("cosine")
     )
 
 
@@ -324,71 +397,56 @@ def cosine_near_dup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_to: int | None = 6,
-    dim: int | None = None,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (exact baseline).
-
-    All ordered pairs (id_a < id_b) with cosine ≥ threshold, via a
-    broadcast block nested-loop self-join and the native dot-product
-    expression — exact, and the shape to verify candidates against. At
-    corpus sizes where O(N²/2) is no longer affordable, generate
-    candidates with ``hyperplane_lsh_buckets`` collisions (the same
-    bucketed equi-join as ``lsh_topk``) and run THIS exact predicate
-    only on collisions; the threshold filter is identical either way.
-    """
-    # Precompute each side's L2 norm BEFORE the join: norm work is
-    # O(N·d) instead of O(N²·d) inside the pair predicate, and the
-    # join-condition cosine collapses to one dot product + one divide.
-    a = df.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("_va"),
-        vector_norm(vec_col, dim=dim).alias("_na"),
-    )
-    b = df.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("_vb"),
-        vector_norm(vec_col, dim=dim).alias("_nb"),
-    )
-    sim = F.try_divide(
-        dot_product("_va", "_vb", dim=dim), F.col("_na") * F.col("_nb")
-    )
-    if round_to is not None:
-        sim_out = F.round(sim, round_to) + F.lit(0.0)
-    else:
-        sim_out = sim
-    return (
-        a.join(F.broadcast(b), F.col("id_a") < F.col("id_b"))
-        .filter(sim >= F.lit(threshold))
-        .select("id_a", "id_b", sim_out.alias("cosine"))
-    )
-
-
-def cosine_near_dup_pairs_blocked(
-    df: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int | None = 6,
     num_blocks: int = 8,
 ) -> DataFrame:
-    """Exact all-pairs cosine ≥ threshold via BLOCK-partitioned Arrow
-    matmul — same contract as ``cosine_near_dup_pairs`` (equality
-    pytest-pinned), ~10x faster where the expression form pays an
-    interpreted HOF dot product per pair (dim 64 is past the codegen
-    unroll crossover; see functions/vector.dot_product).
+    """Exact embedding-cosine near-duplicate pairs: every unordered pair
+    (id_a < id_b, integral ids) with cosine ≥ threshold, by
+    block-partitioned Arrow matmul. Output: (id_a, id_b, cosine).
 
-    The textbook distributed exact all-pairs: rows hash into B blocks;
-    each unordered block pair (i <= j) is one applyInPandas task whose
-    kernel computes the cross-block gram matrix with ONE BLAS call and
-    emits only the above-threshold pairs (id_a < id_b). Replication
-    factor is B per row (N·B rows shuffled, B(B+1)/2 tasks), so B
-    trades task parallelism against shuffle volume — still O(N²·d)
-    compute, as any exact method must be; the LSH variant remains the
-    sub-quadratic scale path. Raw similarities cross the Arrow
-    boundary; the FINAL rounding runs in the Spark plan (F.round+0.0)
-    so output rounding semantics are bit-identical to the expression
-    form."""
-    spark = df.sparkSession
+    The textbook distributed exact all-pairs (``_block_pair_groups``):
+    rows hash into B blocks; each unordered block pair (i <= j) is one
+    applyInPandas task whose kernel computes the cross-block gram with
+    ONE BLAS call and emits only the above-threshold pairs.
+    Replication factor is B per row (N·B rows shuffled, B(B+1)/2
+    tasks), so B trades task parallelism against shuffle volume —
+    still O(N²·d) compute, as any exact method must be. At corpus
+    sizes where that is no longer affordable, generate candidates with
+    sign-LSH (``cosine_near_dup_pairs_lsh``) and verify only
+    collisions; the threshold predicate is identical either way."""
+    thr = float(threshold)
+
+    def _pairs(pdf: pd.DataFrame) -> pd.DataFrame:
+        g = _block_pair_gram(pdf)
+        if g is None:
+            return _pairs_frame([], [], [], ("id_a", "id_b"))
+        diag, ids_l, ids_r, sims = g
+        ia, ib = np.nonzero(sims >= thr)  # NaN (zero vector) never passes
+        id_a, id_b = ids_l[ia], ids_r[ib]
+        keep = id_a != id_b
+        if diag:
+            keep &= id_a < id_b  # upper triangle once
+        id_a, id_b, raw = id_a[keep], id_b[keep], sims[ia, ib][keep]
+        return _pairs_frame(
+            np.minimum(id_a, id_b), np.maximum(id_a, id_b), raw,
+            ("id_a", "id_b"),
+        )
+
+    out = _block_pair_groups(df, id_col, vec_col, num_blocks).groupBy(
+        "_bi", "_bj"
+    ).applyInPandas(_pairs, "id_a long, id_b long, _raw double")
+    return out.select("id_a", "id_b", _round_sim("_raw", round_to).alias("cosine"))
+
+
+def _block_pair_groups(
+    df: DataFrame, id_col: str, vec_col: str, num_blocks: int
+) -> DataFrame:
+    """The block-pair grid of the two blocked all-pairs kernels: rows
+    hash into ``num_blocks`` blocks, and a row of block b joins the
+    groups (b, j >= b) as the LEFT side (_side 0) and the groups
+    (i < b, b) as the RIGHT side (_side 1) — strict, so a diagonal
+    group takes its rows from the left side only. Output
+    (_bi, _bj, _side, _id, _v); group on (_bi, _bj): one Exchange of
+    N·B rows, no cartesian product."""
     blk = F.pmod(F.xxhash64(F.col(id_col)), F.lit(num_blocks)).cast("int")
     base = df.select(
         F.col(id_col).alias("_id"),
@@ -398,8 +456,6 @@ def cosine_near_dup_pairs_blocked(
     grid = F.explode(
         F.array(*[F.lit(j) for j in range(num_blocks)])
     ).alias("_other")
-    # a row of block b serves as the LEFT side of groups (b, j>=b) and
-    # the RIGHT side of groups (i<=b, b); the union is the group input
     lefts = base.select(
         "_id", "_v", F.col("_blk").alias("_bi"), grid, F.lit(0).alias("_side")
     ).filter(F.col("_other") >= F.col("_bi")).withColumnRenamed(
@@ -409,58 +465,33 @@ def cosine_near_dup_pairs_blocked(
         "_id", "_v", grid, F.col("_blk").alias("_bj"), F.lit(1).alias("_side")
     ).filter(F.col("_bj") > F.col("_other")).withColumnRenamed(
         "_other", "_bi"
-    )  # strict: diagonal groups take their rows from the left side only
-    both = lefts.select("_bi", "_bj", "_side", "_id", "_v").unionByName(
-        rights.select("_bi", "_bj", "_side", "_id", "_v")
     )
-    thr = float(threshold)
+    cols = ("_bi", "_bj", "_side", "_id", "_v")
+    return lefts.select(*cols).unionByName(rights.select(*cols))
 
-    def _pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        left = pdf[pdf["_side"] == 0]
-        right = pdf[pdf["_side"] == 1]
-        # diag MUST come from the group key, not right.empty: lefts are
-        # exploded over every j >= bi regardless of occupancy, so an
-        # off-diagonal group whose block bj is EMPTY also has no side-1
-        # rows — misreading it as diagonal re-emits block bi's internal
-        # pairs once per empty higher block (duplicate candidates).
-        diag = bool(pdf["_bi"].iat[0] == pdf["_bj"].iat[0])
-        if left.empty or (right.empty and not diag):
-            return pd.DataFrame(
-                {"id_a": [], "id_b": [], "_raw": []}
-            ).astype({"id_a": np.int64, "id_b": np.int64, "_raw": float})
-        ids_l = left["_id"].to_numpy(dtype=np.int64)
-        V_l = np.array(list(left["_v"]), dtype=np.float64)
-        if diag:
-            ids_r, V_r = ids_l, V_l
-        else:
-            ids_r = right["_id"].to_numpy(dtype=np.int64)
-            V_r = np.array(list(right["_v"]), dtype=np.float64)
-        n_l = np.linalg.norm(V_l, axis=1)
-        n_r = np.linalg.norm(V_r, axis=1)
-        n_l[n_l == 0.0] = np.inf
-        n_r[n_r == 0.0] = np.inf
-        sims = (V_l @ V_r.T) / (n_l[:, None] * n_r[None, :])
-        ia, ib = np.nonzero(sims >= thr)
-        id_a, id_b = ids_l[ia], ids_r[ib]
-        keep = id_a != id_b
-        if diag:
-            keep &= id_a < id_b  # upper triangle once
-        id_a, id_b, raw = id_a[keep], id_b[keep], sims[ia, ib][keep]
-        lo = np.minimum(id_a, id_b)
-        hi = np.maximum(id_a, id_b)
-        return pd.DataFrame({"id_a": lo, "id_b": hi, "_raw": raw})
 
-    out = (
-        both.groupBy("_bi", "_bj")
-        .applyInPandas(_pairs, "id_a long, id_b long, _raw double")
-    )
-    sim_out = (
-        F.round(F.col("_raw"), round_to) + F.lit(0.0)
-        if round_to is not None
-        else F.col("_raw")
-    )
-    _ = spark  # session only needed for lineage clarity
-    return out.select("id_a", "id_b", sim_out.alias("cosine"))
+def _block_pair_gram(pdf: pd.DataFrame):
+    """(diag, left ids, right ids, cosine gram) of one block-pair group
+    of ``_block_pair_groups``, or None when the group holds no pair.
+
+    ``diag`` MUST come from the group key, not from an empty right
+    side: lefts are exploded over every j >= bi regardless of
+    occupancy, so an off-diagonal group whose block bj is EMPTY also
+    has no side-1 rows — read as diagonal, it would re-emit block bi's
+    internal pairs once per empty higher block (duplicate pairs, and
+    duplicate top-k candidates that each take a row_number)."""
+    left = pdf[pdf["_side"] == 0]
+    right = pdf[pdf["_side"] == 1]
+    diag = bool(pdf["_bi"].iat[0] == pdf["_bj"].iat[0])
+    if left.empty or (right.empty and not diag):
+        return None
+    ids_l = left["_id"].to_numpy(dtype=np.int64)
+    V_l = _matrix(left["_v"])
+    n_l = _row_norms(V_l)
+    if diag:
+        return True, ids_l, ids_l, _cosine_gram(V_l, V_l, n_l, n_l)
+    ids_r = right["_id"].to_numpy(dtype=np.int64)
+    return False, ids_l, ids_r, _cosine_gram(V_l, _matrix(right["_v"]), n_l)
 
 
 def _contract_topk_cols(sims_row, ids, k: int, round_to: int | None):
@@ -507,15 +538,22 @@ def _contract_topk_cols(sims_row, ids, k: int, round_to: int | None):
     return cols
 
 
+# Rank key of a NULL (zero-vector) cosine inside the batch cut: below
+# every finite cosine (|cos| <= 1 up to rounding error), above the
+# -inf that masks an excluded self-pair.
+_NULL_KEY = -2.0
+
+
 def _batch_topk_emit(sims, qids, cand_ids, kk, rt, out_q, out_c, out_s):
     """Append each query row's BATCH-LOCAL top-k candidates (contract
-    order: rounded sim desc, id asc) to the output lists — vectorized
-    cut for the tie-free common case, Decimal contract cut only on
-    rows whose rounded ties inflate the superset. Non-finite sims
-    (self-pairs masked to -inf) are never emitted. The one batch
-    top-k cut behind every Arrow top-k kernel: broadcast-query
-    (cosine_topk_arrow), reference-set (reference_topk_cosine),
-    blocked all-pairs and per-cell ANN graph.
+    order: rounded sim desc, NULL last, id asc) to the output lists —
+    vectorized cut for the tie-free common case, Decimal contract cut
+    only on rows whose rounded ties inflate the superset. -inf sims
+    (masked self-pairs) are never emitted; NaN sims (zero vectors)
+    rank as ``_NULL_KEY`` and are emitted as NaN, i.e. NULL. The one
+    batch top-k cut behind every Arrow top-k kernel: broadcast-query
+    (cosine_topk), reference-set (reference_topk_cosine and, at k=1,
+    reference_max_cosine), blocked all-pairs and per-cell ANN graph.
 
     Exact because any global winner is a batch winner under the same
     order: the raw-kth threshold keeps every candidate within one
@@ -523,27 +561,29 @@ def _batch_topk_emit(sims, qids, cand_ids, kk, rt, out_q, out_c, out_s):
     contract's top-k, since any c with round(c) >= round(kth)
     satisfies c >= kth - 10^-r. Emitted sims stay UNROUNDED so the
     Spark-side merge window applies the one authoritative rounding."""
-    n, m = sims.shape
+    null = np.isnan(sims)
+    key = np.where(null, _NULL_KEY, sims) if null.any() else sims
+    n, m = key.shape
     take = min(kk, m)
     if take == 0:
         return
-    part = np.argpartition(-sims, take - 1, axis=1)[:, :take]
-    kth = sims[np.arange(n)[:, None], part].min(axis=1)
+    part = np.argpartition(-key, take - 1, axis=1)[:, :take]
+    kth = key[np.arange(n)[:, None], part].min(axis=1)
     thr = kth if rt is None else kth - 10.0 ** (-rt)
-    mask = sims >= thr[:, None]
+    mask = key >= thr[:, None]
     counts = mask.sum(axis=1)
     easy = counts <= take
     if easy.any():
         eidx = np.nonzero(easy)[0]
         rows, cols = np.nonzero(mask[easy])
-        svals = sims[eidx[rows], cols]
-        keep = np.isfinite(svals)
-        out_q.extend(qids[eidx[rows[keep]]].tolist())
+        rows = eidx[rows]
+        keep = np.isfinite(key[rows, cols])
+        out_q.extend(qids[rows[keep]].tolist())
         out_c.extend(cand_ids[cols[keep]].tolist())
-        out_s.extend(svals[keep].tolist())
+        out_s.extend(sims[rows[keep], cols[keep]].tolist())
     for i in np.nonzero(~easy)[0]:
-        cols = _contract_topk_cols(sims[i], cand_ids, kk, rt)
-        cols = cols[np.isfinite(sims[i, cols])]
+        cols = _contract_topk_cols(key[i], cand_ids, kk, rt)
+        cols = cols[np.isfinite(key[i, cols])]
         out_q.extend([int(qids[i])] * len(cols))
         out_c.extend(cand_ids[cols].tolist())
         out_s.extend(sims[i, cols].tolist())
@@ -560,8 +600,8 @@ def cosine_allpairs_topk_blocked(
     """Exact top-k cosine neighbors for EVERY row (self excluded) via
     block-partitioned Arrow matmul — the all-queries sibling of
     ``cosine_topk`` (equality pytest-pinned incl. a tie-heavy corpus).
-    ``cosine_topk``/``cosine_topk_arrow`` broadcast the query set, so
-    they stop scaling when the queries ARE the corpus; here rows hash
+    ``cosine_topk`` broadcasts the query set, so it stops scaling
+    when the queries ARE the corpus; here rows hash
     into B blocks, each unordered block pair is one applyInPandas task
     computing the cross-block gram with ONE BLAS call, and each task
     emits only its rows' BATCH-LOCAL top-k against the opposite side
@@ -583,60 +623,15 @@ def cosine_allpairs_topk_blocked(
         import math
 
         num_blocks = min(256, max(8, math.ceil(df.count() / 2000)))
-    blk = F.pmod(F.xxhash64(F.col(id_col)), F.lit(num_blocks)).cast("int")
-    base = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_v"),
-        blk.alias("_blk"),
-    )
-    grid = F.explode(
-        F.array(*[F.lit(j) for j in range(num_blocks)])
-    ).alias("_other")
-    lefts = base.select(
-        "_id", "_v", F.col("_blk").alias("_bi"), grid, F.lit(0).alias("_side")
-    ).filter(F.col("_other") >= F.col("_bi")).withColumnRenamed(
-        "_other", "_bj"
-    )
-    rights = base.select(
-        "_id", "_v", grid, F.col("_blk").alias("_bj"), F.lit(1).alias("_side")
-    ).filter(F.col("_bj") > F.col("_other")).withColumnRenamed(
-        "_other", "_bi"
-    )
-    both = lefts.select("_bi", "_bj", "_side", "_id", "_v").unionByName(
-        rights.select("_bi", "_bj", "_side", "_id", "_v")
-    )
     kk, rt = int(k), round_to
 
     def _knn(pdf: pd.DataFrame) -> pd.DataFrame:
-        left = pdf[pdf["_side"] == 0]
-        right = pdf[pdf["_side"] == 1]
-        # group-key-derived, NOT right.empty: an off-diagonal group whose
-        # block bj is empty has no side-1 rows and must emit NOTHING —
-        # treating it as diagonal duplicated block bi's internal top-k
-        # once per empty higher block, and the duplicates each took a
-        # row_number in the merge window, displacing true neighbors.
-        diag = bool(pdf["_bi"].iat[0] == pdf["_bj"].iat[0])
-        ids_l = left["_id"].to_numpy(dtype=np.int64)
-        V_l = np.array(list(left["_v"]), dtype=np.float64)
         out_q: list[int] = []
         out_c: list[int] = []
         out_s: list[float] = []
-        if V_l.size == 0 or (right.empty and not diag):
-            return pd.DataFrame(
-                {"query_id": [], "neighbor_id": [], "_raw": []}
-            ).astype({"query_id": np.int64, "neighbor_id": np.int64,
-                      "_raw": float})
-        if diag:
-            ids_r, V_r = ids_l, V_l
-        else:
-            ids_r = right["_id"].to_numpy(dtype=np.int64)
-            V_r = np.array(list(right["_v"]), dtype=np.float64)
-        n_l = np.linalg.norm(V_l, axis=1)
-        n_r = np.linalg.norm(V_r, axis=1)
-        n_l[n_l == 0.0] = np.inf
-        n_r[n_r == 0.0] = np.inf
-        if V_r.size:
-            sims = (V_l @ V_r.T) / (n_l[:, None] * n_r[None, :])
+        g = _block_pair_gram(pdf)
+        if g is not None:
+            diag, ids_l, ids_r, sims = g
             sims[ids_l[:, None] == ids_r[None, :]] = -np.inf
             # left rows as queries, then (off-diagonal) right rows as
             # queries against the same gram transposed
@@ -646,26 +641,12 @@ def cosine_allpairs_topk_blocked(
                     np.ascontiguousarray(sims.T), ids_r, ids_l, kk, rt,
                     out_q, out_c, out_s,
                 )
-        return pd.DataFrame(
-            {"query_id": out_q, "neighbor_id": out_c, "_raw": out_s}
-        )
+        return _pairs_frame(out_q, out_c, out_s)
 
-    cand = both.groupBy("_bi", "_bj").applyInPandas(
-        _knn, "query_id long, neighbor_id long, _raw double"
-    )
-    sim = (
-        F.round(F.col("_raw"), round_to) + F.lit(0.0)
-        if round_to is not None
-        else F.col("_raw")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        cand.select("query_id", "neighbor_id", sim.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    cand = _block_pair_groups(df, id_col, vec_col, num_blocks).groupBy(
+        "_bi", "_bj"
+    ).applyInPandas(_knn, "query_id long, neighbor_id long, _raw double")
+    return _topk_tail(cand, k, round_to)
 
 
 def knn_graph_mutual(
@@ -919,45 +900,21 @@ def mutual_edges_from_cells(
     def _cell_knn(pdf: pd.DataFrame) -> pd.DataFrame:
         mem = pdf[pdf["_side"] == 0]
         qry = pdf[pdf["_side"] == 1]
-        if mem.empty or qry.empty:
-            return pd.DataFrame(
-                {"query_id": [], "neighbor_id": [], "_raw": []}
-            ).astype({"query_id": np.int64, "neighbor_id": np.int64,
-                      "_raw": float})
-        ids_m = mem["_id"].to_numpy(dtype=np.int64)
-        V_m = np.array(list(mem["_v"]), dtype=np.float64)
-        ids_q = qry["_id"].to_numpy(dtype=np.int64)
-        V_q = np.array(list(qry["_v"]), dtype=np.float64)
-        n_m = np.linalg.norm(V_m, axis=1)
-        n_q = np.linalg.norm(V_q, axis=1)
-        n_m[n_m == 0.0] = np.inf
-        n_q[n_q == 0.0] = np.inf
-        sims = (V_q @ V_m.T) / (n_q[:, None] * n_m[None, :])
-        sims[ids_q[:, None] == ids_m[None, :]] = -np.inf
         out_q: list[int] = []
         out_c: list[int] = []
         out_s: list[float] = []
-        _batch_topk_emit(sims, ids_q, ids_m, kk, rt, out_q, out_c, out_s)
-        return pd.DataFrame(
-            {"query_id": out_q, "neighbor_id": out_c, "_raw": out_s}
-        )
+        if not (mem.empty or qry.empty):
+            ids_m = mem["_id"].to_numpy(dtype=np.int64)
+            ids_q = qry["_id"].to_numpy(dtype=np.int64)
+            sims = _cosine_gram(_matrix(qry["_v"]), _matrix(mem["_v"]))
+            sims[ids_q[:, None] == ids_m[None, :]] = -np.inf
+            _batch_topk_emit(sims, ids_q, ids_m, kk, rt, out_q, out_c, out_s)
+        return _pairs_frame(out_q, out_c, out_s)
 
     cand = both.groupBy("_cell").applyInPandas(
         _cell_knn, "query_id long, neighbor_id long, _raw double"
     )
-    sim_out = (
-        F.round(F.col("_raw"), round_to) + F.lit(0.0)
-        if round_to is not None
-        else F.col("_raw")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    topk = (
-        cand.select("query_id", "neighbor_id", sim_out.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    topk = _topk_tail(cand, k, round_to)
     lo = F.least("query_id", "neighbor_id")
     hi = F.greatest("query_id", "neighbor_id")
     return (
@@ -991,51 +948,42 @@ def reference_max_cosine(
     F.round, same contract as the top-k kernels); emitted sims stay
     raw so the Spark plan applies the one authoritative rounding.
     Output: (corpus_id, ref_id, max_cosine)."""
-    rrows = ref.select(ref_id, vec_col).collect()
-    if not rrows:
-        raise ValueError("reference_max_cosine: empty reference set")
-    rids = np.array([r[0] for r in rrows], dtype=np.int64)
-    R = np.array([r[1] for r in rrows], dtype=np.float64)
-    Rn = np.linalg.norm(R, axis=1)
-    Rn[Rn == 0.0] = np.inf
+    rids, R, Rn = _reference_side(ref, ref_id, vec_col, "reference_max_cosine")
     rt = round_to
 
     def _score(batches):
         for pdf in batches:
-            ids = pdf["_cid"].to_numpy(dtype=np.int64)
-            V = np.array(list(pdf["_v"]), dtype=np.float64)
+            V = _matrix(pdf["_v"])
             if V.size == 0:
                 continue
-            Vn = np.linalg.norm(V, axis=1)
-            Vn[Vn == 0.0] = np.inf
-            sims = (V @ R.T) / (Vn[:, None] * Rn[None, :])
-            best = sims.max(axis=1)
-            thr = best if rt is None else best - 10.0 ** (-rt)
-            mask = sims >= thr[:, None]
-            counts = mask.sum(axis=1)
-            pick = sims.argmax(axis=1)
-            for i in np.nonzero(counts > 1)[0]:  # rounded ties only
-                cols = _contract_topk_cols(sims[i], rids, 1, rt)
-                pick[i] = cols[0]
-            yield pd.DataFrame(
-                {
-                    "_cid": ids,
-                    "ref_id": rids[pick],
-                    "_raw": sims[np.arange(len(ids)), pick],
-                }
+            out_q: list[int] = []
+            out_c: list[int] = []
+            out_s: list[float] = []
+            _batch_topk_emit(
+                _cosine_gram(V, R, None, Rn),
+                pdf["_cid"].to_numpy(dtype=np.int64), rids, 1, rt,
+                out_q, out_c, out_s,
             )
+            yield _pairs_frame(out_q, out_c, out_s, ("_cid", "ref_id"))
 
     out = corpus.select(
         F.col(corpus_id).alias("_cid"), F.col(vec_col).alias("_v")
     ).mapInPandas(_score, schema="_cid long, ref_id long, _raw double")
-    sim = (
-        F.round(F.col("_raw"), round_to) + F.lit(0.0)
-        if round_to is not None
-        else F.col("_raw")
-    )
     return out.select(
-        F.col("_cid").alias(corpus_id), "ref_id", sim.alias("max_cosine")
+        F.col("_cid").alias(corpus_id),
+        "ref_id",
+        _round_sim("_raw", round_to).alias("max_cosine"),
     )
+
+
+def _reference_side(ref: DataFrame, ref_id: str, vec_col: str, caller: str):
+    """(ids, vectors, ``_row_norms``) of a small reference set,
+    collected once for the task closure of a reference-set scan."""
+    rrows = ref.select(ref_id, vec_col).collect()
+    if not rrows:
+        raise ValueError(f"{caller}: empty reference set")
+    R = np.array([r[1] for r in rrows], dtype=np.float64)
+    return np.array([r[0] for r in rrows], dtype=np.int64), R, _row_norms(R)
 
 
 def reference_topk_cosine(
@@ -1057,43 +1005,30 @@ def reference_topk_cosine(
     Output: (corpus_id, ref_id, cosine) — rank assignment is left to
     the caller's merge window (the incremental-kNN use case merges
     these candidates with a STORED top-k before ranking)."""
-    rrows = ref.select(ref_id, vec_col).collect()
-    if not rrows:
-        raise ValueError("reference_topk_cosine: empty reference set")
-    rids = np.array([r[0] for r in rrows], dtype=np.int64)
-    R = np.array([r[1] for r in rrows], dtype=np.float64)
-    Rn = np.linalg.norm(R, axis=1)
-    Rn[Rn == 0.0] = np.inf
+    rids, R, Rn = _reference_side(ref, ref_id, vec_col, "reference_topk_cosine")
     rt, kk = round_to, int(k)
 
     def _score(batches):
         for pdf in batches:
             ids = pdf["_cid"].to_numpy(dtype=np.int64)
-            V = np.array(list(pdf["_v"]), dtype=np.float64)
+            V = _matrix(pdf["_v"])
             if V.size == 0:
                 continue
-            Vn = np.linalg.norm(V, axis=1)
-            Vn[Vn == 0.0] = np.inf
-            sims = (V @ R.T) / (Vn[:, None] * Rn[None, :])
+            sims = _cosine_gram(V, R, None, Rn)
             sims[ids[:, None] == rids[None, :]] = -np.inf
             out_q: list[int] = []
             out_c: list[int] = []
             out_s: list[float] = []
             _batch_topk_emit(sims, ids, rids, kk, rt, out_q, out_c, out_s)
-            yield pd.DataFrame(
-                {"_cid": out_q, "ref_id": out_c, "_raw": out_s}
-            )
+            yield _pairs_frame(out_q, out_c, out_s, ("_cid", "ref_id"))
 
     out = corpus.select(
         F.col(corpus_id).alias("_cid"), F.col(vec_col).alias("_v")
     ).mapInPandas(_score, schema="_cid long, ref_id long, _raw double")
-    sim = (
-        F.round(F.col("_raw"), round_to) + F.lit(0.0)
-        if round_to is not None
-        else F.col("_raw")
-    )
     return out.select(
-        F.col("_cid").alias(corpus_id), "ref_id", sim.alias("cosine")
+        F.col("_cid").alias(corpus_id),
+        "ref_id",
+        _round_sim("_raw", round_to).alias("cosine"),
     )
 
 
@@ -1144,7 +1079,7 @@ def knn_topk_incremental(
     # (2) new rows' OLD-side candidates: batch as queries against the
     # old corpus — the batch is small by nature, so the broadcast
     # top-k form is the right tool for exactly this side
-    from_batch = cosine_topk_arrow(
+    from_batch = cosine_topk(
         new_batch.select(F.col(id_col).alias("query_id"), vec_col),
         old_corpus.select(F.col(id_col).alias("neighbor_id"), vec_col),
         k=k, round_to=round_to,
@@ -1159,13 +1094,7 @@ def knn_topk_incremental(
         .unionByName(vs_batch)
         .unionByName(from_batch)
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        merged.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _topk_tail(merged, k, None, raw="cosine")
 
 
 def _cell_dists_sql(vec_col: str, centroids) -> str:
@@ -1181,8 +1110,8 @@ def _cell_dists_sql(vec_col: str, centroids) -> str:
     costs one py4j round-trip per node — measured ~26 s of pure
     DRIVER time to construct the k=40 x dim=64 assignment expression,
     repeated per k-means iteration. The SQL parser builds the tree
-    JVM-side in milliseconds. Why the HOF fold, not the unrolled
-    ``dim=`` form: k centroids x dim element_at terms in one
+    JVM-side in milliseconds. Why the HOF fold, not an unrolled
+    element_at chain: k centroids x dim element_at terms in one
     expression blow the codegen unit past JIT limits (measured 2x
     slower at ksub=16). Why array_sort, not a when/least fold: that
     fold re-nests the accumulated best-distance subtree at every step
@@ -1437,19 +1366,10 @@ def ivf_topk(
     )
 
     sim = F.try_divide(dot_product("_qv", "_cv"), F.col("_qn") * F.col("_cn"))
-    scored = (
-        corp.join(F.broadcast(q), "_cell")
-        .filter(F.col(query_id) != F.col(corpus_id))
-        .select(
-            query_id,
-            corpus_id,
-            (F.round(sim, 6) + F.lit(0.0)).alias("cosine"),
-        )
+    cand = corp.join(F.broadcast(q), "_cell").filter(
+        F.col(query_id) != F.col(corpus_id)
     )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cosine"), F.asc(corpus_id))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _topk_tail(cand, k, 6, query_id, corpus_id, sim)
 
 
 # --------------------------------------------------------------------------
@@ -1860,19 +1780,10 @@ def ivfpq_topk(
         ),
     )
     sim = F.try_divide(dot_product("_qv", "_cv"), F.col("_qn") * F.col("_cn"))
-    scored = (
-        decoded.join(F.broadcast(q), "_cell")
-        .filter(F.col(query_id) != F.col("neighbor_id"))
-        .select(
-            query_id,
-            "neighbor_id",
-            (F.round(sim, 6) + F.lit(0.0)).alias("cosine"),
-        )
+    cand = decoded.join(F.broadcast(q), "_cell").filter(
+        F.col(query_id) != F.col("neighbor_id")
     )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _topk_tail(cand, k, 6, query_id, "neighbor_id", sim)
 
 
 def scalar_quantize_reconstruct(
@@ -2126,7 +2037,7 @@ def semdedup_survivors(
     probed = reps.select(
         F.col(id_col),
         F.col(vec_col),
-        vector_norm(vec_col, dim=dim).alias("_n"),
+        vector_norm(vec_col).alias("_n"),
         # shared SQL-text builder (r16): the same sorted-(d, cell)
         # ranking this operator always inlined, built in one F.expr
         # call instead of k·dim py4j round-trips
@@ -2152,14 +2063,14 @@ def semdedup_survivors(
                 f"within a cell (sample widths: "
                 f"{sorted({len(v) if v is not None else None for v in pdf[vec_col][:50]}, key=str)})"
             )
-        norms = np.linalg.norm(V, axis=1)
+        norms = _row_norms(V)
         sentinel = np.int64(2**62)
         out_id: list[int] = []
         out_nbr: list[int] = []
         block = 2048
         for s in range(0, len(ids), block):
             e = min(s + block, len(ids))
-            sims = (V[s:e] @ V.T) / (norms[s:e, None] * norms[None, :])
+            sims = _cosine_gram(V[s:e], V, norms[s:e], norms)
             qual = sims >= thr
             qual &= ids[None, :] != ids[s:e, None]
             best = np.where(qual, ids[None, :], sentinel).min(axis=1)
@@ -2203,75 +2114,4 @@ def semdedup_survivors(
             dup_of.isNotNull().alias("is_dup"),
             dup_of.alias("dup_of"),
         )
-    )
-
-
-def cosine_topk_arrow(
-    queries: "DataFrame",
-    corpus: "DataFrame",
-    k: int = 5,
-    query_id: str = "query_id",
-    corpus_id: str = "neighbor_id",
-    vec_col: str = "embedding",
-    round_to: int | None = 6,
-) -> "DataFrame":
-    """Exact top-k cosine via Arrow-batch matmul — the vectorized
-    fast path for the same contract as ``cosine_topk`` (equality
-    pytest-pinned). The expression form pays an interpreted HOF dot
-    product per (query, row) pair; here the query block is collected
-    once (bounded: a query BATCH is nq x dim floats — the same
-    edge-collect class as the k-means codebooks) and shipped in the
-    task closure, and every Arrow batch of the corpus computes
-    Q @ V^T as ONE BLAS call, emitting only each query's local top-k
-    per batch (nq*k rows per batch, never the pair matrix). A final
-    per-query window merges the per-batch candidates. Measured at
-    200k x 100 x 64: ~50x faster than the pair-expression form
-    (PERF.md round 7).
-
-    Ties and rounding follow cosine_topk exactly: round-then-rank,
-    ascending id tie-break, self-matches excluded."""
-    qrows = queries.select(query_id, vec_col).collect()
-    if not qrows:
-        empty = queries.sparkSession.createDataFrame(
-            [], f"{query_id} long, {corpus_id} long, cosine double, rank int"
-        )
-        return empty
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    Q = np.array([r[1] for r in qrows], dtype=np.float64)
-    Qn = np.linalg.norm(Q, axis=1)
-    Qn[Qn == 0.0] = np.inf  # zero query -> all cosines 0, never NaN
-    kk = int(k)
-
-    def _score(batches):
-        for pdf in batches:
-            ids = pdf[corpus_id].to_numpy(dtype=np.int64)
-            V = np.array(list(pdf[vec_col]), dtype=np.float64)
-            if V.size == 0:
-                continue
-            Vn = np.linalg.norm(V, axis=1)
-            Vn[Vn == 0.0] = np.inf
-            sims = (Q @ V.T) / (Qn[:, None] * Vn[None, :])
-            # exclude self-matches before the local cut
-            sims[qids[:, None] == ids[None, :]] = -np.inf
-            out_q: list[int] = []
-            out_c: list[int] = []
-            out_s: list[float] = []
-            _batch_topk_emit(sims, qids, ids, kk, round_to, out_q, out_c, out_s)
-            yield pd.DataFrame(
-                {query_id: out_q, corpus_id: out_c, "cosine": out_s}
-            )
-
-    cand = corpus.select(corpus_id, vec_col).mapInPandas(
-        _score, schema=f"{query_id} long, {corpus_id} long, cosine double"
-    )
-    sim = F.col("cosine")
-    if round_to is not None:
-        sim = F.round(sim, round_to) + F.lit(0.0)
-    w = Window.partitionBy(query_id).orderBy(
-        F.desc("cosine"), F.asc(corpus_id)
-    )
-    return (
-        cand.select(query_id, corpus_id, sim.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
     )

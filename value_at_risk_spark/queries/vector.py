@@ -106,9 +106,9 @@ SELECT query_id, neighbor_id, cosine, CAST(rnk AS BIGINT) AS rnk FROM (
 )
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k (north-star similarity baseline): the
-    small query set broadcasts against the corpus; with dim=64 known
-    the dot products unroll to flat codegen arithmetic (HOF folds are
-    interpreted per row); one final top-k window."""
+    small query set ships in the task closure, each corpus Arrow batch
+    scores it with one BLAS gram and keeps its batch-local top-k; one
+    final top-k window merges them."""
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -401,9 +401,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), "embedding"
     )
     corpus = emb.select(F.col("vec_id").alias("neighbor_id"), "embedding")
-    approx = lsh_topk(
-        q, corpus, k=5, num_planes=4
-    )  # lsh_topk's dim param drives both planes and unrolled kernels
+    approx = lsh_topk(q, corpus, k=5, num_planes=4)
     _certify_topk_recall(
         approx, cosine_topk(q, corpus, k=5), 0.25, "ann_lsh_topk"
     )
@@ -611,8 +609,8 @@ def knn_graph_ann_indexed_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     probing, re-rank, and reciprocity — the same chain that
     hash-greens knn_graph_ann_edges, here at (k=4, nprobe=3). The
     gate-row n_cells=8 is fixture-scale; the operator's operating
-    range is build-time cells ∝ N (tools/perf_r16_growth.py measures
-    the 1M-vector notch). Certificate: index-centroid ivf_topk
+    range is build-time cells ∝ N (PERF.md, Round 16, records the
+    1M-vector growth run). Certificate: index-centroid ivf_topk
     recall@4 vs exact cosine >= 0.7 on a 10-query probe subset."""
     from value_at_risk_spark.operators.annindex import (
         build_ivf_graph_index,
@@ -1430,14 +1428,12 @@ def cosine_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold, exact. The fixture's embeddings top out at cosine ≈ 0.51
     (no planted dups), so the gate threshold 0.4 selects the true top
     ~0.05% most-similar pairs; production near-dup thresholds (≥ 0.95)
-    use the same operator. Since r14 the gate runs the BLOCK-
-    partitioned Arrow-matmul form (block-pair applyInPandas, one BLAS
-    gram per block pair — 24x the expression form at sf0.1, equality
-    pytest-pinned in test_operators); the expression baseline and the
-    sub-quadratic LSH scale path live beside it in
+    use the same operator. The operator is the block-partitioned
+    Arrow-matmul form (block-pair applyInPandas, one BLAS gram per
+    block pair); the sub-quadratic LSH scale path lives beside it in
     operators/similarity."""
     from value_at_risk_spark.operators.similarity import (
-        cosine_near_dup_pairs_blocked as _pairs,
+        cosine_near_dup_pairs as _pairs,
     )
 
     e = _t(spark, sf_dir, "embeddings")

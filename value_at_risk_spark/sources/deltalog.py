@@ -3,9 +3,9 @@
 The reference persists every pipeline table as Delta and relies on its
 ACID append/overwrite + time travel (`/root/reference/config/
 configure_notebook.py:18-27`, `01_var_market_etl.py:56-64`,
-`03_var_monte_carlo.py:162`). This container has no delta-spark
-bindings, so the registry's ``fmt="delta"`` stays import-gated; this
-module implements the subset of the OPEN Delta protocol
+`03_var_monte_carlo.py:162`). The engine does not depend on
+delta-spark, and the registry's ``fmt="deltalog"`` is its Delta
+format; this module implements the subset of the OPEN Delta protocol
 (delta-io PROTOCOL.md, public spec) those semantics actually need,
 with nothing but PySpark + stdlib:
 

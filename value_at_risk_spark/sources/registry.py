@@ -10,23 +10,11 @@ columnar, partition-prunable), no Databricks dependency.
 
 from __future__ import annotations
 
-import importlib.util
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def delta_available() -> bool:
-    """True when the delta-spark bindings are importable. The engine's
-    storage contract (schema-on-write, layout clustering, MERGE) is
-    format-parameterized: Delta is the transactional upgrade of the
-    parquet registry (the reference persists everything as Delta
-    managed tables, configure_notebook.py:18-27), taken when the
-    environment ships the libs and skipped cleanly when not — this
-    container has no Delta jars, so the Delta paths are exercised only
-    by the import-gated roundtrip test."""
-    return importlib.util.find_spec("delta") is not None
 
 # Driver-generated fixture tables (TESTDATA.md).
 TABLES = (
@@ -130,23 +118,18 @@ class Registry:
         the leading cluster key, sort within partitions, so row-group
         min/max stats give the same data-skipping behavior.
 
-        ``fmt="delta"`` (requires delta-spark in the environment —
-        ``delta_available()``) upgrades the same contract to ACID
-        tables: identical layout knobs, plus transactional overwrite
-        and a MERGE target (operators/merge.merge_into_delta).
-
-        ``fmt="deltalog"`` routes through ``sources/deltalog.py`` —
-        the native open-protocol implementation (JSON commit log,
-        atomic hard-link publish, checkpoints, time travel,
-        incremental reads) — giving transactional append/overwrite
-        with ZERO extra dependencies; the ``delta`` gate stays for
-        the delta-spark binding surface.
+        ``fmt="deltalog"`` upgrades the same contract to ACID tables
+        through ``sources/deltalog.py`` — the native open-protocol
+        implementation (JSON commit log, atomic hard-link publish,
+        checkpoints, time travel, incremental reads, and a MERGE
+        target: operators/merge.merge_into_delta_native) — with ZERO
+        extra dependencies. ``fmt="delta"`` (the delta-spark format)
+        is refused with an error naming ``fmt="deltalog"``.
         """
-        if fmt == "delta" and not delta_available():
-            raise RuntimeError(
-                "Registry.write(fmt='delta'): delta-spark is not "
-                "installed in this environment; use parquet or the "
-                "native fmt='deltalog'"
+        if fmt == "delta":
+            raise ValueError(
+                "Registry.write(fmt='delta'): Delta tables are written "
+                "by the native delta log; use fmt='deltalog'"
             )
         if sort_by:
             df = df.repartition(num_files or df.sparkSession.sparkContext.defaultParallelism, sort_by[0])
@@ -290,8 +273,8 @@ class Registry:
         across schemas. The rewrite goes to a sibling temp dir and is
         swapped in with two renames, crash-leaving either the old or
         the new complete directory (single-writer assumption; the
-        transactional upgrade of this same operation is Delta
-        OPTIMIZE, behind ``delta_available()``).
+        transactional upgrade of this same operation is the native
+        delta log's ``optimize_delta``).
 
         Returns {files_before, files_after, bytes_total}.
         """
