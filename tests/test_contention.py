@@ -202,7 +202,7 @@ while not os.path.exists(os.path.join(sync_dir, "go")):
 
 for _ in range(n_updates):
     out = update_delta(
-        spark, tbl, "worker = 9", {"v": "v + 1"}, use_dv=False
+        spark, tbl, "worker = 9", {"v": "v + 1"}
     )
     assert out["rows_updated"] == 1, out
 print("DONE dml")

@@ -253,8 +253,11 @@ def test_dv_survives_checkpoint_and_log_cleanup(spark, tmp_path):
 def test_cow_dml_over_dv_files_does_not_resurrect(spark, tmp_path):
     tbl, _ = _mk(spark, tmp_path)
     delete_from_delta(spark, tbl, "g = 3")
+    # turning the property off switches DML to copy-on-write; the
+    # DV'd files stay masked
+    set_table_properties(tbl, {"delta.enableDeletionVectors": "false"})
     # copy-on-write UPDATE of a DV'd file must carry the mask through
-    r = update_delta(spark, tbl, "id = 501", {"v": "v + 1"}, use_dv=False)
+    r = update_delta(spark, tbl, "id = 501", {"v": "v + 1"})
     assert r["rows_updated"] == 1 and r["files_rewritten"] == 1
     out = read_delta(spark, tbl)
     assert out.count() == 857
@@ -262,7 +265,7 @@ def test_cow_dml_over_dv_files_does_not_resurrect(spark, tmp_path):
     assert out.filter("g = 3").count() == 0
     # CoW DELETE over a DV'd file: same contract, and already-deleted
     # rows are not double-counted
-    r2 = delete_from_delta(spark, tbl, "id < 14", use_dv=False)
+    r2 = delete_from_delta(spark, tbl, "id < 14")
     assert r2["rows_deleted"] == 12  # ids 3 and 10 were g=3, already gone
     assert read_delta(spark, tbl).count() == 857 - 12
 

@@ -127,31 +127,6 @@ def test_pruned_pmi_no_eager_count_and_broadcast_total(spark, sf_dir):
         assert "BroadcastNestedLoopJoin" in p or "BroadcastExchange" in p
 
 
-def test_csv_json_roundtrip(spark, sf_dir, tmp_path):
-    from value_at_risk_spark.sources.registry import (
-        Registry,
-        read_csv,
-        read_json,
-        write_csv,
-        write_json,
-    )
-
-    nation = Registry(sf_dir).read(spark, "nation")
-    cpath = str(tmp_path / "nation_csv")
-    jpath = str(tmp_path / "nation_json")
-    write_csv(nation, cpath)
-    write_json(nation, jpath)
-    c = read_csv(
-        spark, cpath, "n_nationkey int, n_name string, n_regionkey int"
-    )
-    j = read_json(
-        spark, jpath, "n_nationkey int, n_name string, n_regionkey int"
-    )
-    base = {(r.n_nationkey, r.n_name, r.n_regionkey) for r in nation.collect()}
-    assert {(r.n_nationkey, r.n_name, r.n_regionkey) for r in c.collect()} == base
-    assert {(r.n_nationkey, r.n_name, r.n_regionkey) for r in j.collect()} == base
-
-
 def test_ohlc_is_pure_hash_agg(spark, sf_dir):
     """Candlestick resample must be min_by/max_by hash-aggs — no window
     operator, no sort (stays partial-aggregatable at any scale)."""
@@ -335,39 +310,6 @@ def test_partitioned_write_prunes_partitions(spark, sf_dir, tmp_path):
     # and the values still round-trip
     n_click = events.filter("event_type = 'click'").count()
     assert back.count() == n_click
-
-
-def test_orc_roundtrip_with_pushdown(spark, sf_dir, tmp_path):
-    """ORC scan/sink: value-exact roundtrip of a fixture table, sorted
-    multi-file layout honored, and predicate pushdown reaching the ORC
-    scan (PushedFilters) like the parquet path."""
-    from value_at_risk_spark.sources.registry import (
-        Registry,
-        read_orc,
-        write_orc,
-    )
-
-    orders = Registry(sf_dir).read(spark, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"
-    )
-    path = str(tmp_path / "orders_orc")
-    write_orc(orders, path, sort_by=["o_orderdate"], num_files=4)
-    back = read_orc(spark, path)
-    assert sorted(map(tuple, orders.collect())) == sorted(
-        map(tuple, back.collect())
-    )
-    import glob as _glob
-
-    assert len(_glob.glob(f"{path}/part-*.orc")) == 4
-
-    import contextlib
-    import io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        back.filter("o_totalprice > 100000").explain("formatted")
-    p = buf.getvalue()
-    assert "PushedFilters" in p and "o_totalprice" in p
 
 
 def test_runtime_bloom_filter_join_pruning(spark, sf_dir):

@@ -73,16 +73,6 @@ def _shared(df: DataFrame, readers: int) -> DataFrame:
     return df.localCheckpoint(eager=True) if readers > 1 else df
 
 
-def _write_readers(snap0) -> int:
-    """Readers of a MERGE's merged rows at write time: the staged
-    write, plus the NOT NULL probe and the CHECK pass when the table
-    has them."""
-    from value_at_risk_spark.sources.deltalog import table_constraints
-
-    nullable = all(f.nullable for f in snap0.schema.fields)
-    return 1 + (not nullable) + bool(table_constraints(snap0))
-
-
 def _check_merge_clauses(
     name: str, clauses: list[dict], allowed: tuple[str, ...]
 ) -> None:
@@ -395,11 +385,15 @@ def merge_into_delta_native(
         )
     from value_at_risk_spark.sources.deltalog import (
         DeltaConcurrentModification,
+        _commit,
+        _committed_txn,
+        _file_hits,
         _mapping_planes,
+        _maybe_auto_compact,
+        _pruned_active,
         _stage_cdc,
         read_delta,
         row_tracking_enabled,
-        snapshot,
         table_generated_columns,
         table_identity_columns,
         write_delta,
@@ -422,20 +416,20 @@ def merge_into_delta_native(
 
     deduped = updates.dropDuplicates(keys)
     materialized = False
+
     # read-modify-write with a conditional commit: a concurrent append
     # landing between our read snapshot and the overwrite would be
     # silently erased by an unconditional rewrite (MERGE promises
-    # key-level semantics, not last-writer-wins) — so pin the commit
-    # to the read version and re-read + re-merge on conflict
-    for _attempt in range(16):
-        snap0 = snapshot(target_path)
+    # key-level semantics, not last-writer-wins) — so each attempt is
+    # pinned to its read version and re-reads + re-merges on conflict.
+    # Returns (version, whether the pruned commit wants autoCompact).
+    def attempt(snap0):
+        nonlocal deduped, materialized
         # cheap txn short-circuit before planning the join; the
         # AUTHORITATIVE check re-runs inside write_delta's commit
         # attempt against a fresh snapshot
-        if txn is not None:
-            committed = (snap0.txns or {}).get(str(txn["appId"]))
-            if committed is not None and int(txn["version"]) <= committed:
-                return -1
+        if _committed_txn(snap0, txn):
+            return -1, False
         read_v = snap0.version
         # every path below reads the source more than once (the stats
         # probe, the touched-file scan and the rewrite; the upsert's
@@ -470,13 +464,7 @@ def merge_into_delta_native(
             and not table_identity_columns(snap0)
         )
         if prunable:
-            from value_at_risk_spark.sources.deltalog import (
-                _mapping_planes as _planes,
-                _pruned_active,
-                _touched_files_by_keys,
-            )
-
-            io_snap, to_log, to_phys, _l2p = _planes(spark, snap0)
+            io_snap, to_log, to_phys, _l2p = _mapping_planes(spark, snap0)
             candidates = _pruned_active(io_snap, None, None)
             # Two-phase touched-file identification, each phase only
             # run when the previous one could still pay:
@@ -486,10 +474,10 @@ def merge_into_delta_native(
             #    a file whose key range misses every source key can
             #    hold no match; incomparable/missing stats keep the
             #    file.
-            # 2. EXACT phase — the _touched_files-style column-pruned
-            #    key scan + semi-join, run ONLY over the stats
-            #    survivors and ONLY when stats excluded something
-            #    (an all-files-overlap source spans the table's key
+            # 2. EXACT phase — the column-pruned key scan + semi-join
+            #    (_file_hits), run ONLY over the stats survivors and
+            #    ONLY when stats excluded something (an
+            #    all-files-overlap source spans the table's key
             #    range; the scan probe would almost surely confirm
             #    all-touched, and the overwrite path it falls back to
             #    stages exactly one write with no forced repartition).
@@ -510,24 +498,29 @@ def merge_into_delta_native(
                         [(k_phys, ">=", b.mn), (k_phys, "<=", b.mx)],
                     )
                     if len(stats_cands) < len(candidates):
-                        touched = _touched_files_by_keys(
-                            spark, target_path, io_snap, stats_cands,
-                            deduped.select(*keys), keys, view=to_log,
+                        src_keys = deduped.select(*keys)
+                        touched = sorted(
+                            _file_hits(
+                                spark,
+                                target_path,
+                                io_snap,
+                                stats_cands,
+                                lambda df, f: df.select(
+                                    f.alias("_delta_file"), *keys
+                                ).join(src_keys, on=keys, how="left_semi"),
+                                to_log,
+                            )
                         )
             if len(touched) < len(candidates):
-                rv = _merge_pruned(
+                return _merge_pruned(
                     spark, target_path, snap0, deduped, keys,
                     general, m_cl, nm_cl, txn,
                     io_snap, to_log, to_phys, touched,
                 )
-                if rv is not None:
-                    return rv
-                continue  # commit conflict: re-read the tip and retry
         target = read_delta(spark, target_path, version=read_v)
         merged, cdc_df = _merge_rows(
             target, deduped, keys, snap0, general, m_cl, nm_cl, bs_cl
         )
-        merged = _shared(merged, _write_readers(snap0))
         extra = None
         if cdc_df is not None:
             # cdc files carry PHYSICAL names on column-mapped tables,
@@ -542,8 +535,10 @@ def merge_into_delta_native(
             # txn (appId, version): the idempotence check runs INSIDE
             # write_delta's commit loop against a fresh snapshot —
             # a re-delivered streaming batch returns -1 unwritten
-            # (DeltaMergeSink's exactly-once contract)
-            return write_delta(
+            # (DeltaMergeSink's exactly-once contract). write_delta
+            # validates the merged rows (materializing them once when
+            # they are checked) and runs its own autoCompact hook.
+            v = write_delta(
                 spark,
                 merged,
                 target_path,
@@ -553,10 +548,13 @@ def merge_into_delta_native(
                 txn=txn,
             )
         except DeltaConcurrentModification:
-            continue
-    raise RuntimeError(
-        f"merge_into_delta_native: conflicted 16 times at {target_path}"
-    )
+            return None  # the tip moved: re-read it and retry
+        return v, False
+
+    version, compact = _commit(target_path, "MERGE", attempt)
+    if compact:
+        _maybe_auto_compact(spark, target_path)
+    return version
 
 
 def _merge_pruned(
@@ -573,16 +571,16 @@ def _merge_pruned(
     to_log,
     to_phys,
     touched: list[str],
-) -> int | None:
+):
     """One file-pruned MERGE attempt against ``snap0`` (guide §6 —
     the delete/update DML shape): rewrite ONLY the ``touched`` files
     (merged with the full source), keep every other add action
-    verbatim, and commit remove(touched)+add(rewritten) atomically
-    pinned to the read version. The caller identified ``touched``
-    with one column-pruned key scan and only enters here when it is a
-    STRICT subset of the active files (all-touched merges stay on the
-    single-staged overwrite path). Returns the committed version, or
-    None on a commit conflict (caller re-reads the tip and retries).
+    verbatim, and return the commit — remove(touched)+add(rewritten),
+    pinned to the read version by the commit loop, with the result
+    (version, whether autoCompact should run). The caller identified
+    ``touched`` with one column-pruned key scan and only enters here
+    when it is a STRICT subset of the active files (all-touched merges
+    stay on the single-staged overwrite path).
 
     Correctness of the slice: a source key absent from every touched
     file is absent from the whole table, so matched-clause evaluation
@@ -592,23 +590,22 @@ def _merge_pruned(
 
     Write-time enforcement parity with the overwrite path, scoped to
     the REWRITTEN rows (untouched files were validated when written):
-    NOT NULL invariants and CHECK constraints run over the merged
-    slice; append-only and writer-version refusals match write_delta.
-    A frame that more than one reader consumes (the touched slice or
-    the clause join on a CDF table, the merged slice under NOT NULL or
-    CHECK) is materialized once per attempt (``_shared``), so each
-    touched row is scanned once; the whole-table overwrite path keeps
-    the same rule.
+    the merged slice passes the one row-validation rule (NOT NULL and
+    CHECK, materialized once when checked); append-only and
+    writer-version refusals match write_delta. The touched slice or
+    the clause join on a CDF table is materialized once per attempt
+    (``_shared``), so each touched row is scanned once.
     """
     from value_at_risk_spark.sources.deltalog import (
-        _check_constraints,
-        _commit_rewrite,
-        _maybe_auto_compact,
+        _checked,
+        _Commit,
         _refuse_append_only,
         _refuse_high_writer_version,
+        _removes,
         _scan_files_dv,
         _stage,
         _stage_cdc,
+        _txn_action,
         _wants_auto_compact,
         read_delta,
         table_constraints,
@@ -628,30 +625,15 @@ def _merge_pruned(
     )
     # align to the table schema exactly (write_delta's overwrite cast
     # the frame the same way before staging)
-    merged = _shared(
+    fields = snap0.schema.fields
+    merged = _checked(
         merged.select(
-            *[
-                F.col(f.name).cast(f.dataType).alias(f.name)
-                for f in snap0.schema.fields
-            ]
+            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in fields]
         ),
-        _write_readers(snap0),
+        "merge_into_delta_native",
+        not_null=[f.name for f in fields if not f.nullable],
+        checks=table_constraints(snap0),
     )
-    null_cols = [f.name for f in snap0.schema.fields if not f.nullable]
-    if null_cols:
-        bad_cond = F.lit(False)
-        for c in null_cols:
-            bad_cond = bad_cond | F.col(c).isNull()
-        bad = merged.filter(bad_cond).limit(1).collect()
-        if bad:
-            raise ValueError(
-                "merge_into_delta_native: NOT NULL invariant "
-                f"violated for column(s) {null_cols} by row "
-                f"{bad[0].asDict()}"
-            )
-    cons = table_constraints(snap0)
-    if cons:
-        _check_constraints(merged, cons, "merge_into_delta_native")
     # bound the restage task count by the touched-file count (rewrite
     # granularity ≈ input granularity, the delete path's rule); a
     # pure-insert merge (no touched files) stages one
@@ -661,28 +643,16 @@ def _merge_pruned(
         io_snap.partition_columns,
         data_change=True,
     )
-    extra = None
+    actions = [_txn_action(txn)] if txn is not None else []
+    actions += _removes(snap0, touched) + adds
     if cdc_df is not None:
-        extra = _stage_cdc(
+        actions += _stage_cdc(
             to_phys(cdc_df),
             target_path,
             io_snap.partition_columns,
         )
-    ok = _commit_rewrite(
-        target_path,
-        read_v,
-        "MERGE",
+    return _Commit(
         {"predicate": " AND ".join(f"t.`{k}` = s.`{k}`" for k in keys)},
-        touched,
-        adds,
-        snap0,
-        cdc_actions=extra,
-        txn=txn,
+        actions,
+        result=(read_v + 1, bool(adds) and _wants_auto_compact(snap0)),
     )
-    if not ok:
-        # conflict: staged files become vacuum-collectable orphans,
-        # the same torn-state story as any failed commit
-        return None
-    if adds and _wants_auto_compact(snap0):
-        _maybe_auto_compact(spark, target_path)
-    return read_v + 1

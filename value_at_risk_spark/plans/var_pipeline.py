@@ -210,7 +210,6 @@ def aggregate_var(
     portfolio: DataFrame,
     confidence: float = 99.0,
     group_cols: list[str] | None = None,
-    approximate: bool = False,
 ) -> DataFrame:
     """Slice-and-dice VaR (04_var_aggregation.py:35-123).
 
@@ -227,7 +226,7 @@ def aggregate_var(
         F.sum("_wr").alias("_pr")
     )
     return per_trial.groupBy("date", *group_cols).agg(
-        value_at_risk_expr("_pr", confidence, approximate).alias("var_99"),
+        value_at_risk_expr("_pr", confidence).alias("var_99"),
         F.avg("_pr").alias("mean_return"),
     )
 
@@ -406,7 +405,6 @@ def aggregate_var_fused(
     portfolio: DataFrame,
     confidence: float = 99.0,
     group_cols: list[str] | None = None,
-    approximate: bool = False,
     n_factors: int | None = None,
 ) -> DataFrame:
     """Portfolio(-slice) VaR straight from simulated market states.
@@ -427,6 +425,6 @@ def aggregate_var_fused(
     )
     port = fan.select("date", *group_cols, "trial_id", pred.alias("_pr"))
     return port.groupBy("date", *group_cols).agg(
-        value_at_risk_expr("_pr", confidence, approximate).alias("var_99"),
+        value_at_risk_expr("_pr", confidence).alias("var_99"),
         F.avg("_pr").alias("mean_return"),
     )

@@ -481,7 +481,7 @@ def delta_dv_delete_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the original parquet. Hash equality proves the roaring row-index
     bitmaps, the broadcast searchsorted mask, and the physical
     row_index alignment drop exactly the deleted rows
-    (sources/dv.py; deltalog._delete_with_dv/_scan_files_dv). At
+    (sources/dv.py; deltalog._dml/_dv_mask/_scan_files_dv). At
     100 TB this is the difference between a small DELETE writing
     kilobytes of bitmap and rewriting every touched gigabyte file."""
     from value_at_risk_spark.sources.deltalog import read_delta
@@ -870,7 +870,7 @@ def delta_constraint_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     REJECTION (a violating frame must fail and commit nothing). The
     final table equals DuckDB's full part aggregate — the constraint
     machinery admitted every valid row and nothing else
-    (sources/deltalog.add_check_constraint / _check_constraints)."""
+    (sources/deltalog.add_check_constraint / _checked)."""
     from value_at_risk_spark.sources.deltalog import (
         add_check_constraint,
         read_delta,

@@ -42,6 +42,7 @@ per protocol; unsupported reader-version asserts).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
@@ -1799,36 +1800,30 @@ def _publish_commit(path: str, version: int, actions: list[dict]) -> bool:
     point every commit kind passes through."""
     enabled = _ict_enabled_for_commit(path, version, actions)
     if enabled:
-        stamped = False
-        out: list[dict] = []
-        for a in actions:
-            ci = a.get("commitInfo")
-            if ci is not None and not stamped:
-                pre = ci.get("inCommitTimestamp")
-                # an explicitly pre-set value (enablement provenance:
-                # the SAME number must land in the commit AND the
-                # metaData properties) is honored verbatim, floored
-                # only by monotonicity — NOT re-read from the wall
-                # clock, which may have ticked since the caller chose.
-                # 'is not None', not truthiness: an explicit 0 preset
-                # must not be silently replaced by the wall clock. Stamp
-                # a COPY — a failed attempt must not leak a stale stamp
-                # into the caller's reused action objects.
-                ci = dict(ci)
-                ci["inCommitTimestamp"] = max(
-                    int(pre) if pre is not None else int(time.time() * 1000),
-                    _ict_floor(path, version),
-                )
-                a = dict(a)
-                a["commitInfo"] = ci
-                stamped = True
-            out.append(a)
-        actions = out
-        if not stamped:
-            ict = _next_ict(path, version)
-            actions = [
-                {"commitInfo": {"timestamp": ict, "inCommitTimestamp": ict}}
-            ] + list(actions)
+        actions = list(actions)
+        at = next(
+            (i for i, a in enumerate(actions) if a.get("commitInfo") is not None),
+            None,
+        )
+        if at is None:
+            # the spec puts commitInfo first on every ICT commit
+            actions.insert(0, _commit_info("UNKNOWN", {}))
+            at = 0
+        ci = dict(actions[at]["commitInfo"])
+        pre = ci.get("inCommitTimestamp")
+        # an explicitly pre-set value (enablement provenance: the SAME
+        # number must land in the commit AND the metaData properties)
+        # is honored verbatim, floored only by monotonicity — NOT
+        # re-read from the wall clock, which may have ticked since the
+        # caller chose. 'is not None', not truthiness: an explicit 0
+        # preset must not be silently replaced by the wall clock. Stamp
+        # a COPY — a failed attempt must not leak a stale stamp into
+        # the caller's reused action objects.
+        ci["inCommitTimestamp"] = max(
+            int(pre) if pre is not None else int(time.time() * 1000),
+            _ict_floor(path, version),
+        )
+        actions[at] = dict(actions[at], commitInfo=ci)
     log = _log_dir(path)
     os.makedirs(log, exist_ok=True)
     tmp = os.path.join(log, f".tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}")
@@ -1848,6 +1843,116 @@ def _publish_commit(path: str, version: int, actions: list[dict]) -> bool:
         return False
     finally:
         os.unlink(tmp)
+
+
+_ENGINE = "value_at_risk_spark.deltalog"
+
+# the one retry budget: lost version races a commit loop absorbs
+# before giving up
+_COMMIT_ATTEMPTS = 64
+
+
+def _commit_info(operation: str, params: dict, **extra) -> dict:
+    """The one commitInfo builder: every commit this module writes
+    leads with it (``extra`` carries fields such as a preset
+    inCommitTimestamp). Per-commit ``operationMetrics`` belong here."""
+    return {
+        "commitInfo": {
+            "timestamp": int(time.time() * 1000),
+            "operation": operation,
+            "operationParameters": params,
+            "engineInfo": _ENGINE,
+            **extra,
+        }
+    }
+
+
+@dataclass
+class _Commit:
+    """One commit attempt's outcome for ``_commit``: the actions after
+    commitInfo, the operationParameters, the value returned once
+    published (None = the committed version), and extra commitInfo
+    fields."""
+
+    params: dict
+    actions: list
+    result: object = None
+    info: dict | None = None
+
+
+def _commit(path: str, operation: str, attempt):
+    """The one optimistic commit loop. Each attempt reads a fresh
+    snapshot of the tip and calls ``attempt(snap)``, which returns:
+
+    - a ``_Commit``: published at ``snap.version + 1`` behind one
+      commitInfo naming ``operation``; a lost version race re-runs the
+      attempt against the new tip;
+    - None: the attempt saw a conflict itself — re-run it;
+    - anything else: returned as is, nothing committed (a no-op, an
+      already-applied txn, or a commit made through ``write_delta``).
+
+    Staged files of a lost attempt stay behind as orphans that no
+    snapshot references, for VACUUM to collect. ``_publish_commit`` is
+    looked up per call, so tests can swap it to fake a race."""
+    for _ in range(_COMMIT_ATTEMPTS):
+        snap = snapshot(path)
+        out = attempt(snap)
+        if out is None:
+            continue
+        if not isinstance(out, _Commit):
+            return out
+        version = snap.version + 1
+        actions = [
+            _commit_info(operation, out.params, **(out.info or {})),
+            *out.actions,
+        ]
+        if _publish_commit(path, version, actions):
+            return version if out.result is None else out.result
+    raise DeltaConcurrentModification(
+        f"{operation}: lost the commit race {_COMMIT_ATTEMPTS} times at "
+        f"{path}"
+    )
+
+
+def _removes(snap: DeltaSnapshot, paths, data_change: bool = True) -> list:
+    """The one remove-action builder: each remove names the file
+    version it removes — its partitionValues, and its deletion vector
+    when it carries one (spec)."""
+    now_ms = int(time.time() * 1000)
+    out = []
+    for p in paths:
+        add = snap.files[p]
+        rm = {
+            "path": p,
+            "deletionTimestamp": now_ms,
+            "dataChange": data_change,
+            "partitionValues": add.get("partitionValues"),
+        }
+        if add.get("deletionVector"):
+            rm["deletionVector"] = add["deletionVector"]
+        out.append({"remove": rm})
+    return out
+
+
+def _txn_action(txn: dict) -> dict:
+    """The protocol ``txn`` action: streaming-sink idempotence riding
+    in the same atomic commit."""
+    return {
+        "txn": {
+            "appId": str(txn["appId"]),
+            "version": int(txn["version"]),
+            "lastUpdated": int(time.time() * 1000),
+        }
+    }
+
+
+def _committed_txn(snap: DeltaSnapshot | None, txn: dict | None) -> bool:
+    """Whether ``txn`` ({appId, version}) is already committed at
+    ``snap``."""
+    if txn is None or snap is None:
+        return False
+    done = (snap.txns or {}).get(str(txn["appId"]))
+    return done is not None and int(txn["version"]) <= done
 
 
 def _maybe_auto_checkpoint(path: str, version: int) -> None:
@@ -2032,6 +2137,8 @@ def write_delta(
     # the invariants changed since this one
     snap_pre = snapshot(path) if exists else None
     gen: dict[str, str] = {}
+    # provided generated-column values, validated with the other rules
+    gen_checks: dict[str, str] = {}
     schema_for_commit = None
     min_writer = 2
     if configuration:
@@ -2123,10 +2230,7 @@ def write_delta(
                 if col not in provided:
                     df = df.withColumn(col, F.expr(expr))
             df = df.select(*[c for c in table_order if c in df.columns])
-            _check_generated(
-                df, {c: e for c, e in gen.items() if c in provided},
-                "write_delta",
-            )
+            gen_checks = {c: e for c, e in gen.items() if c in provided}
     elif generated_columns:
         unknown_refs = [
             c for c in generated_columns if c in df.columns
@@ -2134,11 +2238,7 @@ def write_delta(
         for col, expr in generated_columns.items():
             if col not in df.columns:
                 df = df.withColumn(col, F.expr(expr))
-        _check_generated(
-            df,
-            {c: generated_columns[c] for c in unknown_refs},
-            "write_delta",
-        )
+        gen_checks = {c: generated_columns[c] for c in unknown_refs}
         sch = df.schema.jsonValue()
         for f in sch["fields"]:
             if f["name"] in generated_columns:
@@ -2292,23 +2392,16 @@ def write_delta(
         for f in msch["fields"]:
             md = f["metadata"]
             l2p_write[f["name"]] = md["delta.columnMapping.physicalName"]
-    if null_checks:
-        # Delta's NOT NULL invariant: the frame is only STATICALLY
-        # nullable (plans are conservative); prove no actual null
-        # reaches a required column — one short-circuited job
-        cond = F.lit(False)
-        for c in null_checks:
-            cond = cond | F.col(c).isNull()
-        bad = df.filter(cond).limit(1).collect()
-        if bad:
-            raise ValueError(
-                f"write_delta: NOT NULL invariant violated for "
-                f"column(s) {null_checks} by row {bad[0].asDict()}"
-            )
-    if exists:
-        cons = table_constraints(snap_pre)
-        if cons:
-            _check_constraints(df, cons, "write_delta")
+    # Delta's NOT NULL invariant: the frame is only STATICALLY
+    # nullable (plans are conservative); prove no actual null reaches
+    # a required column, in the same pass as CHECK and generation
+    df = _checked(
+        df,
+        "write_delta",
+        not_null=null_checks,
+        checks=table_constraints(snap_pre) if exists else None,
+        generated=gen_checks,
+    )
 
     if l2p_write is not None:
         # stage under PHYSICAL names (columns and partition dirs) with
@@ -2553,9 +2646,8 @@ def set_table_properties(path: str, props: dict[str, str]) -> int:
         if not isinstance(k, str) or not isinstance(v, str):
             raise ValueError("set_table_properties: str->str map required")
     map_want = props.get("delta.columnMapping.mode")
-    now_ms = int(time.time() * 1000)
-    for _attempt in range(64):
-        snap = snapshot(path)
+
+    def attempt(snap: DeltaSnapshot) -> _Commit:
         # property updates are metadata-only and cannot corrupt an
         # existing mapping, so mapped tables are NOT refused here —
         # only mode CHANGES are constrained below
@@ -2635,19 +2727,7 @@ def set_table_properties(path: str, props: dict[str, str]) -> int:
             rt_backfill = rt_backfill_adds + rt_dm
             cfg.setdefault(_RT_MATCOL_KEY, f"_row-id-col-{uuid.uuid4()}")
             meta = {**meta, "configuration": cfg}
-        actions: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "SET TBLPROPERTIES",
-                    "operationParameters": {
-                        "properties": dict(sorted(props.items()))
-                    },
-                    "engineInfo": "value_at_risk_spark.deltalog",
-                }
-            },
-            {"metaData": meta},
-        ]
+        info = {}
         if _truthy(
             cfg.get("delta.enableInCommitTimestamps")
         ) and not _truthy(
@@ -2666,8 +2746,8 @@ def set_table_properties(path: str, props: dict[str, str]) -> int:
             )
             cfg["delta.inCommitTimestampEnablementTimestamp"] = str(ict)
             meta = {**meta, "configuration": cfg}
-            actions[0]["commitInfo"]["inCommitTimestamp"] = ict
-            actions[1] = {"metaData": meta}
+            info["inCommitTimestamp"] = ict
+        actions: list[dict] = [{"metaData": meta}]
         # ---- ONE protocol action per commit: snapshot replay keeps
         # only the LAST protocol action, so per-branch actions would
         # silently drop each other's features when several properties
@@ -2729,9 +2809,11 @@ def set_table_properties(path: str, props: dict[str, str]) -> int:
             # CDF alone keeps legacy tables legacy (wv 4)
             actions.append(_protocol_action(snap, 4, "changeDataFeed"))
         actions.extend(rt_backfill)
-        if _publish_commit(path, snap.version + 1, actions):
-            return snap.version + 1
-    raise RuntimeError(f"set_table_properties: lost the commit race at {path}")
+        return _Commit(
+            {"properties": dict(sorted(props.items()))}, actions, info=info
+        )
+
+    return _commit(path, "SET TBLPROPERTIES", attempt)
 
 
 def _nested_sibling_fields(sch: dict, parts: list[str]) -> list[dict]:
@@ -2768,9 +2850,8 @@ def rename_delta_column(path: str, old: str, new: str) -> int:
     Returns the committed version."""
     if not delta_versions(path):
         raise ValueError(f"not a delta table at {path}")
-    now_ms = int(time.time() * 1000)
-    for _attempt in range(64):
-        snap = snapshot(path)
+
+    def attempt(snap: DeltaSnapshot) -> _Commit:
         _refuse_high_writer_version(snap, "RENAME COLUMN")
         if _column_mapping(snap) is None:
             raise NotImplementedError(
@@ -2829,20 +2910,9 @@ def rename_delta_column(path: str, old: str, new: str) -> int:
                 for c in (snap.metadata.get("partitionColumns") or [])
             ],
         }
-        actions = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "RENAME COLUMN",
-                    "operationParameters": {"from": old, "to": new},
-                    "engineInfo": "value_at_risk_spark.deltalog",
-                }
-            },
-            {"metaData": meta},
-        ]
-        if _publish_commit(path, snap.version + 1, actions):
-            return snap.version + 1
-    raise RuntimeError(f"rename_delta_column: lost the commit race at {path}")
+        return _Commit({"from": old, "to": new}, [{"metaData": meta}])
+
+    return _commit(path, "RENAME COLUMN", attempt)
 
 
 def drop_delta_column(path: str, col: str) -> int:
@@ -2856,9 +2926,8 @@ def drop_delta_column(path: str, col: str) -> int:
     still sees it. Returns the committed version."""
     if not delta_versions(path):
         raise ValueError(f"not a delta table at {path}")
-    now_ms = int(time.time() * 1000)
-    for _attempt in range(64):
-        snap = snapshot(path)
+
+    def attempt(snap: DeltaSnapshot) -> _Commit:
         _refuse_high_writer_version(snap, "DROP COLUMN")
         if _column_mapping(snap) is None:
             raise NotImplementedError(
@@ -2906,20 +2975,9 @@ def drop_delta_column(path: str, col: str) -> int:
             )
         fields[:] = [f for f in fields if f["name"] != leaf]
         meta = {**snap.metadata, "schemaString": json.dumps(sch)}
-        actions = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "DROP COLUMNS",
-                    "operationParameters": {"columns": [col]},
-                    "engineInfo": "value_at_risk_spark.deltalog",
-                }
-            },
-            {"metaData": meta},
-        ]
-        if _publish_commit(path, snap.version + 1, actions):
-            return snap.version + 1
-    raise RuntimeError(f"drop_delta_column: lost the commit race at {path}")
+        return _Commit({"columns": [col]}, [{"metaData": meta}])
+
+    return _commit(path, "DROP COLUMNS", attempt)
 
 
 def add_delta_columns(path: str, columns: dict[str, object]) -> int:
@@ -2937,9 +2995,8 @@ def add_delta_columns(path: str, columns: dict[str, object]) -> int:
         raise ValueError(f"not a delta table at {path}")
     if not columns:
         raise ValueError("add_delta_columns: no columns given")
-    now_ms = int(time.time() * 1000)
-    for _attempt in range(64):
-        snap = snapshot(path)
+
+    def attempt(snap: DeltaSnapshot) -> _Commit:
         _refuse_high_writer_version(snap, "ADD COLUMNS")
         sch = json.loads(snap.metadata["schemaString"])
         names = {f["name"] for f in sch["fields"]}
@@ -2982,22 +3039,9 @@ def add_delta_columns(path: str, columns: dict[str, object]) -> int:
             "schemaString": json.dumps(sch),
             "configuration": conf,
         }
-        actions = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "ADD COLUMNS",
-                    "operationParameters": {
-                        "columns": sorted(columns.keys())
-                    },
-                    "engineInfo": "value_at_risk_spark.deltalog",
-                }
-            },
-            {"metaData": meta},
-        ]
-        if _publish_commit(path, snap.version + 1, actions):
-            return snap.version + 1
-    raise RuntimeError(f"add_delta_columns: lost the commit race at {path}")
+        return _Commit({"columns": sorted(columns)}, [{"metaData": meta}])
+
+    return _commit(path, "ADD COLUMNS", attempt)
 
 
 def convert_to_delta(
@@ -3111,17 +3155,9 @@ def convert_to_delta(
         sch["fields"].append(fj)
     StructType.fromJson(sch)  # fail loud on unparseable declared types
     actions = [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "CONVERT",
-                "operationParameters": {
-                    "numFiles": len(adds),
-                    "partitionedBy": part_cols,
-                },
-                "engineInfo": "value_at_risk_spark.deltalog",
-            }
-        },
+        _commit_info(
+            "CONVERT", {"numFiles": len(adds), "partitionedBy": part_cols}
+        ),
         {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
         {
             "metaData": {
@@ -3184,18 +3220,14 @@ def shallow_clone(src: str, dst: str, version: int | None = None) -> int:
         "createdTime": now_ms,
     }
     actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "CLONE",
-                "operationParameters": {
-                    "source": src_abs,
-                    "sourceVersion": snap.version,
-                    "isShallow": True,
-                },
-                "engineInfo": "value_at_risk_spark.deltalog",
-            }
-        },
+        _commit_info(
+            "CLONE",
+            {
+                "source": src_abs,
+                "sourceVersion": snap.version,
+                "isShallow": True,
+            },
+        ),
         # checkpoint-replayed protocols carry explicit None for absent
         # feature lists — strip them (feature lists exist only at
         # rv3/wv7 per the spec; a null list is malformed to strict
@@ -3259,9 +3291,8 @@ def widen_column_type(path: str, col: str, new_type: str) -> int:
     version."""
     if not delta_versions(path):
         raise ValueError(f"not a delta table at {path}")
-    now_ms = int(time.time() * 1000)
-    for _attempt in range(64):
-        snap = snapshot(path)
+
+    def attempt(snap: DeltaSnapshot):
         _refuse_high_writer_version(snap, "ALTER COLUMN TYPE")
         sch = json.loads(snap.metadata["schemaString"])
         # exact top-level match wins before '.' is read as nesting
@@ -3308,21 +3339,7 @@ def widen_column_type(path: str, col: str, new_type: str) -> int:
             "delta.typeChanges": changes,
         }
         meta = {**snap.metadata, "schemaString": json.dumps(sch)}
-        actions = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "CHANGE COLUMN",
-                    "operationParameters": {
-                        "column": col,
-                        "from": old_type,
-                        "to": new_type,
-                    },
-                    "engineInfo": "value_at_risk_spark.deltalog",
-                }
-            },
-            {"metaData": meta},
-        ]
+        actions: list[dict] = [{"metaData": meta}]
         feats = set(snap.protocol.get("readerFeatures") or []) | set(
             snap.protocol.get("writerFeatures") or []
         )
@@ -3332,9 +3349,11 @@ def widen_column_type(path: str, col: str, new_type: str) -> int:
                     snap, ("typeWidening",), ("typeWidening",)
                 )
             )
-        if _publish_commit(path, snap.version + 1, actions):
-            return snap.version + 1
-    raise RuntimeError(f"widen_column_type: lost the commit race at {path}")
+        return _Commit(
+            {"column": col, "from": old_type, "to": new_type}, actions
+        )
+
+    return _commit(path, "CHANGE COLUMN", attempt)
 
 
 def table_identity_columns(snap: DeltaSnapshot) -> dict[str, dict]:
@@ -3400,8 +3419,8 @@ def sync_identity(spark: SparkSession, path: str) -> dict[str, int]:
     column's high-water mark from the TABLE's actual values (one
     aggregate over the snapshot) and commit the metadata. The repair
     step after explicit inserts on allowExplicitInsert tables."""
-    for _attempt in range(16):
-        snap = snapshot(path)
+
+    def attempt(snap: DeltaSnapshot):
         _refuse_mapped_write(snap, "SYNC IDENTITY")
         _refuse_high_writer_version(snap, "SYNC IDENTITY")
         ids = table_identity_columns(snap)
@@ -3422,20 +3441,10 @@ def sync_identity(spark: SparkSession, path: str) -> dict[str, int]:
         }
         if not new_hwms:
             return {}
-        actions = [
-            {
-                "commitInfo": {
-                    "timestamp": int(time.time() * 1000),
-                    "operation": "SYNC IDENTITY",
-                    "operationParameters": {},
-                    "engineInfo": "value_at_risk_spark.deltalog",
-                }
-            },
-            {"metaData": _identity_metadata_update(snap.metadata, new_hwms)},
-        ]
-        if _publish_commit(path, snap.version + 1, actions):
-            return new_hwms
-    raise RuntimeError(f"sync_identity: lost the commit race at {path}")
+        meta = _identity_metadata_update(snap.metadata, new_hwms)
+        return _Commit({}, [{"metaData": meta}], result=new_hwms)
+
+    return _commit(path, "SYNC IDENTITY", attempt)
 
 
 def set_domain_metadata(
@@ -3446,20 +3455,11 @@ def set_domain_metadata(
     transactional guarantees — the mechanism clustering state uses.
     ``removed=True`` tombstones the domain. Upgrades the protocol to
     writer v7 + domainMetadata on first use."""
-    for _attempt in range(64):
-        snap = snapshot(path)
+
+    def attempt(snap: DeltaSnapshot) -> _Commit:
         _refuse_mapped_write(snap, "SET DOMAIN METADATA")
         _refuse_high_writer_version(snap, "SET DOMAIN METADATA")
-        actions: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": int(time.time() * 1000),
-                    "operation": "SET DOMAIN METADATA",
-                    "operationParameters": {"domain": domain},
-                    "engineInfo": "value_at_risk_spark.deltalog",
-                }
-            }
-        ]
+        actions: list[dict] = []
         if "domainMetadata" not in (
             snap.protocol.get("writerFeatures") or []
         ):
@@ -3475,9 +3475,9 @@ def set_domain_metadata(
                 }
             }
         )
-        if _publish_commit(path, snap.version + 1, actions):
-            return snap.version + 1
-    raise RuntimeError(f"set_domain_metadata: lost the commit race at {path}")
+        return _Commit({"domain": domain}, actions)
+
+    return _commit(path, "SET DOMAIN METADATA", attempt)
 
 
 def table_clustering_columns(snap: DeltaSnapshot) -> list[str] | None:
@@ -3579,9 +3579,8 @@ def set_column_default(
     future INSERTs that omit the column."""
     if not delta_versions(path):
         raise ValueError(f"not a delta table at {path}")
-    now_ms = int(time.time() * 1000)
-    for _attempt in range(64):
-        snap = snapshot(path)
+
+    def attempt(snap: DeltaSnapshot) -> _Commit:
         _refuse_high_writer_version(snap, "ALTER COLUMN DEFAULT")
         if expr is not None:
             if col in table_identity_columns(snap):
@@ -3613,20 +3612,7 @@ def set_column_default(
             md["CURRENT_DEFAULT"] = expr
         field["metadata"] = md
         meta = {**snap.metadata, "schemaString": json.dumps(sch)}
-        actions: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "CHANGE COLUMN",
-                    "operationParameters": {
-                        "column": col,
-                        "default": expr,
-                    },
-                    "engineInfo": "value_at_risk_spark.deltalog",
-                }
-            },
-            {"metaData": meta},
-        ]
+        actions: list[dict] = [{"metaData": meta}]
         have_w = set(snap.protocol.get("writerFeatures") or [])
         if expr is not None and "allowColumnDefaults" not in have_w:
             actions.append(
@@ -3634,28 +3620,71 @@ def set_column_default(
                     snap, (), ("allowColumnDefaults",)
                 )
             )
-        if _publish_commit(path, snap.version + 1, actions):
-            return snap.version + 1
-    raise RuntimeError(f"set_column_default: lost the commit race at {path}")
+        return _Commit({"column": col, "default": expr}, actions)
+
+    return _commit(path, "CHANGE COLUMN", attempt)
 
 
-def _check_generated(
-    df: DataFrame, gen: dict[str, str], context: str
-) -> None:
-    """Caller-provided values for a generated column must equal the
-    generation expression on every row (null-safe) — Delta rejects the
-    write otherwise."""
-    for col, expr in sorted(gen.items()):
-        bad = (
-            df.filter(~F.col(col).eqNullSafe(F.expr(expr)))
-            .limit(1)
-            .collect()
+def _checked(
+    df: DataFrame,
+    context: str,
+    not_null=(),
+    checks: dict[str, str] | None = None,
+    generated: dict[str, str] | None = None,
+    materialize: bool = True,
+) -> DataFrame:
+    """The one row-validation rule for rows about to land in a table.
+    ONE job, short-circuited by ``limit(1)``, looks for a row that
+    breaks a generation expression (null-safe equality), a NOT NULL
+    column, or a CHECK constraint (NULL passes, SQL CHECK semantics),
+    and the error names the rule and the row — Delta's own UX. When
+    there is anything to check and ``materialize`` is set (the stage
+    reads ``df`` too), ``df`` is localCheckpointed first: each reader
+    would otherwise re-run its plan, and a non-deterministic input
+    could be checked on other rows than the ones written. Returns the
+    frame the stage must use."""
+    rules = [
+        (
+            f"generated column {c} must equal ({e})",
+            ~F.col(_q(c)).eqNullSafe(F.expr(e)),
         )
-        if bad:
-            raise ValueError(
-                f"{context}: generated column {col} must equal "
-                f"({expr}); row {bad[0].asDict()} disagrees"
+        for c, e in sorted((generated or {}).items())
+    ]
+    if not_null:
+        rules.append(
+            (
+                f"NOT NULL invariant violated for column(s) {list(not_null)}",
+                functools.reduce(
+                    lambda a, b: a | b, [F.col(_q(c)).isNull() for c in not_null]
+                ),
             )
+        )
+    rules += [
+        (
+            f"CHECK constraint {n} ({e}) violated",
+            ~F.coalesce(F.expr(e), F.lit(True)),
+        )
+        for n, e in sorted((checks or {}).items())
+    ]
+    if not rules:
+        return df
+    if materialize:
+        df = df.localCheckpoint(eager=True)
+    flags = [f"__broken{i}" for i in range(len(rules))]
+    bad = (
+        df.select(
+            "*", *[F.coalesce(c, F.lit(False)).alias(f) for (_m, c), f in zip(rules, flags)]
+        )
+        .filter(functools.reduce(lambda a, b: a | b, map(F.col, flags)))
+        .limit(1)
+        .collect()
+    )
+    if bad:
+        row = bad[0].asDict()
+        msg = next(m for (m, _c), f in zip(rules, flags) if row[f])
+        shown = {k: v for k, v in row.items() if k not in flags}
+        raise ValueError(f"{context}: {msg} by row {shown}")
+    return df
 
 
 def _validate_write_schema(
@@ -3873,29 +3902,23 @@ def commit_staged_adds(
         if mode == "overwrite":
             _refuse_append_only(snap0, "overwrite")
 
-    now_ms = int(time.time() * 1000)
-    validated_version: int | None = None
-    for _attempt in range(64):
-        versions = delta_versions(path)
-        version = (versions[-1] + 1) if versions else 0
-        snap_tip = snapshot(path) if versions else None
-        if versions and validated_version != versions[-1]:
+    def attempt(snap_tip: "DeltaSnapshot | None"):
+        # snap_tip None = creating the table (version 0)
+        version = snap_tip.version + 1 if snap_tip is not None else 0
+        if snap_tip is not None:
             # re-validate against the CURRENT tip on every (re)try:
             # the protocol's conflict rules treat concurrent metaData /
             # protocol changes (ADD CONSTRAINT, appendOnly, upgrades)
             # as conflicting with every transaction — a retry that
             # kept the pre-loop validation would publish unchecked data
             _validate_tip(snap_tip)
-            validated_version = versions[-1]
         if expected_version is not None and version != expected_version + 1:
             raise DeltaConcurrentModification(
                 f"write_delta: expected tip v{expected_version}, "
                 f"found v{version - 1} at {path}"
             )
-        if txn is not None and snap_tip is not None:
-            committed = (snap_tip.txns or {}).get(str(txn["appId"]))
-            if committed is not None and int(txn["version"]) <= committed:
-                return -1
+        if _committed_txn(snap_tip, txn):
+            return -1
         # row tracking: carve fresh baseRowId ranges against THIS
         # attempt's tip (a retry against a moved tip re-carves above
         # the new high-water mark)
@@ -3910,127 +3933,97 @@ def commit_staged_adds(
             adds_use, rt_actions = _rt_assign(snap_tip, adds, version)
         else:
             adds_use, rt_actions = adds, []
-        actions: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "WRITE",
-                    "operationParameters": {"mode": mode.upper()},
-                    "engineInfo": "value_at_risk_spark.deltalog",
-                }
-            }
-        ]
+        actions: list[dict] = []
         if txn is not None:
-            actions.append(
-                {
-                    "txn": {
-                        "appId": str(txn["appId"]),
-                        "version": int(txn["version"]),
-                        "lastUpdated": now_ms,
-                    }
-                }
-            )
+            actions.append(_txn_action(txn))
         if new_metadata is not None:
             actions.append({"metaData": new_metadata})
-        if version == 0:
-            cfg0 = dict(configuration or {})
-            rfeats: list[str] = []
-            wfeats: list[str] = list(writer_features or [])
-            if _truthy(cfg0.get("delta.enableInCommitTimestamps")):
-                # no legacy writer version exists for ICT
-                wfeats.append("inCommitTimestamp")
-            if _truthy(cfg0.get("delta.enableDeletionVectors")):
-                # spec: the property requires the feature in BOTH
-                # lists from the moment it is set
-                rfeats.append("deletionVectors")
-                wfeats.append("deletionVectors")
-            if cfg0.get("delta.columnMapping.mode", "none") not in (
-                "none",
-                "",
-            ):
-                rfeats.append("columnMapping")
-                wfeats.append("columnMapping")
-            if cfg0.get("delta.checkpointPolicy") == "v2":
-                rfeats.append("v2Checkpoint")
-                wfeats.append("v2Checkpoint")
-            if _truthy(cfg0.get("delta.enableRowTracking")):
-                # rowTracking rides on domainMetadata (the high-water
-                # mark lives in a metadata domain); name the
-                # materialized row-id column at birth so every later
-                # rewrite materializes under one stable physical name
-                wfeats += ["rowTracking", "domainMetadata"]
-                cfg0.setdefault(
-                    _RT_MATCOL_KEY, f"_row-id-col-{uuid.uuid4()}"
-                )
-            if cfg0.get(
-                "delta.requireCheckpointProtectionBeforeVersion"
-            ):
-                wfeats.append("checkpointProtection")
-            if rfeats or wfeats:
-                # the table is born as a feature table (v3/v7) with
-                # the legacy features its min_writer_version implies
-                fake = DeltaSnapshot(
-                    version=-1,
-                    metadata={},
-                    protocol={
-                        "minReaderVersion": 1,
-                        "minWriterVersion": max(2, min_writer_version),
-                    },
-                    files={},
-                )
-                actions.append(
-                    _upgrade_protocol_features(fake, rfeats, wfeats)
-                )
-            else:
-                actions.append(
-                    {
-                        "protocol": {
-                            "minReaderVersion": 1,
-                            "minWriterVersion": max(2, min_writer_version),
-                        }
-                    }
-                )
-            actions.append(
-                {
-                    "metaData": {
-                        "id": str(uuid.uuid4()),
-                        "format": {"provider": "parquet", "options": {}},
-                        "schemaString": schema.json(),
-                        "partitionColumns": part_cols,
-                        "configuration": cfg0,
-                        "createdTime": now_ms,
-                    }
-                }
+        if snap_tip is None:
+            actions += _creation_actions(
+                schema, part_cols, configuration, min_writer_version,
+                writer_features,
             )
         elif mode == "overwrite":
-            # removes against THIS attempt's tip (snap_tip) — a
-            # conflicting concurrent append must not survive an
-            # overwrite that committed after it; a tip that moves
-            # after this read fails _publish_commit and retries
-            actions.extend(
-                {
-                    "remove": {
-                        "path": p,
-                        "deletionTimestamp": now_ms,
-                        "dataChange": True,
-                        **(
-                            {"deletionVector": snap_tip.files[p]["deletionVector"]}
-                            if snap_tip.files[p].get("deletionVector")
-                            else {}
-                        ),
-                    }
-                }
-                for p in sorted(snap_tip.files)
-            )
+            # removes against THIS attempt's tip — a conflicting
+            # concurrent append must not survive an overwrite that
+            # committed after it; a tip that moves after this read
+            # fails _publish_commit and retries
+            actions += _removes(snap_tip, sorted(snap_tip.files))
         actions.extend(adds_use)
         actions.extend(rt_actions)
         if extra_actions:
             actions.extend(extra_actions)
-        if _publish_commit(path, version, actions):
-            return version
-    raise RuntimeError(
-        f"write_delta: lost the commit race 64 times at {path}"
-    )
+        return _Commit({"mode": mode.upper()}, actions)
+
+    if not delta_versions(path):
+        # version-0 creator; a lost create race lands as an append or
+        # overwrite through the commit loop
+        first = attempt(None)
+        if _publish_commit(
+            path, 0, [_commit_info("WRITE", first.params), *first.actions]
+        ):
+            return 0
+    return _commit(path, "WRITE", attempt)
+
+
+def _creation_actions(
+    schema: StructType,
+    part_cols: list[str],
+    configuration: dict[str, str] | None,
+    min_writer_version: int,
+    writer_features: list[str] | None,
+) -> list[dict]:
+    """The protocol and metaData actions of a table's version 0."""
+    cfg0 = dict(configuration or {})
+    rfeats: list[str] = []
+    wfeats: list[str] = list(writer_features or [])
+    if _truthy(cfg0.get("delta.enableInCommitTimestamps")):
+        # no legacy writer version exists for ICT
+        wfeats.append("inCommitTimestamp")
+    if _truthy(cfg0.get("delta.enableDeletionVectors")):
+        # spec: the property requires the feature in BOTH lists from
+        # the moment it is set
+        rfeats.append("deletionVectors")
+        wfeats.append("deletionVectors")
+    if cfg0.get("delta.columnMapping.mode", "none") not in ("none", ""):
+        rfeats.append("columnMapping")
+        wfeats.append("columnMapping")
+    if cfg0.get("delta.checkpointPolicy") == "v2":
+        rfeats.append("v2Checkpoint")
+        wfeats.append("v2Checkpoint")
+    if _truthy(cfg0.get("delta.enableRowTracking")):
+        # rowTracking rides on domainMetadata (the high-water mark
+        # lives in a metadata domain); name the materialized row-id
+        # column at birth so every later rewrite materializes under
+        # one stable physical name
+        wfeats += ["rowTracking", "domainMetadata"]
+        cfg0.setdefault(_RT_MATCOL_KEY, f"_row-id-col-{uuid.uuid4()}")
+    if cfg0.get("delta.requireCheckpointProtectionBeforeVersion"):
+        wfeats.append("checkpointProtection")
+    legacy = {
+        "minReaderVersion": 1,
+        "minWriterVersion": max(2, min_writer_version),
+    }
+    if rfeats or wfeats:
+        # the table is born as a feature table (v3/v7) with the
+        # legacy features its min_writer_version implies
+        fake = DeltaSnapshot(version=-1, metadata={}, protocol=legacy, files={})
+        protocol = _upgrade_protocol_features(fake, rfeats, wfeats)
+    else:
+        protocol = {"protocol": legacy}
+    return [
+        protocol,
+        {
+            "metaData": {
+                "id": str(uuid.uuid4()),
+                "format": {"provider": "parquet", "options": {}},
+                "schemaString": schema.json(),
+                "partitionColumns": part_cols,
+                "configuration": cfg0,
+                "createdTime": int(time.time() * 1000),
+            }
+        },
+    ]
 
 
 def checkpoint_delta(
@@ -4494,57 +4487,21 @@ def optimize_delta(
     adds = _stage(
         to_phys(df), path, io_snap.partition_columns, data_change=False
     )
-    now_ms = int(time.time() * 1000)
+    params: dict = {"zOrderBy": list(zorder_by or [])}
+    if min_file_size is not None:
+        params["minFileSize"] = int(min_file_size)
+    if partition_filters:
+        params["predicate"] = {
+            c: sorted(v) for c, v in partition_filters.items()
+        }
+
     # removes are the OPTIMIZED snapshot's files, never the moving
     # tip's: the staged rewrite contains exactly snap's rows, so
     # removing a concurrent append's files would silently erase its
     # data under a dataChange:false commit. A tip that gained or lost
     # files since snap aborts instead (real Delta aborts conflicting
     # OPTIMIZE the same way); the caller simply re-runs.
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "OPTIMIZE",
-                "operationParameters": {
-                    "zOrderBy": list(zorder_by or []),
-                    **(
-                        {"minFileSize": int(min_file_size)}
-                        if min_file_size is not None
-                        else {}
-                    ),
-                    **(
-                        {
-                            "predicate": {
-                                c: sorted(v)
-                                for c, v in partition_filters.items()
-                            }
-                        }
-                        if partition_filters
-                        else {}
-                    ),
-                },
-                "engineInfo": "value_at_risk_spark.deltalog",
-            }
-        }
-    ]
-    actions.extend(
-        {
-            "remove": {
-                "path": p,
-                "deletionTimestamp": now_ms,
-                "dataChange": False,
-                **(
-                    {"deletionVector": snap.files[p]["deletionVector"]}
-                    if snap.files[p].get("deletionVector")
-                    else {}
-                ),
-            }
-        }
-        for p in rewrite_set
-    )
-    for _attempt in range(64):
-        current = snapshot(path)
+    def attempt(current: DeltaSnapshot) -> _Commit:
         # compare (path, DV identity), not just paths: a concurrent
         # merge-on-read DELETE changes bitmaps without changing any
         # file path, and a dataChange:false rewrite over it would
@@ -4566,11 +4523,10 @@ def optimize_delta(
             )
         else:
             adds_use, rt_actions = adds, []
-        if _publish_commit(
-            path, current.version + 1, actions + adds_use + rt_actions
-        ):
-            return current.version + 1
-    raise RuntimeError(f"optimize_delta: lost the commit race at {path}")
+        removes = _removes(snap, rewrite_set, data_change=False)
+        return _Commit(params, removes + adds_use + rt_actions)
+
+    return _commit(path, "OPTIMIZE", attempt)
 
 
 _INTERVAL_RE = re.compile(
@@ -4709,9 +4665,8 @@ def restore_delta(spark: SparkSession, path: str, version: int) -> int:
     rollback is itself a commit, so it is atomic, auditable in
     history, and reversible by another restore."""
     target = snapshot(path, version)
-    now_ms = int(time.time() * 1000)
-    for _attempt in range(64):
-        current = snapshot(path)
+
+    def attempt(current: DeltaSnapshot) -> _Commit:
         _refuse_append_only(current, "RESTORE")
         # same writer-version discipline as every other mutation: a
         # table requiring features this module does not implement must
@@ -4760,31 +4715,7 @@ def restore_delta(spark: SparkSession, path: str, version: int) -> int:
                 f"files of version {version} were vacuumed "
                 f"(e.g. for {missing_dv[0]})"
             )
-        actions: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "RESTORE",
-                    "operationParameters": {"version": version},
-                    "engineInfo": "value_at_risk_spark.deltalog",
-                }
-            }
-        ]
-        actions.extend(
-            {
-                "remove": {
-                    "path": p,
-                    "deletionTimestamp": now_ms,
-                    "dataChange": True,
-                    **(
-                        {"deletionVector": current.files[p]["deletionVector"]}
-                        if current.files[p].get("deletionVector")
-                        else {}
-                    ),
-                }
-            }
-            for p in to_remove
-        )
+        actions = _removes(current, to_remove)
         # re-adds are a DATA change regardless of how the target
         # version produced the file: an OPTIMIZE-born add carries
         # dataChange:false, and re-publishing it verbatim would hide
@@ -4804,9 +4735,9 @@ def restore_delta(spark: SparkSession, path: str, version: int) -> int:
             }
             for p in to_add
         )
-        if _publish_commit(path, current.version + 1, actions):
-            return current.version + 1
-    raise RuntimeError(f"restore_delta: lost the commit race at {path}")
+        return _Commit({"version": version}, actions)
+
+    return _commit(path, "RESTORE", attempt)
 
 
 def read_delta_changes(
@@ -5260,115 +5191,62 @@ def cleanup_delta_log(path: str, keep_last: int = 0) -> list[int]:
     return deleted
 
 
-def _touched_files(
+def _file_hits(
     spark: SparkSession,
     path: str,
     snap: DeltaSnapshot,
     candidates: list[str],
-    cond,
-    view=None,
-) -> tuple[list[str], int]:
-    """Identify which candidate files hold rows matching ``cond`` —
-    Delta's own two-phase DML shape: ONE distributed scan aggregating
-    (file, match_count), a driver result bounded by the file count,
-    never by rows. Returns (touched rel paths, total matching rows).
-    ``input_file_name`` is resolved in the scan stage (the partial
-    aggregation pipelines into it, no shuffle in between). Candidates
-    that carry a deletion vector are counted through the DV-applied
-    metadata scan instead — already-deleted rows must never re-match.
-    ``view`` (mapped tables): post-scan rename to LOGICAL names so
-    ``cond`` — written in logical names — binds; the ``__dv_fp``
-    grouping key and ``input_file_name`` are unaffected by it."""
-    if view is None:
-        view = lambda df: df  # noqa: E731
-    if _dv_map(snap, candidates):
-        hits = (
-            view(_scan_files_dv(spark, path, snap, candidates, keep_meta=True))
-            .filter(F.coalesce(cond, F.lit(False)))
-            .groupBy(F.col("__dv_fp").alias("_delta_file"))
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .collect()
-        )
-    else:
-        hits = (
-            view(_scan_files(spark, path, snap, candidates))
-            .filter(F.coalesce(cond, F.lit(False)))
-            .groupBy(F.input_file_name().alias("_delta_file"))
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .collect()
-        )
-    # abspath, not the caller's possibly-RELATIVE table path: the
-    # scan-side file paths are always absolute file: URIs, and a
-    # relative key here would KeyError the lookup (same hazard class
-    # _dv_keep_filter guards against)
-    abs2rel = {
-        os.path.normpath(os.path.join(os.path.abspath(path), unquote(p))): p
-        for p in candidates
-    }
-    touched: list[str] = []
-    total = 0
-    for r in hits:
-        a = r._delta_file
-        if a.startswith("file:"):
-            a = a[len("file:"):]
-            # file:///x and file:/x both normalize to /x
-            a = "/" + a.lstrip("/")
-        touched.append(abs2rel[os.path.normpath(unquote(a))])
-        total += r._n
-    return sorted(touched), total
-
-
-def _touched_files_by_keys(
-    spark: SparkSession,
-    path: str,
-    snap: DeltaSnapshot,
-    candidates: list[str],
-    keys_df: DataFrame,
-    keys: list[str],
-    view=None,
-) -> list[str]:
-    """Identify which candidate files hold at least one row whose key
-    tuple appears in ``keys_df`` — the MERGE analogue of
-    ``_touched_files`` (a semi-join on the merge keys instead of a
-    predicate). One distributed scan of the KEY COLUMNS only,
-    aggregated to (file, hit) — the driver result is bounded by the
-    file count, never by rows. At 100 TB a merge whose source touches
-    0.1% of files identifies them with one column-pruned pass and the
-    rewrite stays 0.1% of the table. DV-carrying candidates are
-    matched through the DV-applied scan (already-deleted rows must
-    never mark a file touched). ``view`` (mapped tables): post-scan
-    rename to LOGICAL names so the logical-name ``keys`` bind."""
-    if view is None:
-        view = lambda df: df  # noqa: E731
+    match,
+    view,
+    positions: bool = False,
+) -> dict:
+    """The one file-hit mapper, Delta's own two-phase DML shape: ONE
+    distributed scan of ``candidates`` narrowed by ``match(scan,
+    file_col)`` — which returns the matching rows with the file column
+    as ``_delta_file`` (a predicate filter, a key semi-join) —
+    aggregated per file and collected: a driver result bounded by the
+    file count, never by rows. Returns {rel path: matching row count}, or with
+    ``positions`` {rel path: sorted physical row indexes} (the
+    coordinates deletion vectors are defined over). Candidates that
+    carry a deletion vector scan through the DV-applied metadata scan
+    — already-deleted rows must never match again. ``view`` renames
+    the scan to LOGICAL names (identity on unmapped tables) so
+    ``match`` binds."""
     if not candidates:
-        return []
-    if _dv_map(snap, candidates):
-        base = view(
-            _scan_files_dv(spark, path, snap, candidates, keep_meta=True)
-        )
+        return {}
+    if positions or _dv_map(snap, candidates):
+        base = view(_scan_files_dv(spark, path, snap, candidates, keep_meta=True))
         fcol = F.col("__dv_fp")
     else:
+        # input_file_name resolves in the scan stage: ``match`` must
+        # take it before any join
         base = view(_scan_files(spark, path, snap, candidates))
         fcol = F.input_file_name()
-    hits = (
-        base.select(fcol.alias("_delta_file"), *keys)
-        .join(keys_df.select(*keys), on=keys, how="left_semi")
+    value = (
+        F.sort_array(F.collect_list("__dv_ri"))
+        if positions
+        else F.count(F.lit(1))
+    )
+    rows = (
+        match(base, fcol)
         .groupBy("_delta_file")
-        .agg(F.count(F.lit(1)).alias("_n"))
+        .agg(value.alias("_v"))
         .collect()
     )
+    # abspath, not the caller's possibly-RELATIVE table path: the
+    # scan-side file paths are always absolute file: URIs
     abs2rel = {
         os.path.normpath(os.path.join(os.path.abspath(path), unquote(p))): p
         for p in candidates
     }
-    touched: list[str] = []
-    for r in hits:
+    out = {}
+    for r in rows:
         a = r._delta_file
         if a.startswith("file:"):
-            a = a[len("file:"):]
-            a = "/" + a.lstrip("/")
-        touched.append(abs2rel[os.path.normpath(unquote(a))])
-    return sorted(touched)
+            # file:///x and file:/x both normalize to /x
+            a = "/" + a[len("file:"):].lstrip("/")
+        out[abs2rel[os.path.normpath(unquote(a))]] = r._v
+    return out
 
 
 def _stage_cdc(
@@ -5405,211 +5283,269 @@ def _stage_cdc(
     return actions
 
 
-def _commit_rewrite(
-    path: str,
-    read_version: int,
-    operation: str,
-    op_params: dict,
-    removed: list[str],
-    adds: list[dict],
-    snap: DeltaSnapshot,
-    cdc_actions: list[dict] | None = None,
-    txn: dict | None = None,
-) -> bool:
-    now_ms = int(time.time() * 1000)
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": operation,
-                "operationParameters": op_params,
-                "engineInfo": "value_at_risk_spark.deltalog",
-            }
-        }
-    ]
-    if txn is not None:
-        # streaming-sink idempotence rides in the same atomic commit
-        # (write_delta's txn action format exactly)
-        actions.append(
-            {
-                "txn": {
-                    "appId": str(txn["appId"]),
-                    "version": int(txn["version"]),
-                    "lastUpdated": now_ms,
-                }
-            }
-        )
-    actions.extend(
-        {
-            "remove": {
-                "path": p,
-                "deletionTimestamp": now_ms,
-                "dataChange": True,
-                "partitionValues": snap.files[p].get("partitionValues"),
-                **(
-                    {"deletionVector": snap.files[p]["deletionVector"]}
-                    if snap.files[p].get("deletionVector")
-                    else {}
-                ),
-            }
-        }
-        for p in removed
-    )
-    if row_tracking_enabled(snap):
-        # every tracked add needs a fresh baseRowId range + the
-        # advanced high-water mark IN THIS COMMIT (logical ids ride
-        # in the materialized column the caller staged)
-        adds, rt_actions = _rt_assign(snap, adds, read_version + 1)
-    else:
-        rt_actions = []
-    actions.extend(adds)
-    actions.extend(rt_actions)
-    if cdc_actions:
-        actions.extend(cdc_actions)
-    return _publish_commit(path, read_version + 1, actions)
-
-
 def delete_from_delta(
     spark: SparkSession,
     path: str,
     condition: str,
     partition_filters: dict[str, list[str]] | None = None,
     stats_filters: list[tuple] | None = None,
-    use_dv: bool | None = None,
 ) -> dict:
-    out = _delete_from_delta_impl(
-        spark, path, condition, partition_filters, stats_filters, use_dv
-    )
-    # autoCompact parity with write_delta: a copy-on-write DELETE adds
-    # rewritten files the property promises to keep compacted; DV
-    # deletes add no data files (files_rewritten == 0) and skip.
-    # Gated on the impl's pre-commit snapshot config (auto_compact in
-    # the result) so tables that never opted in pay zero extra replay
-    if out.get("files_rewritten") and out.get("auto_compact"):
-        _maybe_auto_compact(spark, path)
-    return out
-
-
-def _delete_from_delta_impl(
-    spark: SparkSession,
-    path: str,
-    condition: str,
-    partition_filters: dict[str, list[str]] | None = None,
-    stats_filters: list[tuple] | None = None,
-    use_dv: bool | None = None,
-) -> dict:
-    """``DELETE FROM <table> WHERE condition`` — file-level
-    copy-on-write, the shape real Delta uses: (1) prune candidate
-    files at the LOG level (optional partition/stats filters), (2) one
-    scan finds which files actually hold matching rows, (3) ONLY those
-    files are rewritten with their surviving rows; every untouched
-    file keeps its add action verbatim. At 100 TB a DELETE matching
-    0.1% of files rewrites 0.1% of the table, not all of it. SQL
-    semantics: a row is deleted iff the condition evaluates TRUE
-    (NULL keeps the row). The rewrite commits atomically, pinned to
-    the read version — any concurrent commit forces re-identification
-    and retry, so a racing append is never clobbered. Returns
-    {version, rows_deleted, files_rewritten, files_added}; no commit
-    is made when nothing matches.
-
-    ``use_dv`` selects merge-on-read DELETE via deletion vectors
-    (rewrite NOTHING; commit a bitmap of deleted row positions per
-    touched file). Default None = automatic from the table property
-    ``delta.enableDeletionVectors`` — Delta's own switch. At 100 TB
-    this is the difference between a small DELETE writing kilobytes
-    of bitmap and re-writing every touched gigabyte file.
+    """``DELETE FROM <table> WHERE condition`` — the file-level DML
+    shape real Delta uses: (1) prune candidate files at the LOG level
+    (optional partition/stats filters), (2) one scan finds which files
+    actually hold matching rows, (3) only those files change; every
+    untouched file keeps its add action verbatim. At 100 TB a DELETE
+    matching 0.1% of files touches 0.1% of the table. SQL semantics: a
+    row is deleted iff the condition evaluates TRUE (NULL keeps the
+    row). The table property ``delta.enableDeletionVectors`` — Delta's
+    own switch — picks the storage strategy (``_dml``): copy-on-write
+    rewrites the touched files' survivors; with deletion vectors the
+    touched files are masked and nothing is rewritten (a small DELETE
+    writes kilobytes of bitmap, not every touched gigabyte file).
+    The commit is pinned to the read version — any concurrent commit
+    forces re-identification and retry, so a racing append is never
+    clobbered. Returns {version, rows_deleted, files_rewritten,
+    files_added, dv_files, files_fully_removed}; no commit is made
+    when nothing matches.
 
     Reference tie: the reference relies on Delta DML over its
     Monte-Carlo tables (config/configure_notebook.py:18-27); this is
     the native-log equivalent with delta-spark's file-skipping edge
-    implemented rather than documented away (contrast
-    merge_into_delta_native's whole-set rewrite)."""
-    cond = F.expr(condition)
-    if use_dv is None:
-        cfg = snapshot(path).metadata.get("configuration") or {}
-        use_dv = _truthy(cfg.get("delta.enableDeletionVectors"))
-    if use_dv:
-        return _delete_with_dv(
-            spark, path, condition, cond, partition_filters, stats_filters
+    implemented rather than documented away."""
+    return _dml(
+        spark, path, "DELETE", condition, None, partition_filters,
+        stats_filters,
+    )
+
+
+def _dml(
+    spark: SparkSession,
+    path: str,
+    operation: str,
+    condition: str,
+    set_exprs: dict[str, str] | None,
+    partition_filters: dict[str, list[str]] | None,
+    stats_filters: list[tuple] | None,
+) -> dict:
+    """The one DELETE/UPDATE driver; DELETE is the case with no
+    post-image (``set_exprs`` None). Per attempt: one file-hit scan
+    finds the touched files, then one of two storage strategies, picked
+    by ``delta.enableDeletionVectors`` on the attempt's snapshot:
+
+    - copy-on-write: the touched files are rewritten — survivors, plus
+      for UPDATE the matched rows with the SET applied in the same
+      pass — and removed;
+    - deletion vectors: the matched rows are masked out of their files
+      by one DV file (a file masked in full is dropped outright); an
+      UPDATE's post-image appends as new files.
+
+    Staged rows pass the one row-validation rule (``_checked``); on a
+    CDF table the matched rows are staged as change data (delete, or
+    update pre/post images); on a row-tracked table the rewrite keeps
+    every row's id through the materialized column."""
+    hit = F.coalesce(F.expr(condition), F.lit(False))
+    rows_key = "rows_deleted" if set_exprs is None else "rows_updated"
+    params: dict = {"predicate": condition}
+    if set_exprs is not None:
+        params["set"] = dict(sorted(set_exprs.items()))
+
+    def attempt(snap: DeltaSnapshot):
+        _refuse_high_writer_version(snap, operation)
+        _refuse_append_only(snap, operation)
+        use_dv = _truthy(
+            (snap.metadata.get("configuration") or {}).get(
+                "delta.enableDeletionVectors"
+            )
         )
-    for _attempt in range(16):
-        snap = snapshot(path)
-        _refuse_high_writer_version(snap, "DELETE")
-        _refuse_append_only(snap, "DELETE")
         # column-mapped tables: scan/stage in PHYSICAL names, evaluate
         # the condition in LOGICAL names (identity planes if unmapped)
         io_snap, to_log, to_phys, l2p = _mapping_planes(spark, snap)
         pf, sf = _map_filter_names(l2p, partition_filters, stats_filters)
-        candidates = _pruned_active(io_snap, pf, sf)
-        touched, n_rows = _touched_files(
-            spark, path, io_snap, candidates, cond, view=to_log
-        )
-        if not touched:
-            return {
-                "version": snap.version,
-                "rows_deleted": 0,
-                "files_rewritten": 0,
-                "files_added": 0,
-            }
-        if row_tracking_enabled(snap):
-            # surviving rows must KEEP their ids: rewrite with the
-            # materialized row-id column populated
-            survivors = to_log(
-                _files_with_row_ids(
-                    spark, path, io_snap, touched,
-                    _rt_matcol_required(snap, "DELETE"),
-                )
-            ).filter(~F.coalesce(cond, F.lit(False)))
-        else:
-            survivors = to_log(
-                _scan_files_dv(spark, path, io_snap, touched)
-            ).filter(~F.coalesce(cond, F.lit(False)))
-        # bound the restage task count by the touched-file count so a
-        # 3-file DELETE doesn't shatter into shuffle-partition-many
-        # small files (rewrite granularity ≈ input granularity)
-        adds = _stage(
-            to_phys(survivors).repartition(len(touched)),
+        hits = _file_hits(
+            spark,
             path,
-            io_snap.partition_columns,
-            data_change=True,
+            io_snap,
+            _pruned_active(io_snap, pf, sf),
+            lambda df, f: df.filter(hit).withColumn("_delta_file", f),
+            to_log,
+            positions=use_dv,
         )
-        cdc_actions = None
-        if cdf_enabled(snap):
-            # CDF: the deleted rows themselves, one extra bounded scan
-            # of ONLY the touched files (Delta's own DML pays the same
-            # second pass to materialize change data); cdc files carry
-            # physical names on mapped tables, like any data file
-            deleted_rows = (
-                to_log(_scan_files_dv(spark, path, io_snap, touched))
-                .filter(F.coalesce(cond, F.lit(False)))
-                .withColumn("_change_type", F.lit("delete"))
+        result = {
+            "version": snap.version,
+            rows_key: 0,
+            "files_rewritten": 0,
+            "files_added": 0,
+            "dv_files": 0,
+            "files_fully_removed": 0,
+            "auto_compact": _wants_auto_compact(snap),
+        }
+        if not hits:
+            return result
+        touched = sorted(hits)
+        n_parts = len(touched)
+        fields = snap.schema.fields
+        # only a DV DELETE stages no rows (no post-image, no rewrite)
+        writes = set_exprs is not None or not use_dv
+        tracked = writes and row_tracking_enabled(snap)
+        matcol = _rt_matcol_required(snap, operation) if tracked else None
+        base = to_log(
+            _files_with_row_ids(spark, path, io_snap, touched, matcol)
+            if tracked
+            else _scan_files_dv(spark, path, io_snap, touched)
+        )
+        keep_id = [F.col(matcol)] if tracked else []
+
+        def set_cols(when=None) -> list:
+            # updated values cast back to the table schema, so the
+            # metaData contract never drifts
+            cols = []
+            for f in fields:
+                c = _qcol(f.name)
+                if f.name in (set_exprs or {}):
+                    v = F.expr(set_exprs[f.name]).cast(_set_cast_type(f))
+                    c = (v if when is None else F.when(when, v).otherwise(c))
+                    c = c.alias(f.name)
+                cols.append(c)
+            return cols
+
+        adds: list[dict] = []
+        rt_actions: list[dict] = []
+        if writes:
+            if use_dv:
+                # an UPDATE's post-image appends as new files
+                staged = base.filter(hit).select(*set_cols(), *keep_id)
+            elif set_exprs is None:
+                staged = base.filter(~hit)
+            else:
+                staged = base.select(*set_cols(hit), *keep_id)
+            if set_exprs is not None:
+                required = {f.name for f in fields if not f.nullable}
+                staged = _checked(
+                    staged,
+                    "update_delta",
+                    not_null=sorted(required & set(set_exprs)),
+                    checks=table_constraints(snap),
+                    generated=table_generated_columns(snap),
+                )
+            # restage task count bounded by the touched-file count so
+            # a 3-file DML doesn't shatter into shuffle-partition-many
+            # small files (rewrite granularity ≈ input granularity)
+            adds = _stage(
+                to_phys(staged).repartition(n_parts),
+                path,
+                io_snap.partition_columns,
+                data_change=True,
             )
-            cdc_actions = _stage_cdc(
-                to_phys(deleted_rows).repartition(len(touched)),
+            if tracked:
+                # fresh baseRowId ranges for the new files + the
+                # advanced high-water mark in this commit (logical ids
+                # ride in the materialized column)
+                adds, rt_actions = _rt_assign(snap, adds, snap.version + 1)
+        mask_adds, n_dropped = (
+            _dv_mask(path, snap, hits) if use_dv else ([], 0)
+        )
+        actions: list[dict] = []
+        if use_dv and not _has_dv_feature(snap):
+            # the first DV lifts the table to reader v3 / writer v7
+            # with deletionVectors in BOTH lists (spec), in this commit
+            actions.append(
+                _upgrade_protocol_features(
+                    snap, ("deletionVectors",), ("deletionVectors",)
+                )
+            )
+        actions += _removes(snap, touched) + mask_adds + adds + rt_actions
+        if cdf_enabled(snap):
+            # change data: the matched rows from the touched-file scan
+            # (a SET must see the original values); cdc files carry
+            # physical names on mapped tables, like any data file
+            pre = base.filter(hit).select(*[_qcol(f.name) for f in fields])
+            if set_exprs is None:
+                changes = pre.withColumn("_change_type", F.lit("delete"))
+            else:
+                changes = pre.withColumn(
+                    "_change_type", F.lit("update_preimage")
+                ).unionByName(
+                    base.filter(hit)
+                    .select(*set_cols())
+                    .withColumn("_change_type", F.lit("update_postimage"))
+                )
+            actions += _stage_cdc(
+                to_phys(changes).repartition(n_parts),
                 path,
                 io_snap.partition_columns,
             )
-        if _commit_rewrite(
-            path,
-            snap.version,
-            "DELETE",
-            {"predicate": condition},
-            touched,
-            adds,
-            snap,
-            cdc_actions=cdc_actions,
-        ):
-            return {
+        result.update(
+            {
                 "version": snap.version + 1,
-                "rows_deleted": n_rows,
-                "files_rewritten": len(touched),
+                rows_key: sum(
+                    len(v) if use_dv else v for v in hits.values()
+                ),
+                "files_rewritten": 0 if use_dv else n_parts,
                 "files_added": len(adds),
-                "auto_compact": _wants_auto_compact(snap),
+                "dv_files": len(mask_adds),
+                "files_fully_removed": n_dropped,
             }
-        # conflict: staged files become vacuum-collectable orphans
-        # (same torn-state story as any failed commit); re-identify
-        # against the new tip and retry
-    raise RuntimeError(f"delete_from_delta: conflicted 16 times at {path}")
+        )
+        mode = {"mode": "deletionVectors"} if use_dv else {}
+        return _Commit({**params, **mode}, actions, result=result)
+
+    out = _commit(path, operation, attempt)
+    # autoCompact parity with write_delta: the rewritten files and an
+    # UPDATE's appended rows are data files the property promises to
+    # keep compacted. Gated on the attempt's snapshot config, so
+    # tables that never opted in pay no extra log replay
+    if (out["files_rewritten"] or out["files_added"]) and out["auto_compact"]:
+        _maybe_auto_compact(spark, path)
+    return out
+
+
+def _dv_mask(
+    path: str, snap: DeltaSnapshot, hits: dict
+) -> tuple[list[dict], int]:
+    """The one deletion-vector masking step: each hit file's matched
+    row positions, unioned with its existing DV, go into ONE new DV
+    file (one object-store write per DML); the file is re-added under
+    the same path with the new descriptor. A file whose DV reaches its
+    physical numRecords is dropped outright. Returns (the re-adds, the
+    count of files dropped). Driver memory is bounded by the matched
+    row count (8 bytes each), never by table size."""
+    import numpy as np
+
+    from value_at_risk_spark.sources import dv as dvmod
+
+    keep: list[tuple[str, "np.ndarray"]] = []
+    dropped = 0
+    for rel in sorted(hits):
+        idx = np.asarray(hits[rel], dtype=np.uint64)
+        old = snap.files[rel].get("deletionVector")
+        if old:
+            idx = np.union1d(idx, dvmod.read_dv(path, old))
+        if _stats_num_records(snap.files[rel]) == len(idx):
+            dropped += 1
+        else:
+            keep.append((rel, idx))
+    if not keep:
+        return [], dropped
+    descs = dvmod.write_dv_file(path, [idx for _rel, idx in keep])
+    adds = []
+    for (rel, _idx), desc in zip(keep, descs):
+        old_add = snap.files[rel]
+        # row tracking: the file is UNTOUCHED (only masked), so its id
+        # range — baseRowId + position — stays valid verbatim
+        kept = (
+            "path",
+            "partitionValues",
+            "size",
+            "modificationTime",
+            "stats",
+            "baseRowId",
+            "defaultRowCommitVersion",
+        )
+        add = {k: old_add[k] for k in kept if old_add.get(k) is not None}
+        adds.append(
+            {"add": {**add, "dataChange": True, "deletionVector": desc}}
+        )
+    return adds, dropped
 
 
 def _upgrade_protocol_features(
@@ -5669,398 +5605,6 @@ def _stats_num_records(add: dict) -> int | None:
         return None
 
 
-def _delete_with_dv(
-    spark: SparkSession,
-    path: str,
-    condition: str,
-    cond,
-    partition_filters: dict[str, list[str]] | None,
-    stats_filters: list[tuple] | None,
-) -> dict:
-    """Merge-on-read DELETE: one identification scan collects the
-    matching PHYSICAL row indexes per file (driver memory bounded by
-    deleted-row count — 8 bytes each — never table size), unions them
-    with any existing DV, and commits remove(old add) + add(same
-    path, new ``deletionVector`` descriptor). ONE DV file holds every
-    touched file's bitmap (one object-store write per DELETE). A file
-    whose DV reaches its physical numRecords is dropped outright.
-    No data file is read twice, none is rewritten.
-
-    Protocol: first DV on a table lifts it to reader v3 / writer v7
-    with ``deletionVectors`` in BOTH feature lists (spec requirement),
-    in the same commit as the DVs themselves."""
-    import numpy as np
-
-    from value_at_risk_spark.sources import dv as dvmod
-
-    for _attempt in range(16):
-        snap = snapshot(path)
-        _refuse_high_writer_version(snap, "DELETE")
-        _refuse_append_only(snap, "DELETE")
-        io_snap, to_log, to_phys, l2p = _mapping_planes(spark, snap)
-        pf, sf = _map_filter_names(l2p, partition_filters, stats_filters)
-        candidates = _pruned_active(io_snap, pf, sf)
-        zero = {
-            "version": snap.version,
-            "rows_deleted": 0,
-            "files_rewritten": 0,
-            "files_added": 0,
-            "dv_files": 0,
-            "files_fully_removed": 0,
-        }
-        if not candidates:
-            return zero
-        hits = (
-            to_log(
-                _scan_files_dv(spark, path, io_snap, candidates, keep_meta=True)
-            )
-            .filter(F.coalesce(cond, F.lit(False)))
-            .groupBy("__dv_fp")
-            .agg(F.sort_array(F.collect_list("__dv_ri")).alias("_ris"))
-            .collect()
-        )
-        if not hits:
-            return zero
-        abs2rel = {
-            os.path.normpath(
-                os.path.join(os.path.abspath(path), unquote(p))
-            ): p
-            for p in candidates
-        }
-        touched: list[tuple[str, "np.ndarray"]] = []
-        n_rows = 0
-        for r in hits:
-            a = r["__dv_fp"]
-            if a.startswith("file:"):
-                a = "/" + a[len("file:"):].lstrip("/")
-            rel = abs2rel[os.path.normpath(unquote(a))]
-            idx = np.asarray(r["_ris"], dtype=np.uint64)
-            n_rows += len(idx)
-            old = snap.files[rel].get("deletionVector")
-            if old:
-                idx = np.union1d(idx, dvmod.read_dv(path, old))
-            touched.append((rel, idx))
-        touched.sort()
-        fully_removed = [
-            rel
-            for rel, idx in touched
-            if _stats_num_records(snap.files[rel]) == len(idx)
-        ]
-        dv_keep = [
-            (rel, idx) for rel, idx in touched if rel not in set(fully_removed)
-        ]
-        adds: list[dict] = []
-        if dv_keep:
-            descs = dvmod.write_dv_file(path, [idx for _rel, idx in dv_keep])
-            for (rel, _idx), desc in zip(dv_keep, descs):
-                old_add = snap.files[rel]
-                adds.append(
-                    {
-                        "add": {
-                            **{
-                                k: old_add[k]
-                                for k in (
-                                    "path",
-                                    "partitionValues",
-                                    "size",
-                                    "modificationTime",
-                                    "stats",
-                                    # row tracking: the file is
-                                    # UNTOUCHED (only masked), so its
-                                    # id range — baseRowId + position
-                                    # — stays valid verbatim
-                                    "baseRowId",
-                                    "defaultRowCommitVersion",
-                                )
-                                if old_add.get(k) is not None
-                            },
-                            "dataChange": True,
-                            "deletionVector": desc,
-                        }
-                    }
-                )
-        now_ms = int(time.time() * 1000)
-        actions: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "DELETE",
-                    "operationParameters": {
-                        "predicate": condition,
-                        "mode": "deletionVectors",
-                    },
-                    "engineInfo": "value_at_risk_spark.deltalog",
-                }
-            }
-        ]
-        if not _has_dv_feature(snap):
-            actions.append(
-                _upgrade_protocol_features(
-                    snap, ("deletionVectors",), ("deletionVectors",)
-                )
-            )
-        for rel, _idx in touched:
-            old_add = snap.files[rel]
-            rm = {
-                "path": rel,
-                "deletionTimestamp": now_ms,
-                "dataChange": True,
-                "partitionValues": old_add.get("partitionValues"),
-            }
-            if old_add.get("deletionVector"):
-                # spec: a remove names the file version it removes,
-                # DV included
-                rm["deletionVector"] = old_add["deletionVector"]
-            actions.append({"remove": rm})
-        actions.extend(adds)
-        if cdf_enabled(snap):
-            deleted_rows = (
-                to_log(
-                    _scan_files_dv(
-                        spark, path, io_snap, [rel for rel, _ in touched]
-                    )
-                )
-                .filter(F.coalesce(cond, F.lit(False)))
-                .withColumn("_change_type", F.lit("delete"))
-            )
-            actions.extend(
-                _stage_cdc(
-                    to_phys(deleted_rows).repartition(len(touched)),
-                    path,
-                    io_snap.partition_columns,
-                )
-            )
-        if _publish_commit(path, snap.version + 1, actions):
-            return {
-                "version": snap.version + 1,
-                "rows_deleted": n_rows,
-                "files_rewritten": 0,
-                "files_added": 0,
-                "dv_files": len(dv_keep),
-                "files_fully_removed": len(fully_removed),
-            }
-        # conflict: the written DV file becomes a vacuum-collectable
-        # orphan; re-identify against the new tip and retry
-    raise RuntimeError(f"delete_from_delta(dv): conflicted 16 times at {path}")
-
-
-def _update_with_dv(
-    spark: SparkSession,
-    path: str,
-    condition: str,
-    cond,
-    set_exprs: dict[str, str],
-    partition_filters: dict[str, list[str]] | None,
-    stats_filters: list[tuple] | None,
-) -> dict:
-    """Merge-on-read UPDATE: mask the matched rows out of their files
-    with deletion-vector bitmaps (no rewrite), append the updated
-    rows as new files. Write volume = matched rows + bitmaps; a
-    10-row UPDATE against 10 GB files writes kilobytes. Same
-    identification shape as _delete_with_dv: one scan, driver memory
-    bounded by MATCHED-row count. Updated values are cast to the
-    table schema; CHECK constraints and generated columns are
-    enforced on the updated rows; partition-column SETs land the
-    moved rows in their new Hive dirs naturally (they are new
-    files)."""
-    import numpy as np
-
-    from value_at_risk_spark.sources import dv as dvmod
-
-    for _attempt in range(16):
-        snap = snapshot(path)
-        _refuse_high_writer_version(snap, "UPDATE")
-        _refuse_append_only(snap, "UPDATE")
-        io_snap, to_log, to_phys, l2p = _mapping_planes(spark, snap)
-        pf, sf = _map_filter_names(l2p, partition_filters, stats_filters)
-        candidates = _pruned_active(io_snap, pf, sf)
-        zero = {
-            "version": snap.version,
-            "rows_updated": 0,
-            "files_rewritten": 0,
-            "files_added": 0,
-            "dv_files": 0,
-        }
-        if not candidates:
-            return zero
-        hits = (
-            to_log(
-                _scan_files_dv(spark, path, io_snap, candidates, keep_meta=True)
-            )
-            .filter(F.coalesce(cond, F.lit(False)))
-            .groupBy("__dv_fp")
-            .agg(F.sort_array(F.collect_list("__dv_ri")).alias("_ris"))
-            .collect()
-        )
-        if not hits:
-            return zero
-        abs2rel = {
-            os.path.normpath(
-                os.path.join(os.path.abspath(path), unquote(p))
-            ): p
-            for p in candidates
-        }
-        touched: list[tuple[str, "np.ndarray"]] = []
-        n_rows = 0
-        for r in hits:
-            a = r["__dv_fp"]
-            if a.startswith("file:"):
-                a = "/" + a[len("file:"):].lstrip("/")
-            rel = abs2rel[os.path.normpath(unquote(a))]
-            idx = np.asarray(r["_ris"], dtype=np.uint64)
-            n_rows += len(idx)
-            old = snap.files[rel].get("deletionVector")
-            if old:
-                idx = np.union1d(idx, dvmod.read_dv(path, old))
-            touched.append((rel, idx))
-        touched.sort()
-        touched_rels = [rel for rel, _ in touched]
-        fully_removed = {
-            rel
-            for rel, idx in touched
-            if _stats_num_records(snap.files[rel]) == len(idx)
-        }
-        dv_keep = [(rel, idx) for rel, idx in touched if rel not in fully_removed]
-
-        tracked = row_tracking_enabled(snap)
-        if tracked:
-            # the updated rows move to NEW files but keep their ids:
-            # resolve each matched row's id and materialize it in the
-            # appended files
-            matcol = _rt_matcol_required(snap, "UPDATE")
-            matched = to_log(
-                _files_with_row_ids(spark, path, io_snap, touched_rels, matcol)
-            ).filter(F.coalesce(cond, F.lit(False)))
-        else:
-            matched = to_log(
-                _scan_files_dv(spark, path, io_snap, touched_rels)
-            ).filter(F.coalesce(cond, F.lit(False)))
-        updated = matched.select(
-            *[
-                (
-                    F.expr(set_exprs[f.name]).cast(_set_cast_type(f)).alias(f.name)
-                    if f.name in set_exprs
-                    else _qcol(f.name)
-                )
-                for f in snap.schema.fields
-            ],
-            *([F.col(matcol)] if tracked else []),
-        )
-        cons = table_constraints(snap)
-        if cons:
-            _check_constraints(updated, cons, "update_delta")
-        gen = table_generated_columns(snap)
-        if gen:
-            _check_generated(updated, gen, "update_delta")
-        new_adds = _stage(
-            to_phys(updated).repartition(max(1, len(touched_rels))),
-            path,
-            io_snap.partition_columns,
-            data_change=True,
-        )
-        dv_adds: list[dict] = []
-        if dv_keep:
-            descs = dvmod.write_dv_file(path, [idx for _rel, idx in dv_keep])
-            for (rel, _idx), desc in zip(dv_keep, descs):
-                old_add = snap.files[rel]
-                dv_adds.append(
-                    {
-                        "add": {
-                            **{
-                                k: old_add[k]
-                                for k in (
-                                    "path",
-                                    "partitionValues",
-                                    "size",
-                                    "modificationTime",
-                                    "stats",
-                                    # row tracking: the file is
-                                    # UNTOUCHED (only masked), so its
-                                    # id range — baseRowId + position
-                                    # — stays valid verbatim
-                                    "baseRowId",
-                                    "defaultRowCommitVersion",
-                                )
-                                if old_add.get(k) is not None
-                            },
-                            "dataChange": True,
-                            "deletionVector": desc,
-                        }
-                    }
-                )
-        now_ms = int(time.time() * 1000)
-        actions: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "UPDATE",
-                    "operationParameters": {
-                        "predicate": condition,
-                        "set": {k: v for k, v in sorted(set_exprs.items())},
-                        "mode": "deletionVectors",
-                    },
-                    "engineInfo": "value_at_risk_spark.deltalog",
-                }
-            }
-        ]
-        if not _has_dv_feature(snap):
-            actions.append(
-                _upgrade_protocol_features(
-                    snap, ("deletionVectors",), ("deletionVectors",)
-                )
-            )
-        for rel, _idx in touched:
-            old_add = snap.files[rel]
-            rm = {
-                "path": rel,
-                "deletionTimestamp": now_ms,
-                "dataChange": True,
-                "partitionValues": old_add.get("partitionValues"),
-            }
-            if old_add.get("deletionVector"):
-                rm["deletionVector"] = old_add["deletionVector"]
-            actions.append({"remove": rm})
-        actions.extend(dv_adds)
-        if tracked:
-            # fresh baseRowId ranges for the NEW files only (dv_adds
-            # carry their original ranges verbatim) + the advanced
-            # high-water mark in this commit
-            new_adds, rt_actions = _rt_assign(
-                snap, new_adds, snap.version + 1
-            )
-            actions.extend(new_adds)
-            actions.extend(rt_actions)
-        else:
-            actions.extend(new_adds)
-        if cdf_enabled(snap):
-            logical = [f.name for f in snap.schema.fields]
-            pre = matched.select(*logical).withColumn(
-                "_change_type", F.lit("update_preimage")
-            )
-            post = updated.select(*logical).withColumn(
-                "_change_type", F.lit("update_postimage")
-            )
-            actions.extend(
-                _stage_cdc(
-                    to_phys(pre.unionByName(post)).repartition(
-                        max(1, len(touched_rels))
-                    ),
-                    path,
-                    io_snap.partition_columns,
-                )
-            )
-        if _publish_commit(path, snap.version + 1, actions):
-            return {
-                "version": snap.version + 1,
-                "rows_updated": n_rows,
-                "files_rewritten": 0,
-                "files_added": len(new_adds),
-                "dv_files": len(dv_keep),
-                "auto_compact": _wants_auto_compact(snap),
-            }
-    raise RuntimeError(f"update_delta(dv): conflicted 16 times at {path}")
-
-
 def purge_deletion_vectors(spark: SparkSession, path: str) -> dict:
     """``REORG TABLE ... APPLY (PURGE)`` — materialize every deletion
     vector: rewrite ONLY the files that carry one (surviving rows,
@@ -6068,8 +5612,8 @@ def purge_deletion_vectors(spark: SparkSession, path: str) -> dict:
     ``dataChange: false`` — the logical row set is unchanged, so
     streaming consumers see nothing. The periodic compaction step
     that keeps merge-on-read DELETE from accreting bitmap debt."""
-    for _attempt in range(16):
-        snap = snapshot(path)
+
+    def attempt(snap: DeltaSnapshot):
         _refuse_high_writer_version(snap, "REORG PURGE")
         dvm = _dv_map(snap, sorted(snap.files))
         if not dvm:
@@ -6098,48 +5642,22 @@ def purge_deletion_vectors(spark: SparkSession, path: str) -> dict:
             io_snap.partition_columns,
             data_change=False,
         )
-        now_ms = int(time.time() * 1000)
-        actions: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "REORG",
-                    "operationParameters": {"applyPurge": True},
-                    "engineInfo": "value_at_risk_spark.deltalog",
-                }
-            }
-        ]
-        actions.extend(
-            {
-                "remove": {
-                    "path": rel,
-                    "deletionTimestamp": now_ms,
-                    "dataChange": False,
-                    "partitionValues": snap.files[rel].get("partitionValues"),
-                    "deletionVector": dvm[rel],
-                }
-            }
-            for rel in rels
-        )
+        actions = _removes(snap, rels, data_change=False)
+        rt_actions: list[dict] = []
         if tracked:
             adds, rt_actions = _rt_assign(snap, adds, snap.version + 1)
-            actions.extend(adds)
-            actions.extend(rt_actions)
-        else:
-            actions.extend(adds)
-        current = snapshot(path)
-        if current.version != snap.version or any(
-            _dv_uid(current.files.get(rel) or {}) != _dv_uid(snap.files[rel])
-            for rel in rels
-        ):
-            continue  # a racing DELETE touched our inputs; re-read
-        if _publish_commit(path, snap.version + 1, actions):
-            return {
-                "version": snap.version + 1,
-                "files_rewritten": len(rels),
-                "files_added": len(adds),
-            }
-    raise RuntimeError(f"purge_deletion_vectors: conflicted 16 times at {path}")
+        # a racing DELETE that re-masked an input file committed a new
+        # version, so this publish loses the race and re-reads
+        result = {
+            "version": snap.version + 1,
+            "files_rewritten": len(rels),
+            "files_added": len(adds),
+        }
+        return _Commit(
+            {"applyPurge": True}, actions + adds + rt_actions, result=result
+        )
+
+    return _commit(path, "REORG", attempt)
 
 
 def _set_cast_type(f):
@@ -6258,59 +5776,30 @@ def update_delta(
     set_exprs: dict[str, str],
     partition_filters: dict[str, list[str]] | None = None,
     stats_filters: list[tuple] | None = None,
-    use_dv: bool | None = None,
-) -> dict:
-    out = _update_delta_impl(
-        spark, path, condition, set_exprs, partition_filters,
-        stats_filters, use_dv,
-    )
-    # autoCompact parity with write_delta: both the copy-on-write
-    # rewrite and the merge-on-read moved-rows file add data files.
-    # Gated on the impl's pre-commit snapshot config (auto_compact in
-    # the result) so tables that never opted in pay zero extra replay
-    if (
-        out.get("files_rewritten") or out.get("rows_updated")
-    ) and out.get("auto_compact"):
-        _maybe_auto_compact(spark, path)
-    return out
-
-
-def _update_delta_impl(
-    spark: SparkSession,
-    path: str,
-    condition: str,
-    set_exprs: dict[str, str],
-    partition_filters: dict[str, list[str]] | None = None,
-    stats_filters: list[tuple] | None = None,
-    use_dv: bool | None = None,
 ) -> dict:
     """``UPDATE <table> SET col = expr, ... WHERE condition`` — the
-    same file-level copy-on-write as delete_from_delta: only files
-    holding matching rows are rewritten; non-matching rows in a
-    touched file pass through bit-identical, and updated values are
-    cast back to the table schema so the metaData contract never
-    drifts. Updating a PARTITION column works naturally: the rewrite
-    restages touched files under the Hive layout, so moved rows land
-    in their new partition directories. Returns {version,
-    rows_updated, files_rewritten, files_added}.
-
-    ``use_dv`` (default None = the ``delta.enableDeletionVectors``
-    table property) selects merge-on-read UPDATE: the matched rows
-    are masked out of their files by deletion-vector bitmaps and the
-    updated rows append as new files — write volume scales with the
-    MATCHED rows, never with the touched files' sizes (real Delta's
-    own UPDATE-under-DV shape)."""
-    # one pre-flight snapshot for the cheap argument checks (each
-    # consult was a full log replay); the DML loops re-snapshot the
-    # moving tip themselves
+    same file-level DML as delete_from_delta (``_dml``): only files
+    holding matching rows change, and updated values are cast back to
+    the table schema so the metaData contract never drifts.
+    Copy-on-write rewrites the touched files (non-matching rows pass
+    through bit-identical); with ``delta.enableDeletionVectors`` the
+    matched rows are masked out of their files and the updated rows
+    append as new files — write volume scales with the MATCHED rows,
+    never with the touched files' sizes (real Delta's own
+    UPDATE-under-DV shape). Updating a PARTITION column works
+    naturally: staged rows land in their new Hive directories.
+    Nested SET targets (``s.a``) rewrite into whole-struct
+    assignments. Returns {version, rows_updated, files_rewritten,
+    files_added, dv_files, files_fully_removed}."""
+    # one pre-flight snapshot for the cheap argument checks; the
+    # commit loop re-snapshots the moving tip itself
     snap_pre = snapshot(path)
-    schema = snap_pre.schema
     # nested SET targets ('s.a') rewrite into whole-struct
     # named_struct assignments on the enclosing column
     set_exprs = _expand_nested_sets(
         json.loads(snap_pre.metadata["schemaString"])["fields"], set_exprs
     )
-    known = {f.name: f.dataType for f in schema.fields}
+    known = {f.name for f in snap_pre.schema.fields}
     unknown = [c for c in set_exprs if c not in known]
     if unknown:
         raise ValueError(f"update_delta: SET on unknown columns {unknown}")
@@ -6320,124 +5809,10 @@ def _update_delta_impl(
             f"update_delta: SET on identity column(s) {sorted(id_cols)} "
             "is forbidden (protocol writer feature 6)"
         )
-    cond = F.expr(condition)
-    if use_dv is None:
-        cfg = snap_pre.metadata.get("configuration") or {}
-        use_dv = _truthy(cfg.get("delta.enableDeletionVectors"))
-    if use_dv:
-        return _update_with_dv(
-            spark, path, condition, cond, set_exprs,
-            partition_filters, stats_filters,
-        )
-    for _attempt in range(16):
-        snap = snapshot(path)
-        _refuse_high_writer_version(snap, "UPDATE")
-        _refuse_append_only(snap, "UPDATE")
-        io_snap, to_log, to_phys, l2p = _mapping_planes(spark, snap)
-        pf, sf = _map_filter_names(l2p, partition_filters, stats_filters)
-        candidates = _pruned_active(io_snap, pf, sf)
-        touched, n_rows = _touched_files(
-            spark, path, io_snap, candidates, cond, view=to_log
-        )
-        if not touched:
-            return {
-                "version": snap.version,
-                "rows_updated": 0,
-                "files_rewritten": 0,
-                "files_added": 0,
-            }
-        tracked = row_tracking_enabled(snap)
-        if tracked:
-            # an UPDATE preserves every row's id — matched rows
-            # included — so the rewrite carries the materialized
-            # row-id column through the SET untouched
-            matcol = _rt_matcol_required(snap, "UPDATE")
-            base = to_log(
-                _files_with_row_ids(spark, path, io_snap, touched, matcol)
-            )
-        else:
-            base = to_log(_scan_files_dv(spark, path, io_snap, touched))
-        cons = table_constraints(snap)
-        rewritten = base.select(
-            *[
-                (
-                    F.when(
-                        F.coalesce(cond, F.lit(False)),
-                        F.expr(set_exprs[f.name]).cast(_set_cast_type(f)),
-                    )
-                    .otherwise(_qcol(f.name))
-                    .alias(f.name)
-                    if f.name in set_exprs
-                    else _qcol(f.name)
-                )
-                for f in snap.schema.fields
-            ],
-            *([F.col(matcol)] if tracked else []),
-        )
-        if cons:
-            _check_constraints(rewritten, cons, "update_delta")
-        gen = table_generated_columns(snap)
-        if gen:
-            # an UPDATE touching a generated column or its inputs must
-            # leave the generation invariant intact on every row
-            _check_generated(rewritten, gen, "update_delta")
-        adds = _stage(
-            to_phys(rewritten).repartition(len(touched)),
-            path,
-            io_snap.partition_columns,
-            data_change=True,
-        )
-        cdc_actions = None
-        if cdf_enabled(snap):
-            # CDF: matched rows before and after the SET. The
-            # postimage is computed from the PRE-update scan (the set
-            # expressions must see original values — a self-referencing
-            # SET like price = price * 2 would double twice if applied
-            # to the rewritten frame)
-            # cdc rows carry LOGICAL columns only (drop any
-            # materialized row-id column the tracked base scan added)
-            matched = base.filter(F.coalesce(cond, F.lit(False))).select(
-                *[_qcol(f.name) for f in snap.schema.fields]
-            )
-            pre = matched.withColumn(
-                "_change_type", F.lit("update_preimage")
-            )
-            post = matched.select(
-                *[
-                    (
-                        F.expr(set_exprs[f.name]).cast(_set_cast_type(f)).alias(
-                            f.name
-                        )
-                        if f.name in set_exprs
-                        else _qcol(f.name)
-                    )
-                    for f in snap.schema.fields
-                ]
-            ).withColumn("_change_type", F.lit("update_postimage"))
-            cdc_actions = _stage_cdc(
-                to_phys(pre.unionByName(post)).repartition(len(touched)),
-                path,
-                io_snap.partition_columns,
-            )
-        if _commit_rewrite(
-            path,
-            snap.version,
-            "UPDATE",
-            {"predicate": condition,
-             "set": {k: v for k, v in sorted(set_exprs.items())}},
-            touched,
-            adds,
-            snap,
-            cdc_actions=cdc_actions,
-        ):
-            return {
-                "version": snap.version + 1,
-                "rows_updated": n_rows,
-                "files_rewritten": len(touched),
-                "files_added": len(adds),
-                "auto_compact": _wants_auto_compact(snap),
-            }
-    raise RuntimeError(f"update_delta: conflicted 16 times at {path}")
+    return _dml(
+        spark, path, "UPDATE", condition, set_exprs, partition_filters,
+        stats_filters,
+    )
 
 
 def table_constraints(snap: DeltaSnapshot) -> dict[str, str]:
@@ -6448,26 +5823,6 @@ def table_constraints(snap: DeltaSnapshot) -> dict[str, str]:
     return {
         k[len(pre):]: v for k, v in conf.items() if k.startswith(pre)
     }
-
-
-def _check_constraints(
-    df: DataFrame, constraints: dict[str, str], context: str
-) -> None:
-    """Enforce CHECK constraints on a frame about to be written: one
-    job, short-circuited by limit(1); the error carries the violating
-    row (Delta's own UX). A constraint evaluating to NULL passes
-    (SQL CHECK semantics)."""
-    for name, expr in sorted(constraints.items()):
-        bad = (
-            df.filter(~F.coalesce(F.expr(expr), F.lit(True)))
-            .limit(1)
-            .collect()
-        )
-        if bad:
-            raise ValueError(
-                f"{context}: CHECK constraint {name} ({expr}) violated "
-                f"by row {bad[0].asDict()}"
-            )
 
 
 def add_check_constraint(
@@ -6483,13 +5838,14 @@ def add_check_constraint(
         raise ValueError(
             f"constraint name must be lower_snake_case alnum: {name!r}"
         )
-    existing = read_delta(spark, path)
-    _check_constraints(
-        existing, {name: expr}, "add_check_constraint"
+    _checked(
+        read_delta(spark, path),
+        "add_check_constraint",
+        checks={name: expr},
+        materialize=False,
     )
-    now_ms = int(time.time() * 1000)
-    for _attempt in range(16):
-        snap = snapshot(path)
+
+    def attempt(snap: DeltaSnapshot) -> _Commit:
         if name in table_constraints(snap):
             raise ValueError(f"constraint {name} already exists at {path}")
         # mapped tables are fine here: the validation scan above reads
@@ -6500,47 +5856,28 @@ def add_check_constraint(
         conf = dict(snap.metadata.get("configuration") or {})
         conf[f"delta.constraints.{name}"] = expr
         actions = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "ADD CONSTRAINT",
-                    "operationParameters": {"name": name, "expr": expr},
-                    "engineInfo": "value_at_risk_spark.deltalog",
-                }
-            },
             # never drops declared features: feature-listed tables
             # gain checkConstraints, legacy tables bump to wv 3
             _protocol_action(snap, 3, "checkConstraints"),
             {"metaData": {**snap.metadata, "configuration": conf}},
         ]
-        if _publish_commit(path, snap.version + 1, actions):
-            return snap.version + 1
-    raise RuntimeError(f"add_check_constraint: lost the race at {path}")
+        return _Commit({"name": name, "expr": expr}, actions)
+
+    return _commit(path, "ADD CONSTRAINT", attempt)
 
 
 def drop_check_constraint(
     spark: SparkSession, path: str, name: str
 ) -> int:
     """``ALTER TABLE DROP CONSTRAINT name`` — metaData-only commit."""
-    now_ms = int(time.time() * 1000)
-    for _attempt in range(16):
-        snap = snapshot(path)
+
+    def attempt(snap: DeltaSnapshot) -> _Commit:
         key = f"delta.constraints.{name}"
         conf = dict(snap.metadata.get("configuration") or {})
         if key not in conf:
             raise ValueError(f"no constraint {name} at {path}")
         del conf[key]
-        actions = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "DROP CONSTRAINT",
-                    "operationParameters": {"name": name},
-                    "engineInfo": "value_at_risk_spark.deltalog",
-                }
-            },
-            {"metaData": {**snap.metadata, "configuration": conf}},
-        ]
-        if _publish_commit(path, snap.version + 1, actions):
-            return snap.version + 1
-    raise RuntimeError(f"drop_check_constraint: lost the race at {path}")
+        meta = {**snap.metadata, "configuration": conf}
+        return _Commit({"name": name}, [{"metaData": meta}])
+
+    return _commit(path, "DROP CONSTRAINT", attempt)

@@ -339,23 +339,6 @@ def load_tables(
     return out
 
 
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: str | None = None,
-    header: bool = True,
-    sep: str = ",",
-) -> DataFrame:
-    """CSV scan with explicit schema (schema inference requires an extra
-    full pass over the data — never at 100 TB)."""
-    reader = spark.read.option("header", header).option("sep", sep)
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", True)
-    return reader.csv(path)
-
-
 def read_binary(
     spark: SparkSession,
     path: str,
@@ -380,52 +363,6 @@ def read_binary(
     if max_bytes is not None:
         df = df.filter(F.col("length") <= max_bytes)
     return df
-
-
-def read_json(
-    spark: SparkSession, path: str, schema: str | None = None
-) -> DataFrame:
-    """JSON-lines scan; explicit schema for the same reason as CSV.
-    (The reference reads its JSON configs via pandas on the driver —
-    configure_notebook.py:32 — this is the distributed path.)"""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).option("header", True).csv(path)
-
-
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).json(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan — the other columnar format Spark ships natively.
-    Self-describing like parquet (no schema argument needed); predicate
-    pushdown and column pruning work through the same DataSource V2
-    scan machinery, so a filter-over-ORC plan shows PushedFilters
-    exactly as parquet does."""
-    return spark.read.orc(path)
-
-
-def write_orc(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    sort_by: list[str] | None = None,
-    num_files: int | None = None,
-) -> None:
-    """ORC sink with the same layout levers as the parquet sink
-    (sorted write for clustering, explicit file-count control)."""
-    out = df
-    if num_files is not None:
-        out = out.repartition(num_files, *(sort_by or []))
-    if sort_by:
-        out = out.sortWithinPartitions(*sort_by)
-    out.write.mode(mode).orc(path)
 
 
 def write_bucketed(
