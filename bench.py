@@ -3,7 +3,8 @@
 Runs the engine's headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
 line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "codegen_compiles": {name: [n per run]},
+"sf": ...}.
 
 Measurement notes:
 - each query is forced with a noop-sink write: full plan execution
@@ -845,14 +846,24 @@ def main() -> None:
     # "warm") — pq-family timings are bimodal and a number without this
     # flag is unreadable across rounds
     ann_cache: dict[str, str] = {}
+    # generated classes Janino compiled during each timed run: the first
+    # run of a query compiles its plan, a later one should compile none
+    compiled = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+    codegen_compiles: dict[str, list[int]] = {}
     for name in BENCH_QUERIES:
         fn = QUERIES[name]
         samples = []
+        compiles = codegen_compiles[name] = []
         annindex.BUILD_EVENTS.clear()
         for _ in range(RUNS_PER_QUERY):
+            c0 = compiled.getCount()
             t0 = time.time()
             force(fn(spark, sf_dir))
             samples.append(time.time() - t0)
+            compiles.append(compiled.getCount() - c0)
         if annindex.BUILD_EVENTS:
             ann_cache[name] = (
                 "cold"
@@ -891,6 +902,7 @@ def main() -> None:
             "value": total,
             "unit": "sec",
             "queries": timings,
+            "codegen_compiles": codegen_compiles,
             "subtotals": subtotals,
             "calibration_sec": cal,
             "calibration_samples": cal_samples,

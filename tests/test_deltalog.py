@@ -123,6 +123,37 @@ def test_checkpoint_short_circuits_replay(spark, tmp_path):
         assert json.load(fh)["version"] == 3
 
 
+def test_torn_or_missing_last_checkpoint_hint(spark, tmp_path):
+    """``_last_checkpoint`` is only a hint: a truncated hint, a missing
+    one and one naming a checkpoint that does not exist all resolve to
+    the same version and rows, because the checkpoint is found from
+    the log directory listing."""
+    tbl = str(tmp_path / "lc")
+    df = spark.createDataFrame([(1, "a")], "id long, s string")
+    for i in range(3):
+        write_delta(spark, df.withColumn("id", F.lit(i).cast("long")), tbl)
+    assert checkpoint_delta(tbl) == 2
+    write_delta(spark, df.withColumn("id", F.lit(9).cast("long")), tbl)
+    hint = os.path.join(tbl, "_delta_log", "_last_checkpoint")
+    with open(hint) as fh:
+        good = fh.read()
+    want = (snapshot(tbl).version, _rows(read_delta(spark, tbl)))
+    assert want == (3, [(0, "a"), (1, "a"), (2, "a"), (9, "a")])
+
+    def resolved():
+        return snapshot(tbl).version, _rows(read_delta(spark, tbl))
+
+    with open(hint, "w") as fh:
+        fh.write(good[: len(good) // 2])
+    assert resolved() == want
+    os.remove(hint)
+    assert resolved() == want
+    with open(hint, "w") as fh:
+        json.dump({**json.loads(good), "version": 7}, fh)
+    assert resolved() == want
+    assert snapshot(tbl, version=2).version == 2
+
+
 def test_commit_conflict_retries_to_next_version(spark, tmp_path):
     tbl = str(tmp_path / "t5")
     df = spark.createDataFrame([(1,)], "id long")

@@ -11,8 +11,10 @@ reference's Monte-Carlo tables (config/configure_notebook.py:18-27);
 deletion vectors are the open protocol's merge-on-read half."""
 
 import glob
+import json
 import os
 import struct
+from urllib.parse import unquote
 
 import numpy as np
 import pytest
@@ -441,6 +443,63 @@ def test_dv_cdf_cdc_and_overwrite_derivation(spark, tmp_path):
 
     cnt = Counter(r["_change_type"] for r in ch2.collect())
     assert cnt["delete"] == 857 and cnt["insert"] == 5
+
+
+def _layout(tbl):
+    """Active files as (partition values, stats, DV cardinality, row
+    set), sorted: everything but the random file names."""
+    import pyarrow.parquet as pq
+
+    out = []
+    for rel, a in snapshot(tbl).files.items():
+        rows = pq.read_table(os.path.join(tbl, unquote(rel))).to_pylist()
+        out.append((
+            sorted(a["partitionValues"].items()),
+            json.loads(a["stats"]),
+            (a.get("deletionVector") or {}).get("cardinality", 0),
+            sorted(sorted(r.items()) for r in rows),
+        ))
+    return sorted(out, key=repr)
+
+
+def test_rewrite_layout_reproducible(spark, tmp_path):
+    """REORG PURGE and OPTIMIZE spread their input by row content, not
+    by scan order: two 8-file partitioned DV tables holding the same
+    files, committed in opposite order, go through the same REORG ->
+    DELETE -> OPTIMIZE -> RESTORE sequence and write the same files."""
+
+    def run(tbl, order):
+        df = spark.range(0, 2000).select(
+            F.col("id"),
+            (F.col("id") % 2).alias("p"),
+            (F.col("id") % 7).alias("g"),
+            (F.col("id") * 1.5).alias("v"),
+        )
+        write_delta(
+            spark,
+            df.repartitionByRange(4, order).sortWithinPartitions("id"),
+            tbl,
+            partition_by=["p"],
+            configuration={"delta.enableDeletionVectors": "true"},
+        )
+        steps = [_layout(tbl)]
+        delete_from_delta(spark, tbl, "g = 3")
+        assert purge_deletion_vectors(spark, tbl)["files_rewritten"] == 8
+        purged = snapshot(tbl).version
+        steps.append(_layout(tbl))
+        delete_from_delta(spark, tbl, "g = 5")
+        steps.append(_layout(tbl))
+        optimize_delta(spark, tbl, target_files=2)
+        steps.append(_layout(tbl))
+        restore_delta(spark, tbl, purged)
+        steps.append(_layout(tbl))
+        return steps
+
+    chunk = F.floor(F.col("id") / 500)
+    a = run(str(tmp_path / "a"), chunk.asc())
+    b = run(str(tmp_path / "b"), chunk.desc())
+    assert [len(s) for s in a] == [8, 16, 16, 4, 16]
+    assert a == b
 
 
 def test_dv_sql_reorg_purge(spark, tmp_path):

@@ -214,6 +214,31 @@ def test_pipeline_deterministic(spark, fixtures):
             assert va == pytest.approx(vb, abs=1e-12)
 
 
+def test_warm_pipeline_call_compiles_nothing(spark, fixtures):
+    """A warm run_pipeline call reuses every generated class of the
+    previous call: Spark's generated-class cache (an LRU) must hold one
+    call's working set (~150 classes), or cycling through it evicts
+    each class before its reuse and every call pays Janino again."""
+    stocks, indicators, portfolio = fixtures
+    cfg = VarConfig(runs=50, factor_cols=tuple(FACTORS))
+    compiles = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+
+    def call():
+        out = run_pipeline(
+            spark, stocks, indicators, portfolio, cfg, materialize=True
+        )
+        out["var"].collect()
+        out["backtest"].collect()
+
+    call()
+    before = compiles.getCount()
+    call()
+    assert compiles.getCount() - before == 0
+
+
 def test_aggregate_var_slices(spark, fixtures):
     stocks, indicators, portfolio = fixtures
     scored = spark.createDataFrame(

@@ -102,7 +102,7 @@ def trailing_volatility(
     bucket width = the window length, a date in bucket b only needs
     history from buckets {b-1, b}; each current-date row explodes to
     those two bucket keys and hash-joins history on the bucket id, with
-    the exact range predicate as a post-filter. Shuffle-hash/broadcast
+    the exact range predicate as a post-filter. A broadcast hash join
     instead of a nested-loop — linear fan-out at any history size.
     """
     bucket = f"floor(unix_date(CAST(date AS DATE)) / {int(days)})"
@@ -114,8 +114,13 @@ def trailing_volatility(
     # aggregates then run without a further Exchange and fold their rows
     # in the same order however the input is partitioned, so the output
     # bits do not depend on shuffle-arrival order.
+    # The broadcast hint pins the build side to the date keys (two
+    # small rows per date). Without it AQE turns the join into a
+    # broadcast at runtime, building on whichever side's shuffle
+    # finishes first, so the generated code flips between two variants
+    # across calls and each flip compiles anew.
     joined = (
-        cur.join(hist, "_bk")
+        F.broadcast(cur).join(hist, "_bk")
         .filter(f"_hd >= date_sub(_cd, {int(days)}) AND _hd <= _cd")
         .drop("_bk")
         .repartition("_cd")

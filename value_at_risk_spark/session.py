@@ -11,6 +11,11 @@ scale-aware settings:
 - UTC session timezone: parity with DuckDB's UTC-naive timestamps.
 - shuffle partitions sized to cores for local mode; on a real cluster
   AQE coalesces from a deliberately-high initial number.
+- generated-class cache sized to the engine's working set, so a warm
+  call reuses the classes Janino compiled on the previous one. The
+  conf is static: it is read when the JVM's first session starts, so
+  it has no effect if the JVM already holds a session that
+  ``get_spark`` did not build.
 """
 
 from __future__ import annotations
@@ -56,5 +61,15 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Spark's default of 100 is below one warm run_pipeline call
+        # (~150 generated classes) and the 26 headline queries plus the
+        # pipeline (~600); the LRU then evicts every class before its
+        # reuse and each warm call recompiles them all.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # AQE numbers codegen stages in the order it plans them, which
+        # varies with stage completion order; with the stage id in the
+        # class name, the same pipeline re-planned in another order is
+        # new source text and a cache miss.
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     return builder.getOrCreate()

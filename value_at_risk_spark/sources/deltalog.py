@@ -55,11 +55,14 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    ArrayType,
     LongType,
+    MapType,
     StringType,
     StructField,
     StructType,
     TimestampType,
+    VariantType,
 )
 
 _LOG = "_delta_log"
@@ -2068,6 +2071,31 @@ def _stage(
                 }
             )
     return adds
+
+
+def _unhashable(t) -> bool:
+    """A map or variant anywhere inside ``t``: Spark does not hash such
+    a column."""
+    if isinstance(t, (MapType, VariantType)):
+        return True
+    if isinstance(t, ArrayType):
+        return _unhashable(t.elementType)
+    if isinstance(t, StructType):
+        return any(_unhashable(f.dataType) for f in t.fields)
+    return False
+
+
+def _spread_by_content(df: DataFrame, n: int) -> DataFrame:
+    """``n`` partitions whose row sets depend on the rows alone:
+    hash-partitioned on every column Spark can hash. A round-robin
+    ``repartition(n)`` deals rows in scan order, and a multi-file
+    scan's order follows the order of the files in the log, so two
+    runs of the same rewrite could write different files with
+    different stats."""
+    cols = [
+        _qcol(f.name) for f in df.schema.fields if not _unhashable(f.dataType)
+    ]
+    return df.repartition(n, *cols)
 
 
 def write_delta(
@@ -4483,7 +4511,7 @@ def optimize_delta(
             .drop("_z")
         )
     else:
-        df = df.repartition(n)
+        df = _spread_by_content(df, n)
     adds = _stage(
         to_phys(df), path, io_snap.partition_columns, data_change=False
     )
@@ -5637,7 +5665,7 @@ def purge_deletion_vectors(spark: SparkSession, path: str) -> dict:
         else:
             survivors = _scan_files_dv(spark, path, io_snap, rels)
         adds = _stage(
-            survivors.repartition(len(rels)),
+            _spread_by_content(survivors, len(rels)),
             path,
             io_snap.partition_columns,
             data_change=False,
